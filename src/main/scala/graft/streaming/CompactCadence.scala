@@ -3,14 +3,14 @@ package graft.streaming
 import graft.sources.{AsyncCompactor, Lake}
 import org.apache.spark.sql.SparkSession
 
-/** Per-store compaction cadence shared by the incremental ingest loops
-  * ([[IncrementalDedup]] / [[IncrementalScd2]] / [[IncrementalAnn]] /
-  * [[IncrementalBm25]] / the sketch-family stores): every micro-batch
-  * appends one file set, so a long-running loop's store read goes
-  * footer-bound without periodic folding — the measured 300-batch
-  * replay (BASELINE.md r16/r17) put the crossover at ~500–700 store
-  * files, with the async arm (rewrite off the trigger, swap at a later
-  * trigger boundary) winning the per-batch average.
+/** Per-store compaction cadence of the incremental ingest loops, built
+  * only by [[StoreLoop.attach]] (one per compacted store directory of
+  * each of the nine loops): every micro-batch appends one file set, so
+  * a long-running loop's store read goes footer-bound without periodic
+  * folding — the measured 300-batch replay (BASELINE.md r16/r17) put
+  * the crossover at ~500–700 store files, with the async arm (rewrite
+  * off the trigger, swap at a later trigger boundary) winning the
+  * per-batch average.
   *
   * One instance per store. Call [[finishPending]] FIRST at each
   * trigger (before the batch reads the store) and [[maybeCompact]]
@@ -22,7 +22,8 @@ import org.apache.spark.sql.SparkSession
   * Guidance (measured): leave the cadence OFF for short-lived loops —
   * below the file-count crossover the rewrites cost more than they
   * save. Plain-parquet stores only; a bucketed catalog table's layout
-  * is owned by the catalog.
+  * is owned by the catalog. Rewrites target the [[Lake.compact]]
+  * default file size.
   *
   * @param every   compact every N batches (None = never)
   * @param async   rewrite on a background thread ([[AsyncCompactor]]);
@@ -36,16 +37,15 @@ private[streaming] final class CompactCadence(
     storeDir: String,
     every: Option[Int],
     async: Boolean,
-    targetBytes: Long = 128L * 1024 * 1024,
-    sortCols: Seq[String] = Nil,
-    rangeCols: Seq[String] = Nil,
-    offset: Int = 0
+    sortCols: Seq[String],
+    rangeCols: Seq[String],
+    offset: Int
 ) {
   require(every.forall(_ > 0), "compactEvery must be positive")
 
   private val compactor: Option[AsyncCompactor] =
     if (every.isDefined && async)
-      Some(new AsyncCompactor(spark, storeDir, targetBytes, sortCols, rangeCols))
+      Some(new AsyncCompactor(spark, storeDir, sortCols = sortCols, rangeCols = rangeCols))
     else None
 
   /** Install a finished background rewrite, if any — the two-rename
@@ -67,7 +67,7 @@ private[streaming] final class CompactCadence(
           case Some(c) => c.start()
           case None =>
             RuntimeEventBus.compacted(storeDir, Some(batchId),
-              Lake.compact(spark, storeDir, targetBytes, sortCols, rangeCols))
+              Lake.compact(spark, storeDir, sortCols = sortCols, rangeCols = rangeCols))
         }
       }
     }

@@ -41,7 +41,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalAnn {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   /** Initialize the store: assign every corpus vector to its cell. */
   def seed(
@@ -71,21 +71,9 @@ object IncrementalAnn {
       batchId: Option[Long] = None,
       assignPlanes: Option[Int] = None,
       probeReplay: Boolean = true
-  ): Boolean = {
-    // a crash inside a compaction swap can leave the live dir set aside
-    // (two existence checks when healthy — see Lake.recoverCompact)
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    val rows = assigned(batch, centroids, idCol, vecCol, assignPlanes)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-    rows.write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, rows.count())
-    true
-  }
+  ): Boolean =
+    StoreLoop.appendStamped(spark, storeDir, batchId, probeReplay)(
+      assigned(batch, centroids, idCol, vecCol, assignPlanes))
 
   /** Top-k cosine neighbors for `queries` against the persisted index —
     * no corpus-side assignment, just the probe.
@@ -120,27 +108,13 @@ object IncrementalAnn {
       checkpointLocation: Option[String] = None,
       assignPlanes: Option[Int] = None,
       compactEvery: Option[Int] = None,
-      compactTargetBytes: Long = 128L * 1024 * 1024,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact,
-      compactTargetBytes, sortCols = Seq("cell"))
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, centroids, idCol, vecCol,
-            batchId = Some(bid), assignPlanes = assignPlanes,
-            probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Compacted(storeDir, sortCols = Seq("cell"))),
+      checkpointLocation, compactEvery, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, centroids, idCol, vecCol,
+        batchId = Some(bid), assignPlanes = assignPlanes, probeReplay = probe)
+    }
 
   private def assigned(
       vectors: DataFrame,

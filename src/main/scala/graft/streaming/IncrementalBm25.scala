@@ -24,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalBm25 {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   private def tfOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
@@ -59,37 +59,9 @@ object IncrementalBm25 {
       textCol: String = "text",
       batchId: Option[Long] = None,
       probeReplay: Boolean = true
-  ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read of the store (two existence checks when healthy — see
-    // Lake.recoverCompact; same per-trigger discipline as the dedup
-    // and SCD2 loops)
-    graft.sources.Lake.recoverCompact(storeDir)
-    // StoreGuard tolerates a missing/partial store, so `attach` without
-    // a prior `seed` bootstraps it on the first micro-batch instead of
-    // dying on AnalysisException inside foreachBatch
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    // Materialize once, size the append fan-out from the known row
-    // count (one file per ~50k tf rows — StoreGuard.appendParts; r20,
-    // the r19 dedup-loop discipline): the tf agg otherwise inherits
-    // shuffle partitioning and appends one near-empty file per shuffle
-    // partition per trigger. The count also feeds the loop-health event
-    // without a second tokenize pass.
-    val tf = tfOf(batch, idCol, textCol)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .persist()
-    val nRows = tf.count()
-    if (nRows > 0)
-      tf.coalesce(StoreGuard.appendParts(spark, nRows))
-        .write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, nRows)
-    tf.unpersist()
-    true
-  }
+  ): Boolean =
+    StoreLoop.appendStamped(spark, storeDir, batchId, probeReplay)(
+      tfOf(batch, idCol, textCol))
 
   /** Load the store as a servable [[Bm25Index]]: df and corpus stats
     * derive from the tf rows (df = terms' doc counts; N/avgdl from the
@@ -131,24 +103,11 @@ object IncrementalBm25 {
       textCol: String = "text",
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
-      compactTargetBytes: Long = 128L * 1024 * 1024,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact,
-      compactTargetBytes, rangeCols = Seq("term"))
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, idCol, textCol, batchId = Some(bid),
-            probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Compacted(storeDir, rangeCols = Seq("term"))),
+      checkpointLocation, compactEvery, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, idCol, textCol,
+        batchId = Some(bid), probeReplay = probe)
+    }
 }

@@ -58,7 +58,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalDedup {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   /** Bucketed band store: (catalog table name, bucket count). With this
     * set, the band table is a `bucketBy(n, band_idx, band_hash)` table
@@ -142,12 +142,6 @@ object IncrementalDedup {
   private def clusterById(df: DataFrame, idCol: String, parts: Int): DataFrame =
     df.repartitionByRange(parts, col(idCol)).sortWithinPartitions(idCol)
 
-  private def appendParts(spark: SparkSession, rows: Long): Int =
-    StoreGuard.appendParts(spark, rows)
-
-  private def hasBatch(df: DataFrame, b: Long): Boolean =
-    df.columns.contains(BatchCol) && !df.filter(col(BatchCol) === lit(b)).isEmpty
-
   private def withoutBatch(df: DataFrame, bid: Option[Long]): DataFrame =
     bid match {
       case Some(b) if df.columns.contains(BatchCol) =>
@@ -203,7 +197,8 @@ object IncrementalDedup {
     // probeReplay = false skips both probe jobs — only safe when the
     // caller KNOWS the id is fresh (StoreGuard.ReplayProbe)
     val (doneBands, doneCorpus) = batchId match {
-      case Some(b) if probeReplay => (hasBatch(bandsRaw, b), hasBatch(corpusRaw, b))
+      case Some(b) if probeReplay =>
+        (StoreGuard.hasBatch(bandsRaw, BatchCol, b), StoreGuard.hasBatch(corpusRaw, BatchCol, b))
       case _                      => (false, false)
     }
     if (doneBands && doneCorpus) return false // replayed batch: full no-op
@@ -270,7 +265,7 @@ object IncrementalDedup {
       // files than the 50k-row target; r19 ADVICE). Size the fan-out
       // like the corpus append instead of writing one near-empty file
       // per shuffle partition per trigger.
-      val bandParts = appendParts(spark, nSurvivors * Dedup.DefaultBands)
+      val bandParts = StoreGuard.appendParts(spark, nSurvivors * Dedup.DefaultBands)
       val newBands = stamp(Dedup.bandedSignatures(survivors, idCol, textCol))
       bandTable match {
         case Some(BandTable(name, n)) =>
@@ -292,7 +287,7 @@ object IncrementalDedup {
       }
     }
     if (!doneCorpus && nSurvivors > 0)
-      clusterById(stamp(survivors), idCol, appendParts(spark, nSurvivors))
+      clusterById(stamp(survivors), idCol, StoreGuard.appendParts(spark, nSurvivors))
         .write.mode("append").parquet(corpusDir)
     // loop-health ride-along: rows = survivors appended (the count is
     // already materialized above, so this costs nothing either way)
@@ -345,40 +340,29 @@ object IncrementalDedup {
     // min/max file skipping survives compaction; the band store repacks
     // sorted on the band key. Content-identical, so a replay around a
     // compaction is still a no-op. Plain-parquet stores only — a
-    // bucketed catalog table's layout is owned by the catalog.
-    val cadences: Seq[CompactCadence] = {
-      val corpus = new CompactCadence(spark, corpusDir, compactEvery,
-        asyncCompact, rangeCols = Seq(idCol), offset = 1)
+    // bucketed catalog table's layout is owned by the catalog. Both
+    // keep the spec-pinned `(bid + 1) % n` cadence (offset 1).
+    val corpus = StoreLoop.Compacted(corpusDir, rangeCols = Seq(idCol), offset = 1)
+    val compacted =
       if (bandTable.isEmpty)
-        Seq(new CompactCadence(spark, bandsDir, compactEvery, asyncCompact,
-          sortCols = Seq("band_idx", "band_hash"), offset = 1), corpus)
+        Seq(StoreLoop.Compacted(bandsDir, sortCols = Seq("band_idx", "band_hash"), offset = 1),
+          corpus)
       else Seq(corpus)
-    }
-    val probe = new StoreGuard.ReplayProbe
     // store schemas read ONCE at the first trigger (post-crash-repair)
     // and reused for the life of the loop — see [[StoreSchemas]]
     var schemas: Option[StoreSchemas] = None
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // install any finished background repack FIRST, before this
-        // trigger reads the stores (loop thread — no append can race)
-        cadences.foreach(_.finishPending(bid))
-        if (schemas.isEmpty) {
-          graft.sources.Lake.recoverCompact(corpusDir)
-          if (bandTable.isEmpty) graft.sources.Lake.recoverCompact(bandsDir)
-          schemas = Some(StoreSchemas(
-            spark.read.parquet(corpusDir).schema,
-            if (bandTable.isEmpty) Some(spark.read.parquet(bandsDir).schema) else None))
-        }
-        if (ingestBatch(spark, batch, corpusDir, bandsDir, idCol, textCol,
-            minJaccard, maxBucketSize, batchId = Some(bid), bandTable = bandTable,
-            probeReplay = probe.needed, storeSchemas = schemas))
-          probe.ingested()
-        cadences.foreach(_.maybeCompact(bid))
+    StoreLoop.attach(arriving, compacted, checkpointLocation, compactEvery,
+      asyncCompact) { (batch, bid, probe) =>
+      if (schemas.isEmpty) {
+        graft.sources.Lake.recoverCompact(corpusDir)
+        if (bandTable.isEmpty) graft.sources.Lake.recoverCompact(bandsDir)
+        schemas = Some(StoreSchemas(
+          spark.read.parquet(corpusDir).schema,
+          if (bandTable.isEmpty) Some(spark.read.parquet(bandsDir).schema) else None))
       }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
+      ingestBatch(spark, batch, corpusDir, bandsDir, idCol, textCol,
+        minJaccard, maxBucketSize, batchId = Some(bid), bandTable = bandTable,
+        probeReplay = probe, storeSchemas = schemas)
+    }
   }
 }

@@ -30,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalGraph {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   /** Write the initial edge store (`ingest_batch = -1`). */
   def seed(
@@ -58,22 +58,9 @@ object IncrementalGraph {
       dstCol: String = "dst",
       batchId: Option[Long] = None,
       probeReplay: Boolean = true
-  ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read of the store (cheap when healthy — Lake.recoverCompact)
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    val rows = batch
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-    rows.write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, rows.count())
-    true
-  }
+  ): Boolean =
+    StoreLoop.appendStamped(spark, storeDir, batchId, probeReplay)(
+      batch.select(col(srcCol).as("src"), col(dstCol).as("dst")))
 
   /** The accumulated edge SET (duplicates across observations/batches
     * collapsed — one distinct, the only shuffle a snapshot pays before
@@ -156,22 +143,10 @@ object IncrementalGraph {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact,
-      rangeCols = Seq("src"))
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, srcCol, dstCol, batchId = Some(bid),
-            probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Compacted(storeDir, rangeCols = Seq("src"))),
+      checkpointLocation, compactEvery, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, srcCol, dstCol,
+        batchId = Some(bid), probeReplay = probe)
+    }
 }

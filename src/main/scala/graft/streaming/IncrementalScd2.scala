@@ -50,7 +50,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalScd2 {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   /** The open-version HEAD store: the log-compacted head of the change
     * log (exactly Kafka compacted-topic semantics — latest row per
@@ -112,7 +112,7 @@ object IncrementalScd2 {
     // the version log is never LISTED here — only appended to below.
     lazy val storeOpt = StoreGuard.readStore(spark, storeDir)
     if (probeReplay &&
-        batchId.exists(b => storeOpt.exists(s => !s.filter(col(BatchCol) === b).isEmpty)))
+        batchId.exists(b => storeOpt.exists(StoreGuard.hasBatch(_, BatchCol, b))))
       return false // replayed batch: append already committed, recompute is a no-op
 
     val cols = (keyCols ++ attrCols ++ (tsCol +: tieBreak)).map(col)
@@ -272,16 +272,17 @@ object IncrementalScd2 {
       spark.read.parquet(storeDir).drop(BatchCol),
       keyCols, tsCol, attrCols, tieBreak, collapseUnchanged = false)
 
-  /** Drive the loop from a stream: one [[ingestBatch]] per micro-batch.
+  /** Drive the loop from a stream: one [[ingestBatch]] per micro-batch
+    * ([[StoreLoop.attach]]).
     *
     * @param compactEvery every N batches, fold the store's accreted
-    *   per-batch files back to ~`targetBytes` files
-    *   ([[graft.sources.Lake.compact]]) — without it a long-running
-    *   loop accumulates one file set per micro-batch and the store
-    *   read in step 2 becomes footer-bound. The `ingest_batch` stamp
-    *   is a data COLUMN, so replay idempotence survives the rewrite;
-    *   compaction only needs the store quiescent, which foreachBatch
-    *   guarantees (batches of one query never overlap).
+    *   per-batch files back ([[graft.sources.Lake.compact]]) — without
+    *   it a long-running loop accumulates one file set per micro-batch
+    *   and the store read in step 2 becomes footer-bound. The
+    *   `ingest_batch` stamp is a data COLUMN, so replay idempotence
+    *   survives the rewrite; compaction only needs the store quiescent,
+    *   which foreachBatch guarantees (batches of one query never
+    *   overlap).
     */
   def attach(
       arriving: DataFrame,
@@ -292,28 +293,15 @@ object IncrementalScd2 {
       tieBreak: Seq[String],
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
-      compactTargetBytes: Long = 128L * 1024 * 1024,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
+  ): StreamingQuery =
     // asyncCompact: rewrite off the trigger path, swap at a later
     // trigger boundary (the IncrementalDedup discipline — measured
     // guidance on that attach's scaladoc). Applies to the version LOG;
     // the open-version HEAD is already folded in-place per batch.
-    val cadence = new CompactCadence(
-      spark, storeDir, compactEvery, asyncCompact, compactTargetBytes)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, keyCols, tsCol, attrCols, tieBreak,
-            batchId = Some(bid), probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+    StoreLoop.attach(arriving, Seq(StoreLoop.Compacted(storeDir)),
+      checkpointLocation, compactEvery, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, keyCols, tsCol, attrCols,
+        tieBreak, batchId = Some(bid), probeReplay = probe)
+    }
 }

@@ -38,7 +38,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object IncrementalSelection {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   /** The store's hash-parameter metadata lives in a one-row parquet
     * UNDER the store dir. The `_` prefix makes Spark's file index skip
@@ -243,21 +243,10 @@ object IncrementalSelection {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, textCol, isTarget, buckets, n, family,
-            batchId = Some(bid), probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Compacted(storeDir)),
+      checkpointLocation, compactEvery, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, textCol, isTarget, buckets, n,
+        family, batchId = Some(bid), probeReplay = probe)
+    }
 }

@@ -27,8 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalSketches {
 
-  private[graft] val BatchCol = "ingest_batch"
-
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   /** Write the initial sketch store from an existing corpus
     * (`ingest_batch = -1`), establishing the stamped schema.
@@ -59,34 +58,9 @@ object IncrementalSketches {
       batchId: Option[Long] = None,
       lgK: Int = Sketches.DefaultLgK,
       probeReplay: Boolean = true
-  ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read of the store (cheap when healthy — Lake.recoverCompact)
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      // StoreGuard tolerates a missing/partial store: attach-without-seed
-      // bootstraps on the first micro-batch (see StoreGuard scaladoc)
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    // Materialize once and size the append fan-out from the known row
-    // count (StoreGuard.appendParts — shard rows are KB-scale, so a
-    // micro-batch lands in exactly one file instead of one near-empty
-    // file per post-shuffle partition; r20). The count also feeds the
-    // loop-health event without re-running the sketch aggregate.
-    val rows = Sketches
-      .hllShardSketches(batch, shardCols, valueCol, lgK)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .persist()
-    val nRows = rows.count()
-    if (nRows > 0)
-      rows.coalesce(StoreGuard.appendParts(spark, nRows))
-        .write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, nRows)
-    rows.unpersist()
-    true
-  }
+  ): Boolean =
+    StoreLoop.appendStamped(spark, storeDir, batchId, probeReplay)(
+      Sketches.hllShardSketches(batch, shardCols, valueCol, lgK))
 
   /** Roll the persisted store up to `groupCols` (empty = global) and
     * estimate — O(|store| rows), never a corpus read.
@@ -129,25 +103,9 @@ object IncrementalSketches {
       batchId: Option[Long] = None,
       k: Int = Sketches.DefaultKllK,
       probeReplay: Boolean = true
-  ): Boolean = {
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    // same sized-fan-out discipline as [[ingestBatch]] (r20)
-    val rows = Sketches
-      .kllShardSketches(batch, shardCols, valueCol, k)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .persist()
-    val nRows = rows.count()
-    if (nRows > 0)
-      rows.coalesce(StoreGuard.appendParts(spark, nRows))
-        .write.mode("append").parquet(storeDir)
-    rows.unpersist()
-    true
-  }
+  ): Boolean =
+    StoreLoop.appendStamped(spark, storeDir, batchId, probeReplay)(
+      Sketches.kllShardSketches(batch, shardCols, valueCol, k))
 
   /** Roll the persisted quantile store up to `groupCols` (empty =
     * global) — O(|store| rows) of KB-sized sketch algebra.
@@ -175,23 +133,12 @@ object IncrementalSketches {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestQuantilesBatch(spark, batch, storeDir, shardCols, valueCol,
-            batchId = Some(bid), k = k, probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Compacted(storeDir)),
+      checkpointLocation, compactEvery, asyncCompact) { (batch, bid, probe) =>
+      ingestQuantilesBatch(arriving.sparkSession, batch, storeDir, shardCols, valueCol,
+        batchId = Some(bid), k = k, probeReplay = probe)
+    }
 
   /** Attach the sketch maintenance loop to a stream — same
     * `compactEvery`/`asyncCompact` cadence as [[attachQuantiles]].
@@ -205,21 +152,10 @@ object IncrementalSketches {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, shardCols, valueCol,
-            batchId = Some(bid), lgK = lgK, probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Compacted(storeDir)),
+      checkpointLocation, compactEvery, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, shardCols, valueCol,
+        batchId = Some(bid), lgK = lgK, probeReplay = probe)
+    }
 }

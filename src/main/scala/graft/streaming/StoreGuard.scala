@@ -3,9 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
-/** Replay-idempotence guard shared by the incremental stores
-  * (IncrementalBm25 / IncrementalSketches / DriftMonitor /
-  * QualityMonitor / StreamingCuration / IncrementalScd2).
+/** Replay-idempotence guard shared by the incremental stores: the
+  * nine store loops (through [[StoreLoop]], plus the own ingest bodies
+  * of IncrementalSelection / IncrementalScd2 / IncrementalDedup) and the
+  * output sinks of DriftMonitor / QualityMonitor / StreamingCuration.
   *
   * Deliberately filesystem-AGNOSTIC: a `java.io.File(dir).exists()`
   * probe is local-only — on HDFS/S3 it always answers false, so a
@@ -28,11 +29,13 @@ private[streaming] object StoreGuard {
   /** Size an append's file fan-out from an already-known row count:
     * one file per ~50k rows, capped at the shuffle-partition count —
     * a micro-batch append lands in exactly one file while backfill
-    * batches still fan out (the r19 dedup-loop fix, shared by every
-    * store loop; r20 rolls it to the rest). Without this, every store
-    * whose append inherits shuffle partitioning grows one NEAR-EMPTY
-    * file per shuffle partition per trigger — file count outruns data
-    * volume and every later store read goes footer-bound.
+    * batches still fan out (the r19 dedup-loop fix; used by
+    * [[StoreLoop.appendStamped]] and the SCD2/dedup appends — the
+    * selection store appends one global-aggregate row, hence one file).
+    * Without this, every store whose append inherits input or shuffle
+    * partitioning grows one NEAR-EMPTY file per partition per trigger —
+    * file count outruns data volume and every later store read goes
+    * footer-bound.
     */
   def appendParts(spark: SparkSession, rows: Long): Int =
     math.max(1L, math.min(
@@ -51,12 +54,15 @@ private[streaming] object StoreGuard {
     * contains `b`.
     */
   def hasBatch(spark: SparkSession, dir: String, batchCol: String, b: Long): Boolean =
-    readStore(spark, dir).exists { df =>
-      df.columns.contains(batchCol) && !df.filter(col(batchCol) === lit(b)).isEmpty
-    }
+    readStore(spark, dir).exists(hasBatch(_, batchCol, b))
 
-  /** Per-attach memoization of the replay probe: within ONE streaming
-    * run, `foreachBatch` delivers strictly increasing batch ids and a
+  /** True iff the already-read store `df` has a `batchCol` containing `b`. */
+  def hasBatch(df: DataFrame, batchCol: String, b: Long): Boolean =
+    df.columns.contains(batchCol) && !df.filter(col(batchCol) === lit(b)).isEmpty
+
+  /** Per-attach memoization of the replay probe ([[StoreLoop.attach]]
+    * owns the one instance per loop): within ONE streaming run,
+    * `foreachBatch` delivers strictly increasing batch ids and a
     * batch committed in the checkpoint log is never redelivered — only
     * the FIRST trigger after a (re)start can be a replay of the last
     * uncommitted batch. So each attach probes the store until its first

@@ -32,9 +32,6 @@ object StreamingCuration {
 
   private val BatchCol = IncrementalDedup.BatchCol
 
-  private def hasBatch(spark: SparkSession, dir: String, b: Long): Boolean =
-    StoreGuard.hasBatch(spark, dir, BatchCol, b)
-
   // ---- fuzzy decontamination ---------------------------------------
 
   /** Persist the eval set once: its UNCAPPED band table (`$dir/bands`)
@@ -120,7 +117,7 @@ object StreamingCuration {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!hasBatch(spark, outDir, batchId)) {
+        if (!StoreGuard.hasBatch(spark, outDir, BatchCol, batchId)) {
           decontaminateBatch(spark, batch, evalDir, idCol, textCol, minJaccard)
             .filter(col("n_eval_matches") === 0)
             .drop("n_eval_matches", "max_jaccard")
@@ -244,7 +241,7 @@ object StreamingCuration {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!hasBatch(spark, outDir, batchId)) {
+        if (!StoreGuard.hasBatch(spark, outDir, BatchCol, batchId)) {
           nbBatch(spark, batch, modelDir, idCol, textCol)
             .filter(col("score") > minScore)
             .join(batch, Seq(idCol))
@@ -273,7 +270,7 @@ object StreamingCuration {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!hasBatch(spark, outDir, batchId)) {
+        if (!StoreGuard.hasBatch(spark, outDir, BatchCol, batchId)) {
           gateBatch(spark, batch, modelDir, idCol, textCol)
             .filter(col("bucket") <= keepMaxBucket)
             .withColumn(BatchCol, lit(batchId))

@@ -72,7 +72,7 @@ class IncrementalAnnSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = IncrementalAnn.attach(
       mem.toDF().toDF("vec_id", "embedding"), dir, centroidsDf,
-      "vec_id", "embedding", compactEvery = Some(2), compactTargetBytes = 1L << 20)
+      "vec_id", "embedding", compactEvery = Some(2))
     try {
       (0 until 4).foreach { b =>
         mem.addData((4 until 40).filter(_ % 4 == b).map(i =>
@@ -100,8 +100,7 @@ class IncrementalAnnSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = IncrementalAnn.attach(
       mem.toDF().toDF("vec_id", "embedding"), dir, centroidsDf,
-      "vec_id", "embedding", compactEvery = Some(2), compactTargetBytes = 1L << 20,
-      asyncCompact = true)
+      "vec_id", "embedding", compactEvery = Some(2), asyncCompact = true)
     try {
       (0 until 4).foreach { b =>
         mem.addData((4 until 40).filter(_ % 4 == b).map(i =>

@@ -85,7 +85,7 @@ class IncrementalScd2Spec extends SparkSpec {
     val mem = MemoryStream[(String, Timestamp, Long, String)]
     val q = IncrementalScd2.attach(
       mem.toDF().toDF("k", "ts", "id", "attr"), dir, K, "ts", A, T,
-      compactEvery = Some(2), compactTargetBytes = 1L << 20)
+      compactEvery = Some(2))
     try {
       (1 to 6).foreach { i =>
         mem.addData(("A", t(i), i.toLong, s"v$i"))
@@ -111,7 +111,7 @@ class IncrementalScd2Spec extends SparkSpec {
     val mem = MemoryStream[(String, Timestamp, Long, String)]
     val q = IncrementalScd2.attach(
       mem.toDF().toDF("k", "ts", "id", "attr"), dir, K, "ts", A, T,
-      compactEvery = Some(2), compactTargetBytes = 1L << 20, asyncCompact = true)
+      compactEvery = Some(2), asyncCompact = true)
     try {
       (1 to 6).foreach { i =>
         mem.addData(("A", t(i), i.toLong, s"v$i"))

@@ -132,11 +132,14 @@ class KsqlScriptGenSpec extends SparkSpec {
     n.trim.toLowerCase
   }
 
-  private def golden(file: String): String =
-    normalize(new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/reference/tests/Query/Golden/$file")),
-      java.nio.charset.StandardCharsets.UTF_8))
+  // vendored copies of the reference goldens (src/test/resources/golden,
+  // provenance in that directory's README.md)
+  private def golden(file: String): String = {
+    val in = getClass.getResourceAsStream(s"/golden/$file")
+    assert(in != null, s"missing golden resource $file")
+    try normalize(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+    finally in.close()
+  }
 
   private def keyPathModel = {
     val te = EntityModel[KeyPathTableEntity]("tableentity").key("broker", "symbol")
