@@ -72,11 +72,15 @@ object Bench {
     //   3. the legacy shared BENCH_LAST.json,
     //   4. the COMMITTED per-sf reference BENCH_REF_<sf>.json (refreshed
     //      each round) — the self-defending floor: whatever ran last,
-    //      a same-sf reference always exists.
+    //      a same-sf reference always exists. It is resolved from the
+    //      repo root (user.dir), not from the output's directory, so
+    //      output sent outside the repo keeps the settle pass.
     // A candidate only qualifies if its "sf" field matches this run's.
     // Parsed with a regex — our own single-line format, no JSON dep.
+    // The summary line names the reference used ("ref", or "none").
     val sfName = new java.io.File(sfDir).getName
-    val repoDir = java.nio.file.Paths.get(benchOut).toAbsolutePath.getParent
+    val outDir = java.nio.file.Paths.get(benchOut).toAbsolutePath.getParent
+    val repoDir = java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath
     def parseRef(path: String): Map[String, Double] =
       try {
         val txt = new String(
@@ -100,12 +104,13 @@ object Bench {
           }
         }
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val benchOutPerSf = repoDir.resolve(s"BENCH_LAST_$sfName.json").toString
-    val refQueries: Map[String, Double] =
+    val benchOutPerSf = outDir.resolve(s"BENCH_LAST_$sfName.json").toString
+    val (refPath, refQueries): (String, Map[String, Double]) =
       (sys.env.get("SPARK_GRAFT_BENCH_REF").toSeq ++ Seq(
         benchOutPerSf, benchOut,
         repoDir.resolve(s"BENCH_REF_$sfName.json").toString))
-        .iterator.map(parseRef).find(_.nonEmpty).getOrElse(Map.empty)
+        .iterator.map(p => p -> parseRef(p)).find(_._2.nonEmpty)
+        .getOrElse("none" -> Map.empty)
     // SPARK_GRAFT_DIAG=true: decompose each query's FIRST-run cost into
     // task work vs driver/JVM overhead (guide §1 — measure before
     // optimizing the suite's dominant term, the per-query first-run
@@ -280,9 +285,9 @@ object Bench {
     // bounded tail of stdout, and an 87-query map (~2 KB) overflows it.
     // The per-query detail goes to BENCH_LAST.json exclusively.
     val summary =
-      f"""{"metric":"total","value":$total%.3f,"adjusted":$adjusted%.3f,"unit":"sec","n":${ok.size},"settled":${settled.size},"failed":$failedJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"adjusted":$adjusted%.3f,"unit":"sec","n":${ok.size},"settled":${settled.size},"failed":$failedJson,"sf":"$sfDir","ref":"$refPath"}"""
     val full =
-      f"""{"metric":"total","value":$total%.3f,"adjusted":$adjusted%.3f,"unit":"sec","queries":$qs,"settled":$settledJson,"failed":$failedJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"adjusted":$adjusted%.3f,"unit":"sec","queries":$qs,"settled":$settledJson,"failed":$failedJson,"sf":"$sfDir","ref":"$refPath"}"""
     realOut.println(summary)
     // two copies: the legacy shared path (external consumers) AND the
     // per-sf stamp — so a later run at a DIFFERENT sf can neither

@@ -3,6 +3,7 @@ package graft
 import graft.core.EntityModel
 import graft.dsl.QueryModel
 import graft.plans.Planner
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import scala.collection.concurrent.TrieMap
@@ -117,7 +118,7 @@ final class GraftContext(
       .option("checkpointLocation", s"$root/_chk/$name")
       .outputMode("append")
       .start()
-    materialized.put(name, () => spark.read.parquet(path))
+    materialized.put(name, () => Lake.read(spark, path))
     q
   }
 

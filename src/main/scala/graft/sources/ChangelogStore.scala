@@ -99,7 +99,7 @@ final class ChangelogStore(spark: SparkSession, root: String) {
     val dir = new java.io.File(path(entity))
     val tmp = new java.io.File(dir.getParent, s"${dir.getName}__compacting")
     keep.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-    val maxSeq = spark.read.parquet(tmp.getAbsolutePath)
+    val maxSeq = Lake.read(spark, tmp.getAbsolutePath)
       .agg(org.apache.spark.sql.functions.max(col("__seq"))).head()
     // point the sequence above everything that survived
     if (!maxSeq.isNullAt(0)) {

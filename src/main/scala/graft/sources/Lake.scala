@@ -18,6 +18,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Lake {
 
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema comes from the one footer Spark's own inference would read,
+    * read on the driver ([[org.apache.spark.sql.graftbridge.ParquetSchemaBridge]]),
+    * and is handed to the reader as a user schema. A bare
+    * `spark.read.parquet` runs a one-task job per call just to read that
+    * footer (~65 ms on a 4-core box); every table and store read goes
+    * through here instead (ParquetReadGuardSpec pins it). Schema and
+    * rows equal Spark's reader; the session conf that shapes inference
+    * (`nanosAsLong` and the like) is read at call time. A missing path,
+    * a glob, a dir with no data file or a schema-merging session goes
+    * through Spark's reader, so errors (PATH_NOT_FOUND,
+    * UNABLE_TO_INFER_SCHEMA) stay Spark's own.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.graftbridge.ParquetSchemaBridge.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
+
   /** Write `df` partitioned by the DATE of its event-time column. */
   def materializeByDay(
       df: DataFrame,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`CREATE STREAM/TABLE ... WITH (kafka_topic=...)`,
   * `/root/reference/src/Query/Pipeline/DDLQueryGenerator.cs:78,120`):
   * a named, schema-carrying handle the planner reads from. Reads are
-  * plain `spark.read.parquet` so Catalyst keeps pushdown/pruning.
+  * plain parquet relations so Catalyst keeps pushdown/pruning.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,6 +17,12 @@ object Tables {
     "lineitem", "events", "documents", "embeddings"
   )
 
+  /** Table `name` of the scale-factor dir `dir`, read through
+    * [[Lake.read]]: its schema comes from the parquet footer on the
+    * driver, so building the DataFrame runs no Spark job (LakeReadSpec
+    * counts them). `events` sets `nanosAsLong` before its read, so the
+    * footer converts under that flag.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
@@ -28,13 +34,13 @@ object Tables {
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = Lake.read(spark, s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
         case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
         case _                => raw
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Lake.read(spark, s"$dir/$name.parquet")
 
   /** Register every table as a temp view so both the DataFrame DSL and
     * `spark.sql` address the same names the DuckDB oracle uses.

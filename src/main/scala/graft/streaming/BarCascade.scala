@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.core.Period
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -127,7 +128,7 @@ object BarCascade {
   /** Plan and start the full cascade: ticks → `{base}_1s_rows` →
     * `{base}_{tf}_live` per timeframe, ascending (the reference's
     * deterministic dependency order). Parquet sinks + per-stage
-    * checkpoints; callers read live tables with `spark.read.parquet`
+    * checkpoints; callers read live tables with [[graft.sources.Lake.read]]
     * (the TimeBucket pull path).
     *
     * Pass a [[Supervisor]] to make the cascade SELF-HEALING: every
@@ -298,7 +299,7 @@ object TimeBucket {
       period.label,
       throw new IllegalArgumentException(s"no materialized bars for ${period.label}")
     )
-    spark.read.parquet(path)
+    Lake.read(spark, path)
   }
 
   /** Import-bars write path — `TimeBucket.Set[T](ctx, period)` →
@@ -326,7 +327,7 @@ object TimeBucket {
   */
 final class TimeBucketWriter(spark: SparkSession, path: String) {
   def write(rows: DataFrame): Unit = {
-    val existing = spark.read.parquet(path).schema
+    val existing = Lake.read(spark, path).schema
     require(
       rows.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
         existing.fields.map(f => (f.name, f.dataType)).toSeq,

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Anomaly
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -51,7 +52,7 @@ object DriftMonitor {
     }
     Anomaly
       .psiFromCounts(
-        spark.read.parquet(refDir),
+        Lake.read(spark, refDir),
         Anomaly.binCounts(batch, valueCol, binEdges))
       .agg(round(sum(col("psi_term")), 6).as("psi"))
       .select(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -90,7 +91,7 @@ object IncrementalAnn {
   ): DataFrame =
     Similarity.topKAgainstCells(
       queries,
-      spark.read.parquet(storeDir).drop(BatchCol),
+      Lake.read(spark, storeDir).drop(BatchCol),
       centroids, idCol, vecCol, k, nprobe)
 
   /** Drive the loop from a stream of arriving vectors; `compactEvery`

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.TextAnalysis
 import graft.operators.TextAnalysis.Bm25Index
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -66,13 +67,16 @@ object IncrementalBm25 {
   /** Load the store as a servable [[Bm25Index]]: df and corpus stats
     * derive from the tf rows (df = terms' doc counts; N/avgdl from the
     * per-doc lengths, one row per doc via the (id, dl) projection).
+    * The store is read through [[Lake.read]], so loading runs no Spark
+    * job: the schema comes from one footer on the driver, and the first
+    * job is the caller's first serve.
     */
   def load(
       spark: SparkSession,
       storeDir: String,
       idCol: String = "doc_id"
   ): Bm25Index = {
-    val tf = spark.read.parquet(storeDir).drop(BatchCol)
+    val tf = Lake.read(spark, storeDir).drop(BatchCol)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val docs = tf.select(col(idCol), col("dl")).groupBy(col(idCol))
       .agg(max(col("dl")).as("dl"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -85,15 +86,6 @@ object IncrementalDedup {
     */
   final case class BandTable(name: String, buckets: Int)
 
-  /** Cached store read-schemas (corpus, and bands unless bucketed):
-    * fixed for the life of a loop by the uniform-schema contract, so
-    * [[attach]] reads them once and every later trigger skips parquet
-    * schema inference (r19 per-trigger fixed-cost work).
-    */
-  final case class StoreSchemas(
-      corpus: org.apache.spark.sql.types.StructType,
-      bands: Option[org.apache.spark.sql.types.StructType])
-
   /** Write the initial (already-deduplicated) corpus and its UNCAPPED
     * band table, stamped with `ingest_batch = -1` so subsequent
     * [[ingestBatch]] appends keep a uniform schema. Band parameters are
@@ -172,27 +164,19 @@ object IncrementalDedup {
       batchId: Option[Long] = None,
       idPushdownCap: Int = 100000,
       bandTable: Option[BandTable] = None,
-      probeReplay: Boolean = true,
-      storeSchemas: Option[StoreSchemas] = None
+      probeReplay: Boolean = true
   ): Boolean = {
     // a crash inside a previous trigger's compaction can leave the live
     // directory set aside at <dir>.__compact_old — repair before reading
     // (two existence checks when healthy; see Lake.recoverCompact)
-    graft.sources.Lake.recoverCompact(corpusDir)
-    if (bandTable.isEmpty) graft.sources.Lake.recoverCompact(bandsDir)
-    // store schemas are FIXED for the life of a loop (the seed/append
-    // uniform-schema contract above), so [[attach]] caches them after
-    // the first trigger and every later read skips parquet schema
-    // inference — one fewer driver-side footer read per store per
-    // trigger (r19; part of the per-trigger fixed-cost attack)
-    val corpusRaw = storeSchemas.map(_.corpus)
-      .fold(spark.read.parquet(corpusDir))(s => spark.read.schema(s).parquet(corpusDir))
+    Lake.recoverCompact(corpusDir)
+    if (bandTable.isEmpty) Lake.recoverCompact(bandsDir)
+    val corpusRaw = Lake.read(spark, corpusDir)
     // bucketed mode reads through the CATALOG — a path read would drop
     // the bucket spec and the join would re-shuffle the whole table
     val bandsRaw = bandTable match {
       case Some(t) => spark.table(t.name)
-      case None => storeSchemas.flatMap(_.bands)
-        .fold(spark.read.parquet(bandsDir))(s => spark.read.schema(s).parquet(bandsDir))
+      case None => Lake.read(spark, bandsDir)
     }
     // probeReplay = false skips both probe jobs — only safe when the
     // caller KNOWS the id is fresh (StoreGuard.ReplayProbe)
@@ -348,21 +332,11 @@ object IncrementalDedup {
         Seq(StoreLoop.Compacted(bandsDir, sortCols = Seq("band_idx", "band_hash"), offset = 1),
           corpus)
       else Seq(corpus)
-    // store schemas read ONCE at the first trigger (post-crash-repair)
-    // and reused for the life of the loop — see [[StoreSchemas]]
-    var schemas: Option[StoreSchemas] = None
     StoreLoop.attach(arriving, compacted, checkpointLocation, compactEvery,
       asyncCompact) { (batch, bid, probe) =>
-      if (schemas.isEmpty) {
-        graft.sources.Lake.recoverCompact(corpusDir)
-        if (bandTable.isEmpty) graft.sources.Lake.recoverCompact(bandsDir)
-        schemas = Some(StoreSchemas(
-          spark.read.parquet(corpusDir).schema,
-          if (bandTable.isEmpty) Some(spark.read.parquet(bandsDir).schema) else None))
-      }
       ingestBatch(spark, batch, corpusDir, bandsDir, idCol, textCol,
         minJaccard, maxBucketSize, batchId = Some(bid), bandTable = bandTable,
-        probeReplay = probe, storeSchemas = schemas)
+        probeReplay = probe)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Graph
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -67,13 +68,13 @@ object IncrementalGraph {
     * the graph pass itself).
     */
   def loadEdges(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(storeDir).select(col("src"), col("dst")).distinct()
+    Lake.read(spark, storeDir).select(col("src"), col("dst")).distinct()
 
   /** Node frame implied by the store: every id that appears on either
     * edge end.
     */
   def loadNodes(spark: SparkSession, storeDir: String): DataFrame = {
-    val e = spark.read.parquet(storeDir)
+    val e = Lake.read(spark, storeDir)
     e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
       .distinct()

@@ -70,7 +70,7 @@ object IncrementalManifest {
     * never a corpus read.
     */
   def manifest(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(storeDir)
+    Lake.read(spark, storeDir)
       .groupBy(col("shard"))
       .agg(
         sum(col("n_examples")).as("n_examples"),

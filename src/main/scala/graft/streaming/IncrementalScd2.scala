@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.History
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -135,7 +136,7 @@ object IncrementalScd2 {
           // one O(log) copy on the rare crash-recovery path; the
           // end-of-batch fold collapses it back to one row per key
           log.write.mode("overwrite").parquet(openDir(storeDir))
-          spark.read.parquet(openDir(storeDir))
+          Lake.read(spark, openDir(storeDir))
         case None =>
           withinBatch.limit(0).withColumn(BatchCol, lit(-1L))
       }
@@ -231,7 +232,7 @@ object IncrementalScd2 {
     rmDir(new java.io.File(old))
     val df = StoreGuard
       .readStore(spark, path)
-      .getOrElse(spark.read.parquet(storeDir))
+      .getOrElse(Lake.read(spark, storeDir))
     val payloadCols = attrCols ++ (tsCol +: tieBreak) :+ BatchCol
     val folded = df
       .groupBy(keyCols.map(col): _*)
@@ -269,7 +270,7 @@ object IncrementalScd2 {
       tieBreak: Seq[String]
   ): DataFrame =
     History.scd2(
-      spark.read.parquet(storeDir).drop(BatchCol),
+      Lake.read(spark, storeDir).drop(BatchCol),
       keyCols, tsCol, attrCols, tieBreak, collapseUnchanged = false)
 
   /** Drive the loop from a stream: one [[ingestBatch]] per micro-batch

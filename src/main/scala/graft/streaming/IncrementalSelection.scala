@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.{HashFamily, Selection}
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -42,7 +43,7 @@ object IncrementalSelection {
 
   /** The store's hash-parameter metadata lives in a one-row parquet
     * UNDER the store dir. The `_` prefix makes Spark's file index skip
-    * it when `spark.read.parquet(storeDir)` reads the count rows, so
+    * it when `Lake.read(spark, storeDir)` reads the count rows, so
     * the data path never sees it; every write stamps it and every read
     * validates it, because a buckets/n/family mismatch between writer
     * and reader does not FAIL — it silently lands grams on the wrong
@@ -197,7 +198,7 @@ object IncrementalSelection {
     */
   def ratios(spark: SparkSession, storeDir: String, buckets: Int = 1024): DataFrame = {
     checkMeta(spark, storeDir, buckets, None, None)
-    val merged = spark.read.parquet(storeDir)
+    val merged = Lake.read(spark, storeDir)
       .select(posexplode(col("counts")))
       .groupBy(col("pos")).agg(sum(col("col")).as("c"))
       .agg(collect_list(struct(col("pos"), col("c"))).as("__pc"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Sketches
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -70,7 +71,7 @@ object IncrementalSketches {
       storeDir: String,
       groupCols: Seq[String]
   ): DataFrame =
-    Sketches.hllMergeEstimate(spark.read.parquet(storeDir), groupCols)
+    Sketches.hllMergeEstimate(Lake.read(spark, storeDir), groupCols)
 
   // ---- quantile (KLL) member of the same store pattern ----
 
@@ -116,7 +117,7 @@ object IncrementalSketches {
       groupCols: Seq[String],
       probs: Seq[Double]
   ): DataFrame =
-    Sketches.kllMergeQuantiles(spark.read.parquet(storeDir), groupCols, probs)
+    Sketches.kllMergeQuantiles(Lake.read(spark, storeDir), groupCols, probs)
 
   /** Attach the quantile-sketch maintenance loop to a stream.
     * `compactEvery` folds the one-file-set-per-batch accretion back

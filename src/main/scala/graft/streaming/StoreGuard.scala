@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Lake
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
@@ -44,10 +45,12 @@ private[streaming] object StoreGuard {
 
   /** The store dir as a DataFrame, or None iff the store genuinely
     * does not exist yet (absent path / no committed parquet files).
-    * Transient or structural read errors propagate.
+    * Transient or structural read errors propagate. Read through
+    * [[Lake.read]], which hands both absence cases to Spark's reader,
+    * so the error conditions matched here are Spark's own.
     */
   def readStore(spark: SparkSession, dir: String): Option[DataFrame] =
-    try Some(spark.read.parquet(dir))
+    try Some(Lake.read(spark, dir))
     catch { case e: AnalysisException if isAbsence(e) => None }
 
   /** True iff `dir` is a readable store whose `batchCol` already

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
+import graft.sources.Lake
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -69,14 +70,14 @@ object StreamingCuration {
       maxBucketSize: Option[Int] = Some(1000),
       idPushdownCap: Int = 100000
   ): DataFrame = {
-    val evalBands = spark.read.parquet(s"$evalDir/bands")
+    val evalBands = Lake.read(spark, s"$evalDir/bands")
     val cands = Dedup
       .candidatesAgainstBanded(batch, evalBands, idCol, textCol,
         maxBucketSize = maxBucketSize)
       .select(col("new_id").as("doc1"), col("corpus_id").as("doc2"))
       .persist()
     try {
-      val evalText = spark.read.parquet(s"$evalDir/text")
+      val evalText = Lake.read(spark, s"$evalDir/text")
       val candEvalIds = cands.select(col("doc2")).distinct()
         .limit(idPushdownCap + 1).collect().map(_.getLong(0))
       val evalFetched =
@@ -170,8 +171,8 @@ object StreamingCuration {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    val freq = spark.read.parquet(s"$modelDir/freq")
-    val cutRow = spark.read.parquet(s"$modelDir/cutoffs").head()
+    val freq = Lake.read(spark, s"$modelDir/freq")
+    val cutRow = Lake.read(spark, s"$modelDir/cutoffs").head()
     val cuts = cutRow.getAs[scala.collection.Seq[Double]]("cuts")
     val total = cutRow.getAs[Long]("total")
     val tok = batch
@@ -220,8 +221,8 @@ object StreamingCuration {
   ): DataFrame =
     graft.operators.TextAnalysis.nbScore(
       batch, idCol, textCol,
-      spark.read.parquet(s"$modelDir/weights"),
-      spark.read.parquet(s"$modelDir/prior"))
+      Lake.read(spark, s"$modelDir/weights"),
+      Lake.read(spark, s"$modelDir/prior"))
 
   /** Attach the NB quality gate to a stream: per micro-batch, score
     * against the seeded model and append rows with `score > minScore`
