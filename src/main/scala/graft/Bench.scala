@@ -1,16 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE SHORT JSON summary line on stdout
   * (total seconds, query count, failures). The per-query seconds map is
   * written to BENCH_LAST.json only — stdout consumers keep a bounded
   * tail, and the full 87-query map does not fit it.
   *
-  * Measurement protocol (BASELINE.md): local[32], shuffle partitions =
-  * cores, AQE on, UTC, noop-format write to force full execution of
-  * every operator (a bare count() would let Catalyst prune projections).
+  * Measurement protocol (BASELINE.md): the [[GraftSession]] session
+  * (local[cores], shuffle partitions = cores, AQE on, UTC), noop-format
+  * write to force full execution of every operator (a bare count()
+  * would let Catalyst prune projections).
   * A session warm-up touches each table first so query 1 doesn't pay
   * JVM/codegen init.
   */
@@ -24,26 +23,7 @@ object Bench {
     val realOut = System.out
     System.setOut(System.err)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // graft's typed aggregates all carry bounded buffers; the 128-group
-      // default would silently degrade them to sort-based passes (see
-      // the Verify.scala note)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "16777216")
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, default 100: an 84-query suite generates far more
-      // codegen'd classes than that, so the LRU thrashes and queries
-      // re-compile classes the suite already built
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // warm-up: JVM + codegen + file listing, outside the timings
     graft.sources.Tables.names.foreach { t =>

@@ -1,14 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = "/root/testdata/sf0.001"
     for (n <- args) {
       println(s"===== $n =====")

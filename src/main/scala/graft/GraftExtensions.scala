@@ -16,8 +16,8 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
   * made callable from `spark.sql(...)`:
   *
   * {{{
+  * GraftSession.local()                              // every graft session, or
   * spark.sql.extensions=graft.GraftExtensions        // config, or
-  * SparkSession.builder.withExtensions(new GraftExtensions)  // code, or
   * GraftExtensions.registerAll(spark)                // existing session
   * }}}
   *

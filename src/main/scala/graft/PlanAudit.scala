@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.AtomicLong
 
@@ -36,22 +35,7 @@ object PlanAudit {
     val (threshold, named) = rest.partition(_.forall(_.isDigit)) match {
       case (nums, qs) => (nums.headOption.map(_.toInt).getOrElse(5), qs)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE decouples shuffle parallelism from thread
-    // count — the memory-per-task dial for the sf1000 spill A/B: more
-    // shuffle partitions = smaller per-task build/agg footprint at the
-    // same core count (exactly what a cluster would tune)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val bytesRead = new AtomicLong(0)
     val memSpilled = new AtomicLong(0)

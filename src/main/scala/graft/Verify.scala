@@ -1,34 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE decouples shuffle width from thread count:
-      // large-SF runs of window-heavy queries need per-task sorts far
-      // smaller than |data|/threads (the q_hard_negatives sf10 sort
-      // outgrew its pointer array at 24 partitions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // every graft TypedImperativeAggregate carries a BOUNDED buffer
-      // (k-heaps, capped histograms, single min/max pairs, fixed-size
-      // sketches), so a large per-task hash map is safe — but the
-      // DEFAULT fallback threshold (128 distinct groups!) silently
-      // turns ObjectHashAggregate into a sort-based pass over every
-      // input row: at the q_hard_negatives sf10 shape that re-created
-      // the exact 300 GB spill the bounded heap exists to avoid
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "16777216")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // a reused outDir may hold results for queries that no longer exist
     // (e.g. ones moved to the bench-only registry) — remove them so the

@@ -1,9 +1,9 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.Similarity
 import graft.sources.Tables
 import graft.streaming.IncrementalAnn
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for the continuously-maintained IVF index — the
@@ -24,12 +24,7 @@ object AnnIngestionScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val batches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "5").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val root = java.nio.file.Files.createTempDirectory("graft_ann_scale").toString
     val storeDir = s"$root/ivf"

@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.AsOfJoin
 import graft.streaming.StreamAsOf
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -23,11 +23,7 @@ import java.sql.Timestamp
   */
 object AsOfEnrichment {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = Timestamp.valueOf(s)

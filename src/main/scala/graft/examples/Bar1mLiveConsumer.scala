@@ -1,10 +1,10 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.Period
 import graft.dsl.Ksql
 import graft.sources.TestEntities
 import graft.streaming.{BarCascade, GapFill}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -29,11 +29,7 @@ case class ExTick(broker: String, symbol: String, ts: Timestamp, bid: Double, se
   */
 object Bar1mLiveConsumer {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.{Classifier, Curation, HashFamily}
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Paired measurement harness for the [[Classifier.train]] epoch loop
@@ -17,17 +17,7 @@ import org.apache.spark.sql.functions._
 object ClassifierEpochAB {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // the q_classifier_auc_trained fit frame, verbatim (SelectionQueries)
     val fit = Tables

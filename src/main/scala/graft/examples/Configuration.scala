@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.EntityModel
 import graft.sources.KafkaBinding
-import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -46,9 +46,8 @@ object Configuration {
     val cfg = profiles.getOrElse(env, profiles("Development"))
     println(s"environment: $env")
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", cfg("shuffle.partitions"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local()
+    spark.conf.set("spark.sql.shuffle.partitions", cfg("shuffle.partitions"))
     spark.sparkContext.setLogLevel(cfg("log.level"))
 
     // connection options from the profile (KsqlDslOptions analog)

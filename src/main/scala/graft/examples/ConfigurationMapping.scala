@@ -1,5 +1,6 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.EntityModel
 import graft.sources.KafkaBinding
 import org.apache.spark.sql.SparkSession
@@ -51,10 +52,7 @@ object ConfigurationMapping {
 
   def main(args: Array[String]): Unit = {
     val env = sys.env.getOrElse("GRAFT_ENV", "Development")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // the reference ships these as files next to the binary; written out
     // here so the example is self-contained and runnable anywhere

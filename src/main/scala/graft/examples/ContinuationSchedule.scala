@@ -1,10 +1,10 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.Period
 import graft.dsl.{Ksql, ScheduleSpec}
 import graft.plans.{DerivationPlanner, Planner}
 import graft.sources.TestEntities
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's continuation-schedule example
@@ -28,11 +28,7 @@ import org.apache.spark.sql.functions._
 object ContinuationSchedule {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val schedule = ScheduleSpec(
       schedule = TestEntities.marketScheduleEntity,

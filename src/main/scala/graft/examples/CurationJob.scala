@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.Curation
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The integrated training-data curation job over the documents table:
@@ -15,12 +15,7 @@ import org.apache.spark.sql.functions._
 object CurationJob {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val kept = Curation.curate(
       Tables.load(spark, sfDir, "documents"),

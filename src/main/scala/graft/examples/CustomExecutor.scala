@@ -1,6 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's custom-executor example
@@ -48,10 +49,7 @@ object CustomExecutor {
   private val failures = new java.util.concurrent.atomic.AtomicInteger(2)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val exec = new LoggingRetryExecutor(maxAttempts = 3)
     val df = spark.range(1000).select((col("id") % 7).as("k"))

@@ -1,11 +1,11 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.{EntityModel, Period}
 import graft.dsl.Ksql
 import graft.functions.{KFunctions, MinByObject}
 import graft.operators.TopN
 import graft.plans.Planner
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,11 +26,7 @@ case class DailyRate(
   */
 object DailyComparison {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
     def t(s: String) = Timestamp.valueOf(s)
 

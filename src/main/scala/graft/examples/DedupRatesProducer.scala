@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -25,11 +25,7 @@ case class RateTick(broker: String, symbol: String, ts: Timestamp, bid: Double)
   */
 object DedupRatesProducer {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = Timestamp.valueOf(s)

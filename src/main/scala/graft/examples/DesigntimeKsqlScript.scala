@@ -1,10 +1,9 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.core.EntityModel
 import graft.dsl.Ksql
 import graft.plans.KsqlScriptGen
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -23,10 +22,7 @@ case class OrderSummary(id: Int, created_date: java.sql.Date)
   */
 object DesigntimeKsqlScript {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // OnModelCreating analog: register the source entity and the
     // ToQuery projection (Status == "Completed" → Id + CreatedAt.Date)

@@ -1,10 +1,9 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.core.{EntityModel, Period}
 import graft.dsl.Ksql
 import graft.plans.KsqlScriptGen
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -21,10 +20,7 @@ case class Tick(symbol: String, timestamp_utc: Timestamp, price: java.math.BigDe
   */
 object DesigntimeKsqlTumbling {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val ticks = EntityModel[Tick]("ticks")
       .key("symbol").timestamp("timestamp_utc")

@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Building a memory-bounded embedding index — the storage/accuracy
@@ -18,10 +18,7 @@ import org.apache.spark.sql.functions._
 object EmbeddingIndexJob {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val n = emb.count()

@@ -1,9 +1,8 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.core.{EntityModel, ErrorAction}
 import graft.sources.ChangelogStore
-import org.apache.spark.sql.SparkSession
 
 case class RiskyOrder(id: Int, amount: java.math.BigDecimal)
 
@@ -24,10 +23,7 @@ case class RiskyOrder(id: Int, amount: java.math.BigDecimal)
   */
 object ErrorHandling {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_errh").toString

@@ -1,9 +1,8 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
-import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -26,10 +25,7 @@ case class HmMessage(id: Int, sent_at: Timestamp, text: String)
   */
 object HeadersMeta {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_headers").toString

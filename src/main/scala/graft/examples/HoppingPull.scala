@@ -1,10 +1,10 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.EntityModel
 import graft.dsl.Ksql
 import graft.plans.Planner
 import graft.sources.ChangelogStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -31,11 +31,7 @@ case class Txn(transaction_id: String, user_id: String, amount: Double,
   */
 object HoppingPull {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_hop").toString

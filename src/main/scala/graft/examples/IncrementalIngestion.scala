@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Continuous-ingestion dedup — the end-to-end loop a training-data
   * pipeline runs forever: a stream of arriving documents is checked
@@ -17,10 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object IncrementalIngestion {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_ingest").toString

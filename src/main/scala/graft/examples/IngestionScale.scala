@@ -1,9 +1,9 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.Dedup
 import graft.sources.Tables
 import graft.streaming.IncrementalDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for the continuous-ingestion dedup loop: feed a
@@ -62,11 +62,7 @@ object IngestionScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val batches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "5").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     def rchar(): Long =
       scala.io.Source.fromFile("/proc/self/io").getLines()

@@ -1,9 +1,8 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
-import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -27,10 +26,7 @@ case class ConsumerOffset(group: String, committed_seq: Long)
   */
 object ManualCommit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_commit").toString

@@ -1,10 +1,9 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.core.EntityModel
 import graft.plans.ToQueryValidator
 import graft.sources.ChangelogStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -32,10 +31,7 @@ case class OvView(id: Int, text_len: Long)
   */
 object OptionsValidationTimeouts {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // 1. registration-time validation (ConfigureValidation analog)

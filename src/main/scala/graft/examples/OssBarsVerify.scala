@@ -1,10 +1,10 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.{EntityModel, Period}
 import graft.dsl.Ksql
 import graft.functions.KFunctions
 import graft.plans.Planner
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -28,11 +28,7 @@ case class VerifyTick(broker: String, symbol: String, ts: Timestamp, seq: Long, 
   */
 object OssBarsVerify {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // 30 minutes of synthetic ticks, 1 tick / 20s, two symbols

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Isolate the replay-probe cost on a real post-replay band store:
@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
 object ProbeCost {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     // warm (JIT + listing cache behavior matches a steady-state trigger:
     // each trigger re-reads, so we re-read per iteration too)
     (1 to 2).foreach { _ =>

@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.sources.Tables
 import graft.streaming.IncrementalDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Paired in-situ A/B of the replay probe's per-trigger cost on a
@@ -21,13 +21,7 @@ object ProbeTailAB {
   def main(args: Array[String]): Unit = {
     val srcRoot = args(0)
     val pairs = if (args.length > 1) args(1).toInt else 20
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     // work on a copy: the A/B appends
     val root = java.nio.file.Files.createTempDirectory("graft_probe_ab").toString

@@ -1,8 +1,9 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.{Classifier, Curation, Dedup, HashFamily, Selection, Similarity, TextAnalysis, Tokenizer}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.atomic.AtomicLong
@@ -70,20 +71,7 @@ object ProductionPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
-    val spark = SparkSession
-      .builder()
-      .appName("graft-production-pipeline")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // typed imperative aggregates (MinByObject in the dedup keeps)
-      // degrade to sort-based passes past 128 distinct groups per task
-      // without this — the SCALE.md session invariant
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val metrics = new StageMetrics
     spark.sparkContext.addSparkListener(metrics)
     spark.sparkContext.setCheckpointDir(s"$work/checkpoints")

@@ -1,8 +1,7 @@
 package graft.examples
 
-import graft.GraftExtensions
+import graft.GraftSession
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 
 /** The reference's ksql-response-inspect example
   * (`/root/reference/examples/ksql-response-inspect/Program.cs`):
@@ -21,11 +20,7 @@ import org.apache.spark.sql.SparkSession
 object ResponseInspect {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     Tables.load(spark, sfDir, "events").createOrReplaceTempView("events")
 

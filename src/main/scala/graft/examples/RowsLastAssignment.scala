@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.functions.KFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -24,10 +24,7 @@ case class AssignTick(broker: String, symbol: String, ts: Timestamp, seq: Long, 
   */
 object RowsLastAssignment {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
     def t(s: String) = Timestamp.valueOf(s)
 

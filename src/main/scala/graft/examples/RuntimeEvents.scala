@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.streaming.{RuntimeEvent, RuntimeEventBus, RuntimeEventSink, Supervisor}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -30,10 +30,7 @@ import java.util.concurrent.atomic.AtomicInteger
   */
 object RuntimeEvents {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

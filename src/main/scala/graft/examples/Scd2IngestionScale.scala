@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.sources.Tables
 import graft.streaming.IncrementalScd2
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for the continuously-maintained SCD2 loop — the
@@ -32,11 +32,7 @@ object Scd2IngestionScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val batches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "5").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     def rchar(): Long =
       scala.io.Source.fromFile("/proc/self/io").getLines()

@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.HashFamily
 import graft.sources.{Lake, Tables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the training-shard write path end-to-end: hash-assign →
@@ -20,13 +20,7 @@ object ShardWriteScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_shards"
     val nShards = if (args.length > 2) args(2).toInt else 256
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val docs = Tables.load(spark, sfDir, "documents")
       .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))

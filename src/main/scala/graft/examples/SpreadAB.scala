@@ -1,7 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Paired in-JVM A/B for the single-row-group scan-spread question on
@@ -20,17 +21,7 @@ object SpreadAB {
   def main(args: Array[String]): Unit = {
     val rounds = args.headOption.map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     def docsRaw() = Tables.load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
     def docsSpread() =

@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's startup-warmup example
@@ -22,10 +22,7 @@ import org.apache.spark.storage.StorageLevel
 object StartupWarmup {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def timed[A](f: => A): (A, Long) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1000000)

@@ -1,11 +1,12 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.core.Period
 import graft.sources.Tables
 import graft.streaming.{BarCascade, DriftMonitor, GapFill, IncrementalBm25, IncrementalDedup, IncrementalManifest, IncrementalSelection, IncrementalSketches, StreamAsOf, StreamingFunnel}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Streaming-path performance evidence — the last unmeasured surface:
   * every recorded graft number was batch, while the reference's
@@ -106,23 +107,16 @@ object StreamingScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_CHUNKS", "20").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      // 8, not 32: every stateful micro-batch opens one RocksDB store
-      // per shuffle partition, and at this per-batch volume (tens of
-      // thousands of rows) store open/commit overhead dominates long
-      // before parallelism pays — a cluster deployment sizes this to
-      // sustained per-batch volume, not core count
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // long-replay runs (300+ batches, the compaction-crossover A/B)
-      // need the whole progress history, not the 100-entry default tail
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
+    // 8, not cores: every stateful micro-batch opens one RocksDB store
+    // per shuffle partition, and at this per-batch volume (tens of
+    // thousands of rows) store open/commit overhead dominates long
+    // before parallelism pays — a cluster deployment sizes this to
+    // sustained per-batch volume, not core count
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    // long-replay runs (300+ batches, the compaction-crossover A/B)
+    // need the whole progress history, not the 100-entry default tail
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_stream_scale").toString

@@ -1,9 +1,8 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
-import org.apache.spark.sql.SparkSession
 
 case class RefData(ref_key: String, value: String)
 
@@ -22,10 +21,7 @@ case class RefData(ref_key: String, value: String)
   */
 object TableCacheLookup {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft_cache").toString

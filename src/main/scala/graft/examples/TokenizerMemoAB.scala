@@ -1,7 +1,8 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.Tokenizer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A/B pin for the tokenizer word-memo claim (BASELINE.md r14): the
@@ -31,17 +32,7 @@ object TokenizerMemoAB {
     val rotatedDir = args.headOption.getOrElse("/tmp/sf10")
     val baseDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-    val spark = SparkSession
-      .builder()
-      .appName("graft-tokenizer-memo-ab")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16777216")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val rotated = graft.sources.Tables.load(spark, rotatedDir, "documents")
       .select(col("doc_id"), col("text"))

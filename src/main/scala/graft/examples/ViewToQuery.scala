@@ -1,9 +1,8 @@
 package graft.examples
 
-import graft.GraftContext
+import graft.{GraftContext, GraftSession}
 import graft.dsl.Ksql
 import graft.sources.TestEntities
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's view-toquery
@@ -21,10 +20,7 @@ import org.apache.spark.sql.functions._
 object ViewToQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val ctx = new GraftContext(spark, TestEntities.catalog(spark, sfDir))
     ctx.register(TestEntities.orders)

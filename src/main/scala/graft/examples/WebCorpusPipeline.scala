@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.operators.{Curation, Dedup, HashFamily, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end web-corpus preparation with the round-4 operator set —
@@ -21,10 +21,7 @@ import org.apache.spark.sql.functions._
 object WebCorpusPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")

@@ -1,10 +1,10 @@
 package graft.examples
 
+import graft.GraftSession
 import graft.dsl.Ksql
 import graft.plans.Planner
 import graft.core.Period
 import graft.sources.TestEntities
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.concurrent.duration._
@@ -25,11 +25,7 @@ import scala.concurrent.duration._
 object Windowing {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val catalog = TestEntities.catalog(spark, sfDir)
 

@@ -193,11 +193,11 @@ object Dedup {
     *    nor silently vanish from a kept bucket).
     *  - the cap's TopKByObject is a TypedImperativeAggregate grouped by
     *    the very-high-cardinality band key; any session running it MUST
-    *    raise `spark.sql.execution.objectHashAggregate.sortBased.
-    *    fallbackThreshold` (default 128 distinct groups per task!) or
-    *    ObjectHashAggregate silently degrades to a per-task sort pass.
-    *    Both graft mains pin 16M; external session builders must too
-    *    (SCALE.md, CLAUDE.md invariant).
+    *    raise `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+    *    (default 128 distinct groups per task!) or ObjectHashAggregate
+    *    silently degrades to a per-task sort pass. Every session from
+    *    [[graft.GraftSession]] pins 16M; a deployment embedding graft
+    *    must set it too (SCALE.md, CLAUDE.md invariant).
     */
   private def bandedKeys(
       df: DataFrame,

@@ -1,8 +1,9 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.operators.{Curation, HashFamily, TextAnalysis}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc A/B for oracle-vs-production hash families (BASELINE.md
@@ -17,15 +18,7 @@ object FamilyBench {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val ops = if (args.nonEmpty) args.toSeq else Seq("decontaminate", "fingerprint")
-    val spark = SparkSession
-      .builder()
-      .master("local[32]")
-      .appName("graft-family-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val d = Tables.load(spark, dir, "documents")
     val families = Seq("md5" -> HashFamily.Md5, "xxhash64" -> HashFamily.XxHash64)
 

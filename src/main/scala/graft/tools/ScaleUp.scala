@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale multiplier: reads a testdata sf directory and writes a
@@ -60,15 +61,7 @@ object ScaleUp {
     require(docFactor <= maxDoc,
       s"docFactor > $maxDoc would repeat a rotation triple (exact cross-replica dups)")
 
-    val spark = SparkSession
-      .builder()
-      .appName("graft-scaleup")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$name.parquet")

@@ -30,16 +30,31 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("registerAll covers an existing session, including the extremum rewrite") {
-    val s2 = spark.newSession()
-    GraftExtensions.registerAll(s2)
-    assert(s2.sql("SELECT UCASE('x')").head.getString(0) == "X")
-    // live-session rule injection via experimental.extraOptimizations
-    val plan = s2
-      .sql("SELECT max(named_struct('a', 'v')) FROM VALUES (1) AS t(x)")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("max_by_object") && !plan.contains("SortAggregate"))
-    GraftExtensions.registerAll(s2) // idempotent: no duplicate rule
-    assert(s2.experimental.extraOptimizations.count(_ == graft.plans.RewriteArgExtremum) == 1)
+    import org.apache.spark.sql.SparkSession
+    // spark.newSession() would inherit the shared session's extensions,
+    // so build a session WITHOUT them (same SparkContext) — the one
+    // builder outside GraftSession (SessionGuardSpec allowlist)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder().getOrCreate()
+    try {
+      def maxStructPlan = s2
+        .sql("SELECT max(named_struct('a', 'v')) FROM VALUES (1) AS t(x)")
+        .queryExecution.executedPlan.toString
+      assert(!maxStructPlan.contains("max_by_object"), "the bare session must lack the rewrite")
+      GraftExtensions.registerAll(s2)
+      assert(s2.sql("SELECT UCASE('x')").head.getString(0) == "X")
+      // live-session rule injection via experimental.extraOptimizations
+      val plan = maxStructPlan
+      assert(plan.contains("max_by_object") && !plan.contains("SortAggregate"))
+      GraftExtensions.registerAll(s2) // idempotent: no duplicate rule
+      assert(s2.experimental.extraOptimizations.count(_ == graft.plans.RewriteArgExtremum) == 1)
+    } finally {
+      // s2 shares the SparkContext — never stop it; just restore the
+      // shared spec session as active/default
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
   }
 
   test("DATEADD is parser-owned with reference semantics (unquoted units)") {
@@ -112,39 +127,25 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites struct/string-carry min_by/max_by to the object-hash form") {
-    import org.apache.spark.sql.SparkSession
-    val prev = spark
-    // optimizer rules attach only at session construction — build a
-    // sibling session (same SparkContext) with the extensions applied
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
-    try {
-      import s2.implicits._
-      val df = Seq((1L, "a", 2.0), (2L, "b", 1.0)).toDF("o", "s", "d")
-      val agg = df.agg(
-        expr("min_by(named_struct('s', s), o)").as("lo"),
-        expr("max_by(s, o)").as("hi"),
-        expr("min_by(d, o)").as("num"), // mutable carry: must NOT rewrite
-        expr("max(named_struct('d', d, 's', s))").as("mx"), // plain max(struct)
-        min($"s").as("mn") // plain min(string)
-      )
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(plan.contains("min_by_object") && plan.contains("max_by_object"))
-      assert(!plan.contains("SortAggregate"), s"SortAggregate fallback survived:\n$plan")
-      assert(plan.contains("min_by(d"), "numeric min_by should stay declarative")
-      val row = agg.head
-      assert(row.getStruct(0).getString(0) == "a")
-      assert(row.getString(1) == "b")
-      assert(row.getDouble(2) == 2.0)
-      assert(row.getStruct(3).getDouble(0) == 2.0 && row.getStruct(3).getString(1) == "a")
-      assert(row.getString(4) == "a")
-    } finally {
-      // s2 shares the SparkContext — never stop it; just restore the
-      // shared spec session as active/default
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
+    // the spec session is built by GraftSession, with the extensions
+    val df = Seq((1L, "a", 2.0), (2L, "b", 1.0)).toDF("o", "s", "d")
+    val agg = df.agg(
+      expr("min_by(named_struct('s', s), o)").as("lo"),
+      expr("max_by(s, o)").as("hi"),
+      expr("min_by(d, o)").as("num"), // mutable carry: must NOT rewrite
+      expr("max(named_struct('d', d, 's', s))").as("mx"), // plain max(struct)
+      min($"s").as("mn") // plain min(string)
+    )
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(plan.contains("min_by_object") && plan.contains("max_by_object"))
+    assert(!plan.contains("SortAggregate"), s"SortAggregate fallback survived:\n$plan")
+    assert(plan.contains("min_by(d"), "numeric min_by should stay declarative")
+    val row = agg.head
+    assert(row.getStruct(0).getString(0) == "a")
+    assert(row.getString(1) == "b")
+    assert(row.getDouble(2) == 2.0)
+    assert(row.getStruct(3).getDouble(0) == 2.0 && row.getStruct(3).getString(1) == "a")
+    assert(row.getString(4) == "a")
   }
 
   test("HistogramAgg skips nulls and drops unseen keys past the cap") {

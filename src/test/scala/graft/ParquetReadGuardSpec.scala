@@ -34,23 +34,6 @@ class ParquetReadGuardSpec extends AnyFunSuite {
   private val parquetRead =
     ("""\bread\s*(?:\.\s*(?:schema|option|options)\s*\((?:[^()]|\([^()]*\))*\)\s*)*""" +
       """\.\s*parquet\s*\(|\bread\s*\.\s*format\s*\(\s*"parquet"\s*\)""").r
-  private val defName = """\bdef\s+(\w+)""".r
-  private val comment = """(?s)/\*.*?\*/|(?m)(?<![:"])//[^\n]*""".r
-
-  /** Comments blanked to spaces, so offsets and line numbers survive. */
-  private def code(src: String): String =
-    comment.replaceAllIn(src, m =>
-      java.util.regex.Matcher.quoteReplacement(m.matched.map(c => if (c == '\n') c else ' ')))
-
-  /** (enclosing def, line) of every parquet read in `src`. */
-  private def reads(src: String): Seq[(String, Int)] = {
-    val c = code(src)
-    parquetRead.findAllMatchIn(c).map { m =>
-      val d = defName.findAllMatchIn(c.substring(0, m.start)).toSeq.lastOption
-        .map(_.group(1)).getOrElse("<top>")
-      (d, c.substring(0, m.start).count(_ == '\n') + 1)
-    }.toSeq
-  }
 
   test("the scan recognizes every read shape and nothing else") {
     val src =
@@ -67,28 +50,14 @@ class ParquetReadGuardSpec extends AnyFunSuite {
         |  def i = Lake.read(spark, p)
         |  def j = spark.read.json(p)
         |}""".stripMargin
-    assert(reads(src) == Seq(("a", 2), ("b", 3), ("c", 5), ("d", 6)))
+    assert(SourceSweep.find(parquetRead, src) == Seq(("a", 2), ("b", 3), ("c", 5), ("d", 6)))
   }
 
   test("every parquet read in src/main goes through Lake.read or is allowlisted") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val found = scala.collection.mutable.Map.empty[(String, String), Seq[Int]]
-    java.nio.file.Files.walk(root).forEach { p =>
-      val rel = root.relativize(p).toString.replace('\\', '/')
-      if (rel.endsWith(".scala") && !exempt.exists(rel.startsWith))
-        reads(java.nio.file.Files.readString(p)).foreach { case (d, line) =>
-          found((rel, d)) = found.getOrElse((rel, d), Seq.empty) :+ line
-        }
-    }
+    val found = SourceSweep.sweep("src/main/scala/graft", parquetRead,
+      rel => !exempt.exists(rel.startsWith))
     val expected = allowed.map { case (k, (n, _)) => k -> n } + reader
-    val offenders = (found.keySet ++ expected.keySet).toSeq.sorted.flatMap { k =>
-      val lines = found.getOrElse(k, Seq.empty)
-      val n = expected.getOrElse(k, 0)
-      if (lines.size == n) None
-      else if (n == 0)
-        Some(s"${k._1}:${lines.mkString(",")} (def ${k._2}): bare parquet read — use Lake.read")
-      else Some(s"${k._1} def ${k._2}: ${lines.size} parquet reads, allowlisted $n")
-    }
+    val offenders = SourceSweep.offenders(found, expected, "parquet read", "use Lake.read")
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -11,24 +11,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100 — the suite's hundreds of plans thrash
-      // the generated-class LRU otherwise (see BASELINE.md round 6)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // transformWithState (GapFill) stores state + timers in separate
-      // column families, which only the RocksDB provider supports
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The session the product runs under ([[GraftSession]]), at 4 cores. */
+  lazy val session: SparkSession = GraftSession.local(cores = 4)
 }
