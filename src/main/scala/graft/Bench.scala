@@ -43,54 +43,27 @@ object Bench {
       "SPARK_GRAFT_BENCH_OUT",
       java.nio.file.Paths.get(sys.props("user.dir"), "BENCH_LAST.json").toString)
 
-    // Settle-pass reference: a prior run's per-query seconds AT THE SAME
-    // sf dir. Resolution order (r20 — the r19 driver run went
-    // referenceless because the last BENCH_LAST was an sf1 capture, so
-    // the one run that needed settling got settled:0):
-    //   1. SPARK_GRAFT_BENCH_REF (explicit override),
-    //   2. the per-sf BENCH_LAST_<sf>.json this main stamps on every run,
-    //   3. the legacy shared BENCH_LAST.json,
-    //   4. the COMMITTED per-sf reference BENCH_REF_<sf>.json (refreshed
-    //      each round) — the self-defending floor: whatever ran last,
-    //      a same-sf reference always exists. It is resolved from the
-    //      repo root (user.dir), not from the output's directory, so
-    //      output sent outside the repo keeps the settle pass.
-    // A candidate only qualifies if its "sf" field matches this run's.
-    // Parsed with a regex — our own single-line format, no JSON dep.
-    // The summary line names the reference used ("ref", or "none").
+    // Settle-pass reference: SPARK_GRAFT_BENCH_REF (explicit override),
+    // else the COMMITTED per-sf reference BENCH_REF_<sf>.json, resolved
+    // from the repo root (user.dir) so output sent elsewhere keeps the
+    // settle pass. This run's own BENCH_LAST files are never candidates:
+    // two checkouts sharing an output dir would settle against each
+    // other's runs. A candidate qualifies only if it was taken at this
+    // sf AND on this core count (see settleRef); the summary line names
+    // the reference used ("ref", or "none").
     val sfName = new java.io.File(sfDir).getName
-    val outDir = java.nio.file.Paths.get(benchOut).toAbsolutePath.getParent
+    val cores = GraftSession.cores
     val repoDir = java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath
-    def parseRef(path: String): Map[String, Double] =
-      try {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-        if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-        else {
-          val from = txt.indexOf("\"queries\":")
-          if (from < 0) Map.empty
-          else {
-            // bound the scan at the queries object's closing brace — the
-            // file now carries a trailing "settled" object whose numeric
-            // fields would otherwise parse as phantom query entries
-            // (r16 ADVICE). The queries object is flat, so the first '}'
-            // after the key closes it.
-            val end = txt.indexOf('}', from)
-            val span = if (end < 0) txt.substring(from) else txt.substring(from, end + 1)
-            "\"([A-Za-z0-9_]+)\":([0-9]+\\.[0-9]+)".r
-              .findAllMatchIn(span)
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .toMap
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val benchOutPerSf = outDir.resolve(s"BENCH_LAST_$sfName.json").toString
-    val (refPath, refQueries): (String, Map[String, Double]) =
-      (sys.env.get("SPARK_GRAFT_BENCH_REF").toSeq ++ Seq(
-        benchOutPerSf, benchOut,
-        repoDir.resolve(s"BENCH_REF_$sfName.json").toString))
-        .iterator.map(p => p -> parseRef(p)).find(_._2.nonEmpty)
-        .getOrElse("none" -> Map.empty)
+    val benchOutPerSf = java.nio.file.Paths.get(benchOut).toAbsolutePath.getParent
+      .resolve(s"BENCH_LAST_$sfName.json").toString
+    val (refPath, refQueries) = settleRef(
+      (sys.env.get("SPARK_GRAFT_BENCH_REF").toSeq :+
+        repoDir.resolve(s"BENCH_REF_$sfName.json").toString)
+        .map { p =>
+          p -> (try new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+                catch { case scala.util.control.NonFatal(_) => "" })
+        },
+      sfDir, cores)
     // SPARK_GRAFT_DIAG=true: decompose each query's FIRST-run cost into
     // task work vs driver/JVM overhead (guide §1 — measure before
     // optimizing the suite's dominant term, the per-query first-run
@@ -267,7 +240,7 @@ object Bench {
     val summary =
       f"""{"metric":"total","value":$total%.3f,"adjusted":$adjusted%.3f,"unit":"sec","n":${ok.size},"settled":${settled.size},"failed":$failedJson,"sf":"$sfDir","ref":"$refPath"}"""
     val full =
-      f"""{"metric":"total","value":$total%.3f,"adjusted":$adjusted%.3f,"unit":"sec","queries":$qs,"settled":$settledJson,"failed":$failedJson,"sf":"$sfDir","ref":"$refPath"}"""
+      f"""{"metric":"total","value":$total%.3f,"adjusted":$adjusted%.3f,"unit":"sec","queries":$qs,"settled":$settledJson,"failed":$failedJson,"sf":"$sfDir","cpus":$cores,"ref":"$refPath"}"""
     realOut.println(summary)
     // two copies: the legacy shared path (external consumers) AND the
     // per-sf stamp — so a later run at a DIFFERENT sf can neither
@@ -283,5 +256,46 @@ object Bench {
       }
     }
     spark.stop()
+  }
+
+  /** The settle reference for a run at `sfDir` on `cpus` cores: the
+    * first of `candidates` ((path, file text), in preference order)
+    * whose "sf" and "cpus" fields both match this run, with its
+    * per-query seconds — ("none", empty) when none matches. A reference
+    * from other hardware gives false verdicts (core-scaling kernels run
+    * ×2-3 slower on 4 cores than on 32), and one without a "cpus" field
+    * cannot show its hardware, so neither qualifies. Parsed with a
+    * regex — Bench's own single-line format, no JSON dependency.
+    */
+  def settleRef(
+      candidates: Seq[(String, String)],
+      sfDir: String,
+      cpus: Int
+  ): (String, Map[String, Double]) = {
+    def queries(txt: String): Map[String, Double] = {
+      val from = txt.indexOf("\"queries\":")
+      if (from < 0) Map.empty
+      else {
+        // bound the scan at the queries object's closing brace — the
+        // file also carries a "settled" object whose numeric fields
+        // would otherwise parse as phantom query entries. The queries
+        // object is flat, so the first '}' after the key closes it.
+        val end = txt.indexOf('}', from)
+        val span = if (end < 0) txt.substring(from) else txt.substring(from, end + 1)
+        "\"([A-Za-z0-9_]+)\":([0-9]+\\.[0-9]+)".r
+          .findAllMatchIn(span)
+          .map(m => m.group(1) -> m.group(2).toDouble)
+          .toMap
+      }
+    }
+    val sameCpus = ("\"cpus\":" + cpus + "(?![0-9])").r
+    candidates.iterator
+      .collect {
+        case (path, txt) if txt.contains("\"sf\":\"" + sfDir + "\"") &&
+            sameCpus.findFirstIn(txt).isDefined =>
+          path -> queries(txt)
+      }
+      .find(_._2.nonEmpty)
+      .getOrElse("none" -> Map.empty)
   }
 }

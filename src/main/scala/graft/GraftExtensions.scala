@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BoundedTopK, HistogramAgg, KFunctions}
+import graft.functions.{BoundedHeap, HistogramAgg, KFunctions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, MaxBy, MinBy}
@@ -22,7 +22,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
   * }}}
   *
   * Every builder resolves to codegen'd built-in expressions or to the
-  * engine's native aggregates ([[graft.functions.BoundedTopK]] for
+  * engine's native aggregates ([[graft.functions.BoundedHeap]] for
   * TOPK/TOPKDISTINCT, [[graft.functions.HistogramAgg]] for HISTOGRAM)
   * — no UDFs, so the SQL surface carries the same 100 TB plan shapes
   * as the DSL. Names Spark already provides with identical semantics
@@ -125,14 +125,11 @@ object GraftExtensions {
       Count(exprs).toAggregateExpression(isDistinct = true)),
     // typed like ksqlDB's: ARRAY<input type> out, no numeric coercion
     desc("TOPK")(exprs =>
-      BoundedTopK(exprs(0), constInt(exprs(1), "TOPK", "k"))
+      BoundedHeap.topK(exprs(0), constInt(exprs(1), "TOPK", "k"), distinct = false)
         .toAggregateExpression()),
     desc("TOPKDISTINCT")(exprs =>
-      BoundedTopK(
-        exprs(0),
-        constInt(exprs(1), "TOPKDISTINCT", "k"),
-        distinct = true
-      ).toAggregateExpression()),
+      BoundedHeap.topK(exprs(0), constInt(exprs(1), "TOPKDISTINCT", "k"), distinct = true)
+        .toAggregateExpression()),
     desc("HISTOGRAM")(exprs =>
       HistogramAgg(Cast(exprs.head, StringType)).toAggregateExpression())
   )

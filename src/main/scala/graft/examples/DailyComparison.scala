@@ -3,7 +3,7 @@ package graft.examples
 import graft.GraftSession
 import graft.core.{EntityModel, Period}
 import graft.dsl.Ksql
-import graft.functions.{KFunctions, MinByObject}
+import graft.functions.{BoundedHeap, KFunctions}
 import graft.operators.TopN
 import graft.plans.Planner
 import org.apache.spark.sql.expressions.Window
@@ -60,7 +60,7 @@ object DailyComparison {
     val daily = candles
       .groupBy($"broker", $"symbol", to_date($"window_start").as("date"))
       .agg(max($"high").as("high"), min($"low").as("low"),
-        MinByObject.maxBy($"close", $"window_start").as("close"))
+        BoundedHeap.maxBy($"close", $"window_start").as("close"))
 
     // stage 3: PrevClose/Diff (Analytics.cs:20-33) — lag over date order
     val w = Window.partitionBy($"broker", $"symbol").orderBy($"date")

@@ -85,7 +85,7 @@ object Scd2IngestionScale {
       def fetch(path: String): Unit = spark.read.parquet(path)
         .join(broadcast(batchKeys), K, "left_semi")
         .groupBy(col("user_id"))
-        .agg(graft.functions.MinByObject
+        .agg(graft.functions.BoundedHeap
           .maxBy(struct(col("event_type")), struct(col("ts"), col("event_id")))
           .as("__open"))
         .agg(count(lit(1))).collect()

@@ -35,7 +35,7 @@ object WebCorpusPipeline {
     val urlDeduped = withUrl
       .withColumn("canonical_url", Curation.canonicalizeUrl(col("url")))
       .groupBy(col("canonical_url"))
-      .agg(graft.functions.MinByObject
+      .agg(graft.functions.BoundedHeap
         .minBy(struct(col("doc_id"), col("text"), col("source")), col("doc_id")).as("d"))
       .select(col("d.doc_id").as("doc_id"), col("d.text").as("text"), col("d.source").as("source"))
     println(s"after URL dedup: ${urlDeduped.count()}")

@@ -135,10 +135,11 @@ object KFunctions {
     else col(entity.keys.head)
   }
 
-  /** TOPK (:91) — composite built-ins: sort desc, take k. For very hot
-    * 100TB paths a bounded-heap TypedImperativeAggregate would cut the
-    * collect_list buffer; the composite keeps codegen and is partial-agg
-    * friendly enough at k≪group size.
+  /** TOPK (:91) — composite built-ins: sort desc, take k. Buffers
+    * every group element before sorting; the SQL `TOPK`/`TOPKDISTINCT`
+    * every graft session registers run the bounded heap
+    * ([[BoundedHeap.topK]], ≤ k per partial) instead. Kept as the
+    * reference form the specs compare that heap against.
     */
   def topK(c: Column, k: Int): Column =
     slice(sort_array(collect_list(c), asc = false), 1, k)

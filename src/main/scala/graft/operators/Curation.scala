@@ -667,7 +667,7 @@ object Curation {
         count(lit(1)).as("dup_count"),
         // hash-aggregable struct argmin (built-in min_by on a struct
         // falls back to SortAggregate — a corpus-wide per-partition sort)
-        graft.functions.MinByObject
+        graft.functions.BoundedHeap
           .minBy(struct(("quality" +: "clean_text" +: carry).map(col): _*), col(idCol))
           .as("__c")
       )

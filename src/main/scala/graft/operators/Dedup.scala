@@ -187,11 +187,11 @@ object Dedup {
     *
     * Capped-path requirements (r16 ADVICE):
     *  - ids must be NON-NULL on the capped path: the size count and the
-    *    [[graft.functions.TopKByObject]] membership both skip null ids
+    *    [[graft.functions.BoundedHeap.topKBy]] membership both skip null ids
     *    (deliberately the SAME predicate, so size and membership always
     *    agree — a null-id row can neither inflate a bucket past the cap
     *    nor silently vanish from a kept bucket).
-    *  - the cap's TopKByObject is a TypedImperativeAggregate grouped by
+    *  - the cap's `topKBy` is a TypedImperativeAggregate grouped by
     *    the very-high-cardinality band key; any session running it MUST
     *    raise `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
     *    (default 128 distinct groups per task!) or ObjectHashAggregate
@@ -253,7 +253,7 @@ object Dedup {
     // Classifier.auc diamond; the r16 plan audit measured the capped
     // operators paying 2× their banding cost). Instead ONE aggregate
     // carries the bucket size AND its membership: the bounded
-    // [[graft.functions.TopKByObject]] collect keeps at most cap+1 ids
+    // [[graft.functions.BoundedHeap.topKBy]] collect keeps at most cap+1 ids
     // per bucket — complete for every bucket that survives the size
     // filter, and O(cap) memory for the over-cap boilerplate buckets
     // that get dropped anyway — then explodes the kept buckets back to
@@ -263,12 +263,12 @@ object Dedup {
       banded0
         .groupBy(col("band_idx"), col("band_hash"))
         .agg(
-          // count(idCol), not count(*): TopKByObject skips null ordering
+          // count(idCol), not count(*): topKBy skips null ordering
           // keys, so size and membership must use the same null predicate
           // or null-id rows would count toward the cap yet vanish from
           // the kept members (r16 ADVICE)
           count(col(idCol)).as("__bsize"),
-          graft.functions.TopKByObject.topKBy(col(idCol), col(idCol), cap + 1).as("__members"))
+          graft.functions.BoundedHeap.topKBy(col(idCol), col(idCol), cap + 1).as("__members"))
         .filter(col("__bsize") <= cap)
         .select(explode(col("__members")).as(idCol), col("band_idx"), col("band_hash"))
     }
@@ -315,7 +315,7 @@ object Dedup {
   def droppedBucketsFromBanded(banded: DataFrame, maxBucketSize: Int): DataFrame = {
     val keyCols = Seq("band_idx", banded.columns.find(_ == "band_bits").getOrElse("band_hash"))
     // size via count(id), not count(*): the capped generator sizes each
-    // bucket with count(idCol) because TopKByObject skips null ordering
+    // bucket with count(idCol) because topKBy skips null ordering
     // keys (see bandedKeys) — the audit must apply the SAME null
     // predicate or a null-id row makes it report a bucket as over-cap
     // that the cap actually kept (r17 ADVICE). The id column is whatever

@@ -486,7 +486,7 @@ object Graph {
     * symmetrized edge list is built once, pre-partitioned on `src` and
     * cached, and each round is one edges⋈labels equi-join, one
     * (node,label)-sized count, one per-node argmax, and a node-sized
-    * left join. The argmax rides [[graft.functions.MinByObject]]
+    * left join. The argmax rides [[graft.functions.BoundedHeap.minBy]]
     * ordered by `struct(-count, label)` so the plan stays
     * ObjectHashAggregate — Spark's own `min_by(label, struct)` would
     * fall to SortAggregate (non-mutable buffer type) and sort the
@@ -540,7 +540,7 @@ object Graph {
       val best = votes
         .groupBy(col("vid"))
         .agg(
-          graft.functions.MinByObject
+          graft.functions.BoundedHeap
             .minBy(col("label"), struct((-col("cnt")).as("nc"), col("label").as("lb")))
             .as("new_label"))
       val next = ckpt(

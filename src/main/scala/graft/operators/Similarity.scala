@@ -760,7 +760,7 @@ object Similarity {
     * order by score [desc], neighbor_id)` EXACTLY — scores are 6-dp
     * rounded everywhere they feed a rank, so the descending order's
     * negation is exact — while shuffling ≤ k rows per query per map
-    * task and sorting nothing (TopKByObject; the CLAUDE.md plan rule:
+    * task and sorting nothing (`BoundedHeap.topKBy`; the CLAUDE.md plan rule:
     * a row_number window sorts every candidate row, which at sf10 is
     * a billions-of-rows TimSort spill).
     */
@@ -775,7 +775,7 @@ object Similarity {
       else struct(col(scoreCol), col("neighbor_id"))
     scored
       .groupBy(col("query_id"))
-      .agg(graft.functions.TopKByObject
+      .agg(graft.functions.BoundedHeap
         .topKBy(struct(col("neighbor_id"), col(scoreCol)), key, k)
         .as("__top"))
       .select(col("query_id"), posexplode(col("__top")).as(Seq("__i", "__n")))
@@ -1038,14 +1038,14 @@ object Similarity {
     // the nlist-pinned oracle sizing the candidate set is n²/nlist
     // rows, and a per-query rank window must SORT all of them — at
     // sf10 that is a 5-billion-row, ~300 GB spill that exhausted this
-    // machine's disk. TopKByObject keeps ≤ k (key, row) pairs per
+    // machine's disk. BoundedHeap.topKBy keeps ≤ k (key, row) pairs per
     // query per map task, shuffles only those, sorts nothing. The key
     // struct (-cos, neighbor_id) ascending reproduces the window's
     // (cos DESC, neighbor_id ASC) order exactly (cos is 6-dp rounded,
     // so negation is exact), and array position IS the rank.
     scored
       .groupBy(col("query_id"), col("query_label"))
-      .agg(graft.functions.TopKByObject
+      .agg(graft.functions.BoundedHeap
         .topKBy(
           struct(col("neighbor_id"), col("neighbor_label"), col("cos")),
           struct(negate(col("cos")), col("neighbor_id")),

@@ -394,7 +394,7 @@ object TextAnalysis {
       // typed-imperative argmax: built-in max(struct) is not
       // hash-aggregable and would sort every (doc, term) row
       .agg(
-        graft.functions.MinByObject
+        graft.functions.BoundedHeap
           .maxBy(struct(col("tfidf"), col("term")), struct(col("tfidf"), col("term")))
           .as("__m")
       )

@@ -20,7 +20,7 @@ object AggregateDetection {
     "sum", "count", "min", "max", "avg", "mean", "max_by", "min_by",
     "collect_list", "collect_set", "count_distinct", "approx_count_distinct",
     "first", "last", "first_value", "last_value", "stddev", "variance",
-    "count_if", "bool_and", "bool_or", "bounded_topk", "bounded_topk_distinct"
+    "count_if", "bool_and", "bool_or"
   )
 
   def containsAggregate(c: Column): Boolean =

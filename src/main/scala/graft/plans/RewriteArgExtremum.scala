@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.MinByObject
+import graft.functions.BoundedHeap
 import org.apache.spark.sql.catalyst.expressions.{RowOrdering, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Max, MaxBy, Min, MinBy
@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Rewrite `min_by`/`max_by` — and plain `min`/`max` — with a
   * non-mutable carried value (struct, string, array, …) to
-  * [[MinByObject]].
+  * [[BoundedHeap]]'s `min_by_object` / `max_by_object`.
   *
   * The built-in declarative `MinBy`/`MaxBy` put the carried value into
   * the aggregation buffer; when that value's type is not mutable in an
@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `Aggregate` — including every OTHER function in it — falls back to
   * SortAggregate: a per-partition sort of all input rows. At 100 TB
   * that turns a linear hash pass into n·log(n) sorts. The typed
-  * imperative [[MinByObject]] keeps an opaque buffer, so the planner
+  * imperative [[BoundedHeap]] keeps an opaque buffer, so the planner
   * picks ObjectHashAggregate instead (hash partials, no sort).
   *
   * Results are identical except for ties in the ordering expression,
@@ -43,18 +43,18 @@ object RewriteArgExtremum extends Rule[LogicalPlan] {
       agg.transformExpressions {
         case ae @ AggregateExpression(MinBy(v, o), _, false, _, _)
             if carryHitsFallback(v) =>
-          ae.copy(aggregateFunction = MinByObject(v, o))
+          ae.copy(aggregateFunction = BoundedHeap(v, o, 1, BoundedHeap.MinBy))
         case ae @ AggregateExpression(MaxBy(v, o), _, false, _, _)
             if carryHitsFallback(v) =>
-          ae.copy(aggregateFunction = MinByObject(v, o, reverse = true))
+          ae.copy(aggregateFunction = BoundedHeap(v, o, 1, BoundedHeap.MaxBy))
         // min/max ordered by their own value: same interpreted ordering,
         // same null-skip semantics
         case ae @ AggregateExpression(Min(c), _, false, _, _)
             if carryHitsFallback(c) && RowOrdering.isOrderable(c.dataType) =>
-          ae.copy(aggregateFunction = MinByObject(c, c))
+          ae.copy(aggregateFunction = BoundedHeap(c, c, 1, BoundedHeap.MinBy))
         case ae @ AggregateExpression(Max(c), _, false, _, _)
             if carryHitsFallback(c) && RowOrdering.isOrderable(c.dataType) =>
-          ae.copy(aggregateFunction = MinByObject(c, c, reverse = true))
+          ae.copy(aggregateFunction = BoundedHeap(c, c, 1, BoundedHeap.MaxBy))
       }
   }
 }

@@ -1318,7 +1318,7 @@ object PipelineQueries extends QueryPack {
     // query) at the pinned nlist=8 oracle convention — candidate volume
     // n²/8, so its DuckDB mirror's rank sort is infeasible at sf10
     // (~200 GB); the gate re-pinned on a bounded query batch and this
-    // shape stays as the bench twin (TopKByObject keeps the Spark side
+    // shape stays as the bench twin (BoundedHeap.topKBy keeps the Spark side
     // itself heap-bounded — the ~15 min sf10 run, BASELINE.md round 12)
     "q_hard_negatives_all" -> { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")

@@ -269,11 +269,10 @@ object RelationalQueries extends QueryPack {
       )
     },
 
-    // TOPK via the bounded-heap TypedImperativeAggregate (buffer ≤ k per
-    // partial — the 100TB-safe path); TOPKDISTINCT via the composite.
-    // BoundedTopKSpec proves heap ≡ composite.
+    // TOPK/TOPKDISTINCT as every GraftSession registers them: the
+    // bounded-heap TypedImperativeAggregate (buffer ≤ k per partial — the
+    // 100TB-safe path). BoundedTopKSpec proves heap ≡ composite.
     "q_topk" -> { (s, dir) =>
-      graft.functions.BoundedTopK.register(s)
       // top-k doubles come out as scalar rank columns (get() is null-safe
       // out of bounds) — double→string formatting differs across engines,
       // so numeric columns beat a joined string here
@@ -283,10 +282,10 @@ object RelationalQueries extends QueryPack {
             .from(events)
             .groupBy("event_type" -> col("event_type"))
             .select(
-              expr("bounded_topk(value, 3)").as("topv"),
+              expr("TOPK(value, 3)").as("topv"),
               // typed heap on strings too (TOPKDISTINCT(VARCHAR)) — the
               // collect_set composite would buffer whole groups
-              expr("bounded_topk_distinct(user_id, 3)").as("topu")
+              expr("TOPKDISTINCT(user_id, 3)").as("topu")
             )
             .build(),
           catalog(s, dir)

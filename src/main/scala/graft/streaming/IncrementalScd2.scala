@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      HEAD store ([[openDir]] — latest row per key, Kafka
   *      compacted-topic semantics), NOT the version log: a broadcast
   *      left-semi prune to the batch's keys, then a hash-aggregable
-  *      latest-per-key ([[graft.functions.MinByObject]] — built-in
+  *      latest-per-key ([[graft.functions.BoundedHeap.maxBy]] — built-in
   *      max_by on a struct carry falls to SortAggregate). Reading the
   *      head makes the per-batch cost O(|batch| + #keys), independent
   *      of how many versions the history holds (Scd2IngestionScale
@@ -150,7 +150,7 @@ object IncrementalScd2 {
     val open = prior
       .join(broadcast(batchKeys), keyCols, "left_semi")
       .groupBy(keyCols.map(col): _*)
-      .agg(graft.functions.MinByObject
+      .agg(graft.functions.BoundedHeap
         .maxBy(attrs, struct((tsCol +: tieBreak).map(col): _*))
         .as("__open"))
 
@@ -236,7 +236,7 @@ object IncrementalScd2 {
     val payloadCols = attrCols ++ (tsCol +: tieBreak) :+ BatchCol
     val folded = df
       .groupBy(keyCols.map(col): _*)
-      .agg(graft.functions.MinByObject
+      .agg(graft.functions.BoundedHeap
         .maxBy(struct(payloadCols.map(col): _*),
           struct((tsCol +: tieBreak).map(col): _*))
         .as("__p"))

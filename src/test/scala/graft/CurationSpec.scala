@@ -482,7 +482,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("MinByObject keeps hash aggregation for struct carries and honors null orderings") {
-    import graft.functions.MinByObject
+    import graft.functions.BoundedHeap
     val df = Seq(
       (Some(3L), "c", 1.0),
       (Some(1L), "a", 9.0),
@@ -491,8 +491,8 @@ class CurationSpec extends SparkSpec {
     ).toDF("ord", "s", "d").repartition(3) // force partial serde + merge
     val row = df
       .agg(
-        MinByObject.minBy(struct($"s", $"d"), $"ord").as("lo"),
-        MinByObject.maxBy($"s", $"ord").as("hi")
+        BoundedHeap.minBy(struct($"s", $"d"), $"ord").as("lo"),
+        BoundedHeap.maxBy($"s", $"ord").as("hi")
       )
       .head
     assert(row.getStruct(0).getString(0) == "a" && row.getStruct(0).getDouble(1) == 9.0)
@@ -500,13 +500,13 @@ class CurationSpec extends SparkSpec {
     // plan shape: the whole point — no SortAggregate fallback
     val plan = df
       .groupBy($"d")
-      .agg(MinByObject.minBy(struct($"s"), $"ord"))
+      .agg(BoundedHeap.minBy(struct($"s"), $"ord"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"))
   }
 
   test("MinByObject is value-equivalent to built-in min_by/max_by on unique orderings") {
-    import graft.functions.MinByObject
+    import graft.functions.BoundedHeap
     // unique orderings (tie behavior is nondeterministic in BOTH forms,
     // so ties are excluded from the equivalence claim); several random
     // draws with grouped keys and partial-merge pressure
@@ -519,8 +519,8 @@ class CurationSpec extends SparkSpec {
       val got = df
         .groupBy($"key")
         .agg(
-          MinByObject.minBy(struct($"s", $"d"), $"ord").as("lo"),
-          MinByObject.maxBy($"s", $"ord").as("hi")
+          BoundedHeap.minBy(struct($"s", $"d"), $"ord").as("lo"),
+          BoundedHeap.maxBy($"s", $"ord").as("hi")
         )
         .collect()
         .map(r => r.getString(0) -> (r.getStruct(1).getString(0), r.getString(2)))

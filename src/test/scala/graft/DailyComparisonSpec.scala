@@ -73,7 +73,7 @@ class DailyComparisonSpec extends SparkSpec {
       .agg(
         max($"high").as("high"),
         min($"low").as("low"),
-        graft.functions.MinByObject.maxBy($"close", $"window_start").as("close")
+        graft.functions.BoundedHeap.maxBy($"close", $"window_start").as("close")
       )
 
     // stage 3: DailyComparison — PrevClose via lag over (broker,

@@ -101,7 +101,7 @@ class DedupSpec extends SparkSpec {
 
   test("droppedBucketsFromBanded sizes buckets by non-null id, matching the cap") {
     // the capped generator sizes buckets with count(idCol) because
-    // TopKByObject skips null ordering keys — 10 real members + 2
+    // topKBy skips null ordering keys — 10 real members + 2
     // null-id rows is a bucket of 10, not 12. The band-table audit must
     // apply the SAME predicate (r17 ADVICE): under cap 10 this bucket
     // was KEPT, so the audit must not report it as dropped

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BoundedTopK, KFunctions}
+import graft.functions.KFunctions
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -108,14 +108,13 @@ class StreamingTypedAggSpec extends SparkSpec {
 
   test("bounded_topk and histogram aggregate across micro-batches in update mode") {
     implicit val sqlCtx = spark.sqlContext
-    BoundedTopK.register(spark)
     val mem = MemoryStream[PageHit]
 
     val agg = mem
       .toDF()
       .groupBy($"user")
       .agg(
-        expr("bounded_topk(score, 2)").as("top2"),
+        expr("TOPK(score, 2)").as("top2"),
         to_json(KFunctions.histogram($"page")).as("pages")
       )
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TopKByObject
+import graft.functions.BoundedHeap
 import org.apache.spark.sql.functions._
 
 /** Bounded top-k-by: heap semantics (k smallest keys, ascending order,
@@ -18,7 +18,7 @@ class TopKByObjectSpec extends SparkSpec {
     ).toDF("g", "id", "cos")
     val viaAgg = df
       .groupBy($"g")
-      .agg(TopKByObject.topKBy(
+      .agg(BoundedHeap.topKBy(
         struct($"id", $"cos"),
         struct(negate($"cos"), $"id"), 2).as("t"))
       .select($"g", posexplode($"t").as(Seq("i", "n")))
@@ -40,7 +40,7 @@ class TopKByObjectSpec extends SparkSpec {
     val rows = (0 until 2000).map(i => ((i % 7).toLong, i.toLong, (i * 37 % 101) / 101.0))
     def run(parts: Int) = rows.toDF("g", "id", "score").repartition(parts)
       .groupBy($"g")
-      .agg(TopKByObject.topKBy(struct($"id"), struct(negate($"score"), $"id"), 5).as("t"))
+      .agg(BoundedHeap.topKBy(struct($"id"), struct(negate($"score"), $"id"), 5).as("t"))
       .select($"g", $"t")
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toList).toMap
     assert(run(32) == run(1))
@@ -61,15 +61,21 @@ class TopKByObjectSpec extends SparkSpec {
       .groupBy($"id").agg(min(length($"w")).as("h1"))
     val got = sig.select($"id", $"h1")
       .groupBy($"h1")
-      .agg(TopKByObject.topKBy($"id", $"id", 10).as("m"))
+      .agg(BoundedHeap.topKBy($"id", $"id", 10).as("m"))
       .select(explode($"m").as("id")).as[Long].collect().toSet
     assert(got == Set(1L, 2L, 3L, 4L), s"scalar-scalar round trip lost members: $got")
+    // the k = 1 shapes over an (INT value, BIGINT key) pair
+    val (lo, hi) = sig.select(($"id" * 10).cast("int").as("v"), $"id", $"h1")
+      .groupBy($"h1")
+      .agg(BoundedHeap.minBy($"v", $"id").as("lo"), BoundedHeap.maxBy($"v", $"id").as("hi"))
+      .select($"lo", $"hi").as[(Int, Int)].head
+    assert((lo, hi) == ((10, 40)), s"min/max_by_object round trip: ($lo, $hi)")
   }
 
   test("plans as a two-phase hash aggregate — no sort, no window") {
     val df = spark.range(1000).select(($"id" % 13).as("g"), $"id", rand(7).as("s"))
     val plan = df.groupBy($"g")
-      .agg(TopKByObject.topKBy(struct($"id"), struct($"s", $"id"), 3).as("t"))
+      .agg(BoundedHeap.topKBy(struct($"id"), struct($"s", $"id"), 3).as("t"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), plan)
     assert(!plan.contains("SortAggregate") && !plan.contains("WindowExec"), plan)
