@@ -18,6 +18,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Lake {
 
+  /** The file size [[compact]] repacks to, and the size a stamped store
+    * append sizes its files against (`StoreGuard.appendParts`).
+    */
+  val TargetFileBytes: Long = 128L * 1024 * 1024
+
   /** `spark.read.parquet(path)` without its schema-inference job: the
     * schema comes from the one footer Spark's own inference would read,
     * read on the driver ([[org.apache.spark.sql.graftbridge.ParquetSchemaBridge]]),
@@ -286,7 +291,7 @@ object Lake {
   def compact(
       spark: SparkSession,
       path: String,
-      targetBytes: Long = 128L * 1024 * 1024,
+      targetBytes: Long = TargetFileBytes,
       sortCols: Seq[String] = Nil,
       rangeCols: Seq[String] = Nil
   ): Long = {
@@ -466,7 +471,7 @@ object Lake {
 final class AsyncCompactor(
     spark: SparkSession,
     path: String,
-    targetBytes: Long = 128L * 1024 * 1024,
+    targetBytes: Long = Lake.TargetFileBytes,
     sortCols: Seq[String] = Nil,
     rangeCols: Seq[String] = Nil
 ) {

@@ -200,6 +200,10 @@ object IncrementalDedup {
     val cands = candsRaw
       .select(col("new_id").as("doc1"), col("corpus_id").as("doc2"))
       .persist()
+    // the pins are released in `finally`: a failed append must not leave
+    // a batch cached for the life of the session (each supervised restart
+    // would add one more)
+    try {
     // Candidate-id pushdown: fetch corpus text ONLY for docs some batch
     // doc banded with. The collect is bounded by idPushdownCap (the
     // justified model-style bound — ids, not data); the isin filter
@@ -231,6 +235,7 @@ object IncrementalDedup {
     val survivors = Dedup.dropNearDuplicates(
       survivors0, idCol, textCol, minJaccard = minJaccard, maxBucketSize = maxBucketSize)
       .persist()
+    try {
     // materialize BEFORE either append: both writes must consume the
     // SAME survivor rows — without the pin, the second write would
     // re-execute the whole chain against a corpusDir listing that the
@@ -276,10 +281,10 @@ object IncrementalDedup {
     // loop-health ride-along: rows = survivors appended (the count is
     // already materialized above, so this costs nothing either way)
     RuntimeEventBus.ingested(corpusDir, batchId, nSurvivors)
-    cands.unpersist()
-    survivors.unpersist()
     true
+    } finally survivors.unpersist()
     } finally if (pruned) spark.conf.set(inThresholdKey, prevInThreshold)
+    } finally cands.unpersist()
   }
 
   /** Attach the ingestion loop to a streaming frame of (idCol, textCol)

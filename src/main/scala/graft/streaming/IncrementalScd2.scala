@@ -176,29 +176,33 @@ object IncrementalScd2 {
     // pins against). The count doubles as the append fan-out size and
     // the loop-health rows figure, and it sees the PRE-append state by
     // construction.
+    // The pin is released in `finally`: a failed append must not leave
+    // the batch cached for the life of the session.
     val stamped = changes.withColumn(BatchCol, lit(batchId.getOrElse(-1L))).persist()
-    val nChanges = stamped.count()
-    // ordering is load-bearing: head append first, version-log append
-    // second (the COMMIT point the replay check reads), head fold LAST.
-    // A crash between the appends leaves stamped head rows that the
-    // next run (a replay of this batch) excludes and re-appends —
-    // duplicates carry identical payloads, so the fold's latest-per-key
-    // collapse is unaffected. The fold never destroys pre-batch state
-    // until the batch is committed in the version log.
-    // Zero-change batches skip the appends AND the fold outright (r20,
-    // the dedup loop's zero-survivor discipline): an empty append still
-    // grows both stores' file counts, and a replay of an all-unchanged
-    // batch recomputes to the same no-op. The success EVENT publishes
-    // only AFTER both appends commit: a failed append must not leave a
-    // success=true batch.ingested for a batch that never landed
-    // (r17 ADVICE).
-    if (nChanges > 0) {
-      val out = stamped.coalesce(StoreGuard.appendParts(spark, nChanges))
-      out.write.mode("append").parquet(openDir(storeDir))
-      out.write.mode("append").parquet(storeDir)
-    }
+    val nChanges = try {
+      val n = stamped.count()
+      // ordering is load-bearing: head append first, version-log append
+      // second (the COMMIT point the replay check reads), head fold LAST.
+      // A crash between the appends leaves stamped head rows that the
+      // next run (a replay of this batch) excludes and re-appends —
+      // duplicates carry identical payloads, so the fold's latest-per-key
+      // collapse is unaffected. The fold never destroys pre-batch state
+      // until the batch is committed in the version log.
+      // Zero-change batches skip the appends AND the fold outright (r20,
+      // the dedup loop's zero-survivor discipline): an empty append still
+      // grows both stores' file counts, and a replay of an all-unchanged
+      // batch recomputes to the same no-op. The success EVENT publishes
+      // only AFTER both appends commit: a failed append must not leave a
+      // success=true batch.ingested for a batch that never landed
+      // (r17 ADVICE).
+      if (n > 0) {
+        val out = stamped.coalesce(StoreGuard.appendParts(spark, n))
+        out.write.mode("append").parquet(openDir(storeDir))
+        out.write.mode("append").parquet(storeDir)
+      }
+      n
+    } finally stamped.unpersist()
     RuntimeEventBus.ingested(storeDir, batchId, nChanges)
-    stamped.unpersist()
     if (nChanges > 0)
       foldOpen(spark, storeDir, keyCols, tsCol, attrCols, tieBreak)
     true

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.sources.Lake
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
@@ -30,18 +32,69 @@ private[streaming] object StoreGuard {
   /** Size an append's file fan-out from an already-known row count:
     * one file per ~50k rows, capped at the shuffle-partition count —
     * a micro-batch append lands in exactly one file while backfill
-    * batches still fan out (the r19 dedup-loop fix; used by
-    * [[StoreLoop.appendStamped]] and the SCD2/dedup appends — the
-    * selection store appends one global-aggregate row, hence one file).
-    * Without this, every store whose append inherits input or shuffle
-    * partitioning grows one NEAR-EMPTY file per partition per trigger —
-    * file count outruns data volume and every later store read goes
-    * footer-bound.
+    * batches still fan out (the r19 dedup-loop fix). Used by the SCD2
+    * and dedup appends, which pin and count their rows anyway because
+    * two appends consume one materialization; the stamped append of
+    * [[StoreLoop.appendStamped]] is laid out by [[sized]] instead, and
+    * the selection store appends one global-aggregate row, hence one
+    * file. Without a sized fan-out, every store whose append inherits
+    * input or shuffle partitioning grows one NEAR-EMPTY file per
+    * partition per trigger — file count outruns data volume and every
+    * later store read goes footer-bound.
     */
   def appendParts(spark: SparkSession, rows: Long): Int =
     math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong,
       rows / 50000L + 1L)).toInt
+
+  /** The file count of an append whose rows are NOT counted: one file
+    * per [[Lake.TargetFileBytes]] of estimated size, at least one and at
+    * most `cap` (the shuffle-partition count). An unknown estimate
+    * (None) gives ONE file: a source without size statistics is a
+    * streaming micro-batch (Kafka) or a frame over an RDD, and a file
+    * per input partition would bring back the near-empty-file growth
+    * the cap exists to stop; compaction splits a file that came out
+    * large.
+    */
+  def estimatedParts(estimate: Option[BigInt], cap: Int): Int =
+    estimate.fold(1) { b =>
+      ((b + Lake.TargetFileBytes - 1) / Lake.TargetFileBytes).max(1).min(cap.max(1)).toInt
+    }
+
+  /** `df` laid out for a stamped append: [[estimatedParts]] files, cut
+    * where the cut moves the least work. A plan whose output partitions
+    * a shuffle decided (or that has one partition) is coalesced: merging
+    * post-shuffle partitions moves no data, and the work before the
+    * shuffle keeps its width. A plan that runs narrow from its source
+    * (`UnknownPartitioning`: its partitions are the input's, e.g. the ANN
+    * assignment's broadcast centroid fold) is repartitioned instead: a
+    * coalesce would pull the whole computation into that many tasks.
+    */
+  def sized(df: DataFrame): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    val parts = estimatedParts(sizeEstimate(df), conf.numShufflePartitions)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    plan.outputPartitioning match {
+      case _: UnknownPartitioning => df.repartition(parts)
+      case _ => df.coalesce(parts)
+    }
+  }
+
+  /** The optimizer's size estimate of `df` in bytes, read on the driver
+    * with no job; None when it is unknown, i.e. when the plan or any of
+    * its leaves reads as `spark.sql.defaultSizeInBytes` — the size
+    * Spark gives a relation it cannot measure (an RDD, a Kafka
+    * micro-batch).
+    */
+  def sizeEstimate(df: DataFrame): Option[BigInt] = {
+    val plan = df.queryExecution.optimizedPlan
+    val unknown = df.sparkSession.sessionState.conf.defaultSizeInBytes
+    Some(plan.stats.sizeInBytes)
+      .filter(_ < unknown && plan.collectLeaves().forall(_.stats.sizeInBytes < unknown))
+  }
 
   /** The store dir as a DataFrame, or None iff the store genuinely
     * does not exist yet (absent path / no committed parquet files).

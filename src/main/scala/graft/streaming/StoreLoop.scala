@@ -1,9 +1,12 @@
 package graft.streaming
 
 import graft.sources.Lake
-import org.apache.spark.sql.functions.lit
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** The one exactly-once store-loop engine behind every incremental
   * store's `attach` (BM25, HLL/KLL sketches, manifest, graph, ANN,
@@ -76,10 +79,16 @@ private[streaming] object StoreLoop {
     *   - probe for the batch unless `probeReplay = false` (only safe
     *     when the caller KNOWS the id is fresh). [[StoreGuard]]
     *     tolerates a missing store, so the first batch bootstraps it;
-    *   - stamp, materialize once, and size the append from the known
-    *     row count ([[StoreGuard.appendParts]]): a micro-batch lands in
-    *     one file instead of one per input or shuffle partition, and the
-    *     count feeds `batch.ingested` without re-running `rows`.
+    *   - stamp and write in ONE job, with no cache and no count: the
+    *     file count comes from the plan's size estimate, on the driver
+    *     ([[StoreGuard.sized]]: a micro-batch lands in one file instead
+    *     of one per input or shuffle partition), and the row count for
+    *     `batch.ingested` is observed on the write itself. A replay
+    *     repair recomputes `rows`, which is deterministic, so no cached
+    *     copy is needed;
+    *   - a zero-row write still leaves one schema-only file (Spark writes
+    *     partition 0 even when it is empty); it is removed, so an empty
+    *     batch appends no file.
     */
   def appendStamped(
       spark: SparkSession,
@@ -91,14 +100,33 @@ private[streaming] object StoreLoop {
     val replay = batchId.exists(b =>
       probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b))
     if (!replay) {
-      val stamped = rows.withColumn(BatchCol, lit(batchId.getOrElse(-1L))).persist()
-      val n = stamped.count()
-      if (n > 0)
-        stamped.coalesce(StoreGuard.appendParts(spark, n))
-          .write.mode("append").parquet(storeDir)
+      val stamped = rows.withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
+      val observed = Observation()
+      StoreGuard.sized(stamped.observe(observed, count(lit(1)).as("rows")))
+        .write.mode("append").parquet(storeDir)
+      val n = observed.get("rows").asInstanceOf[Long]
+      if (n == 0) dropEmptyFile(spark, storeDir)
       RuntimeEventBus.ingested(storeDir, batchId, n)
-      stamped.unpersist()
     }
     !replay
+  }
+
+  /** Delete the newest zero-row parquet file of `dir`: the schema-only
+    * file a zero-row append just wrote. The loop thread is the store's
+    * only appender, so that file is the newest; any zero-row file holds
+    * no rows, so the store's content is the same whichever is taken.
+    * Runs only after an empty append.
+    */
+  private def dropEmptyFile(spark: SparkSession, dir: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    fs.listStatus(path).filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(-_.getModificationTime)
+      .find { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount == 0 finally r.close()
+      }
+      .foreach(f => fs.delete(f.getPath, false))
   }
 }

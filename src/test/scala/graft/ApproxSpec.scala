@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class ApproxSpec extends SparkSpec {
 
   test("approx_count_distinct within error bounds of exact, mergeable across partitions") {
-    val li = Tables.load(spark, "/root/testdata/sf0.01", "lineitem").repartition(16)
+    val li = Tables.load(spark, testData("0.01"), "lineitem").repartition(16)
     val row = li
       .agg(
         countDistinct(col("l_partkey")).as("exact"),

@@ -14,7 +14,7 @@ class BoundedTopKSpec extends SparkSpec {
   import spark.implicits._
 
   test("bounded_topk equals the composite sort/slice form on events data") {
-    val ev = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
+    val ev = graft.sources.Tables.load(spark, testData("0.001"), "events")
     val heap = ev.groupBy($"event_type")
       .agg(expr("TOPK(value, 5)").as("top"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap

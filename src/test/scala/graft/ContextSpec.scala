@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class ContextSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = testData("0.001")
 
   private def ctx = new GraftContext(spark, TestEntities.catalog(spark, dir))
 

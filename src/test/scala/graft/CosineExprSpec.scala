@@ -11,7 +11,7 @@ class CosineExprSpec extends SparkSpec {
   import spark.implicits._
 
   test("native expression matches composed form bit-for-bit on embeddings") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val pairs = emb.alias("a").join(
       emb.alias("b"),
       col("b.vec_id") === col("a.vec_id") + 1
@@ -30,7 +30,7 @@ class CosineExprSpec extends SparkSpec {
     // same accumulation order, same float→double promotion, Math.sqrt.
     // The reference below IS that loop, run driver-side on the collected
     // arrays; Double.compare catches any -0.0/NaN drift == would mask.
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val pairs = emb.alias("a")
       .join(emb.alias("b"), col("b.vec_id") === col("a.vec_id") + 7)
       .select(
@@ -57,7 +57,7 @@ class CosineExprSpec extends SparkSpec {
 
   test("registered cosine_sim is usable from SQL") {
     graft.functions.CosineSimilarity.register(spark)
-    Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    Tables.load(spark, testData("0.001"), "embeddings")
       .createOrReplaceTempView("emb_v")
     val v = spark.sql(
       "SELECT cosine_sim(a.embedding, a.embedding) AS c FROM emb_v a WHERE a.vec_id = 0")

@@ -228,7 +228,7 @@ class CurationSpec extends SparkSpec {
 
   test("bloom decontamination has no false negatives and bounded overestimate") {
     val docs = graft.sources.Tables
-      .load(spark, "/root/testdata/sf0.001", "documents")
+      .load(spark, testData("0.001"), "documents")
     val corpus = docs.filter($"doc_id" % 97 =!= 0)
     val eval = docs.filter($"doc_id" % 97 === 0)
     val exact = Curation

@@ -176,10 +176,10 @@ class DslSpec extends SparkSpec {
     assert(Planner.outputMode(model) == "update")
     assert(Planner.outputMode(model, emitFinal = true) == "append")
     // lower over a streaming source and check it is a streaming plan
-    val src = TestEntities.catalog(spark, "/root/testdata/sf0.001")
+    val src = TestEntities.catalog(spark, testData("0.001"))
     val stream = spark.readStream
       .schema(src("events").schema)
-      .parquet("/root/testdata/sf0.001") // schema-compatible dir read not used; plan only
+      .parquet(testData("0.001")) // schema-compatible dir read not used; plan only
     val df = Planner.streaming(model, _ => stream)
     assert(df.isStreaming)
   }

@@ -113,7 +113,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("HISTOGRAM matches the two-shuffle composite and sorts keys") {
-    graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
+    graft.sources.Tables.load(spark, testData("0.001"), "events")
       .createOrReplaceTempView("ev_ext")
     val agg = spark
       .sql("SELECT to_json(HISTOGRAM(event_type)) AS h FROM ev_ext")

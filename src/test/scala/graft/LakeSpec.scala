@@ -15,7 +15,7 @@ class LakeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("readRange prunes day partitions at the scan") {
     val dir = Files.createTempDirectory("graft_lake").toString
-    val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
+    val ev = Tables.load(spark, testData("0.001"), "events")
     Lake.materializeByDay(ev, "ts", dir)
 
     val allDays = spark.read.parquet(dir).select(col("day")).distinct().count()
@@ -70,7 +70,7 @@ class LakeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // day partitions at planning time and push the residual filter into
     // the parquet scan, or the pull scans the whole bar history.
     val dir = Files.createTempDirectory("graft_bar_lake").toString
-    val bars = SparkEntry.benchQueries("q_bars_1s")(spark, "/root/testdata/sf0.001")
+    val bars = SparkEntry.benchQueries("q_bars_1s")(spark, testData("0.001"))
     Lake.materializeByDay(bars, "window_start", dir)
 
     val allDays = spark.read.parquet(dir).select(col("day")).distinct().count()

@@ -48,7 +48,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("live (complete/memory) and final (append/parquet) materializations serve pulls") {
     implicit val sqlCtx = spark.sqlContext
-    val ctx = new GraftContext(spark, TestEntities.catalog(spark, "/root/testdata/sf0.001"))
+    val ctx = new GraftContext(spark, TestEntities.catalog(spark, testData("0.001")))
     val root = Files.createTempDirectory("mat").toString
 
     val mem = MemoryStream[(String, Timestamp, Double)]

@@ -8,7 +8,7 @@ package graft
   */
 class PlanGuardSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = testData("0.001")
 
   private def physical(name: String): String =
     SparkEntry.benchQueries(name)(spark, dir).queryExecution.executedPlan.toString

@@ -25,7 +25,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("ANN recall floors: multi-table random-projection LSH and IVF vs exact") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     def topSet(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id")
@@ -68,7 +68,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("IVF with a single cell degenerates to exact brute-force top-k") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val oneCentroid = emb.filter($"vec_id" === 0)
       .select(lit(0).as("centroid_id"), $"embedding".as("centroid_vec"))
     val queries = emb.filter($"vec_id" < 3)
@@ -82,7 +82,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("native PqEncode and PqAdcDistance are value-identical to the composed forms") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val cbs = Similarity.codebooksFromRows(
       emb.filter(col("vec_id") < 8).orderBy("vec_id"), "embedding", m = 4)
     // encode: native tight loop vs literal-array struct fold
@@ -126,7 +126,7 @@ class SkewAndIvfSpec extends SparkSpec {
 
   test("PQ: ADC recall floor and full recovery via exact re-rank") {
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
     // exact L2 top-5 baseline
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
@@ -156,7 +156,7 @@ class SkewAndIvfSpec extends SparkSpec {
 
   test("IVF-PQ: residual codes + cell pruning, recall recovers with probes and re-rank") {
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val d = expr("aggregate(zip_with(qvec, embedding, (x,y) -> " +
@@ -185,7 +185,7 @@ class SkewAndIvfSpec extends SparkSpec {
 
   test("Lloyd's-trained codebooks beat sampled-row codebooks at identical (m, k)") {
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val d = expr("aggregate(zip_with(qvec, embedding, (x,y) -> " +
@@ -239,7 +239,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("Lloyd's centroids partition into nlist cells deterministically") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val cents = Similarity.lloydCentroids(emb.orderBy("vec_id"), "embedding", nlist = 8)
     assert(cents.count() == 8)
     // every corpus vector lands in a valid cell
@@ -250,7 +250,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("int8 quantization: codes bounded, round-trip within scale/2, zero vector safe") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
       .union(Seq((99999L, Array.fill(8)(0.0f), 0)).toDF("vec_id", "embedding", "label"))
     val q = Similarity.quantizeInt8(emb, "vec_id", "embedding")
     val joined = emb.join(q, "vec_id")
@@ -272,7 +272,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("KMeans-trained centroids partition the corpus into nlist cells") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val centroids = Similarity.trainCentroidsKMeans(emb, "embedding", nlist = 4)
     assert(centroids.count() == 4)
     val topk = Similarity.ivfTopK(
@@ -282,7 +282,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("approx cell assignment: total, valid cells, high exact-agreement") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val cents = emb.filter($"vec_id" < 16)
       .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
     val exact = Similarity.assignCells(emb, cents, "embedding")
@@ -321,7 +321,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("ivfTopK with approx corpus assignment keeps rank contract and recall") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val q = emb.filter($"vec_id" < 10)
     val cents = emb.filter($"vec_id" < 8)
       .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
@@ -340,7 +340,7 @@ class SkewAndIvfSpec extends SparkSpec {
   }
 
   test("scaled hard negatives (approx assignment) keep the k and label contracts") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val emb = Tables.load(spark, testData("0.001"), "embeddings")
     val cents = emb.filter($"vec_id" < 12)
       .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
     val out = Similarity

@@ -49,7 +49,7 @@ class TokenizerSpec extends SparkSpec {
 
   test("token concatenation reconstructs each word on real documents") {
     val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
+      .parquet(s"${testData("0.001")}/documents.parquet")
       .limit(200)
     val model = Tokenizer.train(docs, "text", numMerges = 50, vocabCap = 4096)
     val bad = Tokenizer

@@ -2,12 +2,10 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.sources.{Lake, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** [[Lake.read]] — the parquet read without a schema-inference job —
   * against Spark's own reader: same schema, same rows on every testdata
@@ -18,7 +16,7 @@ import java.util.concurrent.atomic.AtomicInteger
 class LakeReadSpec extends SparkSpec {
   import spark.implicits._
 
-  private val sfDir = "/root/testdata/sf0.01"
+  private val sfDir = testData("0.01")
 
   private def assertSameRead(path: String): Unit = {
     val fast = Lake.read(spark, path)
@@ -75,38 +73,10 @@ class LakeReadSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_lake_jobs").resolve("bm25").toString
     IncrementalBm25.ingestBatch(spark, Seq((1L, "alpha beta")).toDF("doc_id", "text"), dir,
       batchId = Some(0L))
-    // count only this thread's jobs (its job group): a query another
-    // suite left running cannot leak into the count
-    val group = "graft-lake-read"
-    val sentinel = "sentinel"
-    val jobs = new AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (p.exists(_.getProperty("spark.job.description") == sentinel))
-            sentinelSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "Lake.read job count")
-    try {
+    val jobs = jobsOf {
       Tables.names.foreach(Tables.load(spark, sfDir, _))
       IncrementalBm25.load(spark, dir)
-      // listener events arrive in order: once the sentinel job's start
-      // is seen, every job started before it has been counted
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1)).count()
-      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
     }
-    assert(jobs.get == 0, s"${jobs.get} jobs started while building the DataFrames")
+    assert(jobs == 0, s"$jobs jobs started while building the DataFrames")
   }
 }

@@ -1,16 +1,20 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.sources.Lake
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** The shared store-loop engine ([[StoreLoop]]) over all nine stores:
-  * the sized stamped append, and exactly-once across a restart whose
-  * first trigger re-delivers a batch that already reached the store.
+  * the stamped append (its file sizing, its empty batch, its job
+  * count), a failed SCD2 append's pin, and exactly-once across a
+  * restart whose first trigger re-delivers a batch that already reached
+  * the store.
   */
 class StoreLoopSpec extends SparkSpec {
   import spark.implicits._
@@ -43,64 +47,66 @@ class StoreLoopSpec extends SparkSpec {
   private case class Store(
       name: String,
       attach: (DataFrame, String, String) => StreamingQuery,
-      ingest: (DataFrame, String, Long) => Unit,
+      ingest: (DataFrame, String, Long, Boolean) => Unit,
       dirs: String => Seq[String],
       seed: String => Unit = _ => ())
 
   private def single(
       name: String,
       attach: (DataFrame, String, Option[String]) => StreamingQuery,
-      ingest: (DataFrame, String, Long) => Unit
+      ingest: (DataFrame, String, Long, Boolean) => Unit
   ): Store =
     Store(name, (in, root, chk) => attach(in, s"$root/$name", Some(chk)),
-      (b, root, bid) => ingest(b, s"$root/$name", bid), root => Seq(s"$root/$name"))
+      (b, root, bid, probe) => ingest(b, s"$root/$name", bid, probe), root => Seq(s"$root/$name"))
 
   private val stores: Seq[Store] = Seq(
     single("bm25",
       (in, dir, chk) => IncrementalBm25.attach(in, dir, checkpointLocation = chk),
-      (b, dir, bid) => IncrementalBm25.ingestBatch(spark, b, dir, batchId = Some(bid))),
+      (b, dir, bid, probe) => IncrementalBm25.ingestBatch(spark, b, dir, batchId = Some(bid),
+        probeReplay = probe)),
     single("hll",
       (in, dir, chk) => IncrementalSketches.attach(in, dir, Seq("source"), "text",
         checkpointLocation = chk),
-      (b, dir, bid) => IncrementalSketches.ingestBatch(spark, b, dir, Seq("source"), "text",
-        batchId = Some(bid))),
+      (b, dir, bid, probe) => IncrementalSketches.ingestBatch(spark, b, dir, Seq("source"), "text",
+        batchId = Some(bid), probeReplay = probe)),
     single("kll",
       (in, dir, chk) => IncrementalSketches.attachQuantiles(in, dir, Seq("source"), "v",
         checkpointLocation = chk),
-      (b, dir, bid) => IncrementalSketches.ingestQuantilesBatch(spark, b, dir, Seq("source"),
-        "v", batchId = Some(bid))),
+      (b, dir, bid, probe) => IncrementalSketches.ingestQuantilesBatch(spark, b, dir, Seq("source"),
+        "v", batchId = Some(bid), probeReplay = probe)),
     single("manifest",
       (in, dir, chk) => IncrementalManifest.attach(in, dir, "doc_id", Seq("doc_id", "text"),
         nShards = 4, seed = "s", checkpointLocation = chk),
-      (b, dir, bid) => IncrementalManifest.ingestBatch(spark, b, dir, "doc_id",
-        Seq("doc_id", "text"), nShards = 4, seed = "s", batchId = Some(bid))),
+      (b, dir, bid, probe) => IncrementalManifest.ingestBatch(spark, b, dir, "doc_id",
+        Seq("doc_id", "text"), nShards = 4, seed = "s", batchId = Some(bid),
+        probeReplay = probe)),
     single("graph",
       (in, dir, chk) => IncrementalGraph.attach(in, dir, "doc_id", "dst",
         checkpointLocation = chk),
-      (b, dir, bid) => IncrementalGraph.ingestBatch(spark, b, dir, "doc_id", "dst",
-        batchId = Some(bid))),
+      (b, dir, bid, probe) => IncrementalGraph.ingestBatch(spark, b, dir, "doc_id", "dst",
+        batchId = Some(bid), probeReplay = probe)),
     single("ann",
       (in, dir, chk) => IncrementalAnn.attach(in, dir, centroids, "doc_id", "embedding",
         checkpointLocation = chk),
-      (b, dir, bid) => IncrementalAnn.ingestBatch(spark, b, dir, centroids, "doc_id",
-        "embedding", batchId = Some(bid))),
+      (b, dir, bid, probe) => IncrementalAnn.ingestBatch(spark, b, dir, centroids, "doc_id",
+        "embedding", batchId = Some(bid), probeReplay = probe)),
     single("selection",
       (in, dir, chk) => IncrementalSelection.attach(in, dir, "text", col("doc_id") % 3 === 0,
         buckets = 32, checkpointLocation = chk),
-      (b, dir, bid) => IncrementalSelection.ingestBatch(spark, b, dir, "text",
-        col("doc_id") % 3 === 0, buckets = 32, batchId = Some(bid))),
+      (b, dir, bid, probe) => IncrementalSelection.ingestBatch(spark, b, dir, "text",
+        col("doc_id") % 3 === 0, buckets = 32, batchId = Some(bid), probeReplay = probe)),
     Store("scd2",
       (in, root, chk) => IncrementalScd2.attach(in, s"$root/scd2", Seq("k"), "ts", Seq("attr"),
         Seq("doc_id"), checkpointLocation = Some(chk)),
-      (b, root, bid) => IncrementalScd2.ingestBatch(spark, b, s"$root/scd2", Seq("k"), "ts",
-        Seq("attr"), Seq("doc_id"), batchId = Some(bid)),
+      (b, root, bid, probe) => IncrementalScd2.ingestBatch(spark, b, s"$root/scd2", Seq("k"),
+        "ts", Seq("attr"), Seq("doc_id"), batchId = Some(bid), probeReplay = probe),
       root => Seq(s"$root/scd2", IncrementalScd2.openDir(s"$root/scd2"))),
     // the dedup stores keep (id, text) rows: one schema across seed and appends
     Store("dedup",
       (in, root, chk) => IncrementalDedup.attach(in.select("doc_id", "text"),
         s"$root/corpus", s"$root/bands", checkpointLocation = Some(chk)),
-      (b, root, bid) => IncrementalDedup.ingestBatch(spark, b.select("doc_id", "text"),
-        s"$root/corpus", s"$root/bands", batchId = Some(bid)),
+      (b, root, bid, probe) => IncrementalDedup.ingestBatch(spark, b.select("doc_id", "text"),
+        s"$root/corpus", s"$root/bands", batchId = Some(bid), probeReplay = probe),
       root => Seq(s"$root/corpus", s"$root/bands"),
       seed = root => IncrementalDedup.seed(
         Seq((1000L, "seed document with a handful of words that no slice ever repeats"))
@@ -111,13 +117,102 @@ class StoreLoopSpec extends SparkSpec {
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
 
+  /** The six stores that append through [[StoreLoop.appendStamped]]. */
+  private lazy val stamped =
+    stores.filter(s => Set("bm25", "hll", "kll", "manifest", "graph", "ann")(s.name))
+
   test("a 4-partition micro-batch appends exactly one parquet file (six stamped-append stores)") {
     val root = Files.createTempDirectory("graft_storeloop_append").toString
     val batch = slice(0).repartition(4)
     assert(batch.rdd.getNumPartitions == 4)
-    val files = stores.filter(s => Set("bm25", "hll", "kll", "manifest", "graph", "ann")(s.name))
-      .map { s => s.ingest(batch, root, 0L); s.name -> parquetFiles(s"$root/${s.name}") }
+    val files = stamped
+      .map { s => s.ingest(batch, root, 0L, true); s.name -> parquetFiles(s"$root/${s.name}") }
     assert(files.size == 6 && files.forall(_._2 == 1), s"files per store after one append: $files")
+  }
+
+  test("an empty micro-batch appends no parquet file and publishes rows=0 (six stamped stores)") {
+    val root = Files.createTempDirectory("graft_storeloop_empty").toString
+    slice(1).write.parquet(s"$root/stage")
+    // empty by plan (the optimizer sees the limit) and empty only when
+    // it runs (a filter no row of the read passes)
+    val empties =
+      Seq(slice(1).limit(0), spark.read.parquet(s"$root/stage").filter(col("doc_id") < 0))
+    val events = new java.util.concurrent.CopyOnWriteArrayList[RuntimeEvent]()
+    val sink = new RuntimeEventSink { def publish(e: RuntimeEvent): Unit = events.add(e) }
+    RuntimeEventBus.addSink(sink)
+    try stamped.foreach { s =>
+      s.ingest(empties.head, s"$root/fresh", 0L, true)
+      assert(parquetFiles(s"$root/fresh/${s.name}") == 0, s"${s.name}: a fresh store got a file")
+      s.ingest(slice(0), root, 0L, true)
+      val before = parquetFiles(s"$root/${s.name}")
+      for ((empty, bid) <- empties.zip(Seq(1L, 2L))) {
+        s.ingest(empty, root, bid, bid == 1L)
+        assert(parquetFiles(s"$root/${s.name}") == before, s"${s.name}: batch $bid added a file")
+      }
+    } finally RuntimeEventBus.removeSink(sink)
+    for (s <- stamped; bid <- Seq(1L, 2L)) {
+      val rows = events.asScala.filter(e => e.name == "batch.ingested" &&
+        e.entity == s"$root/${s.name}" && e.batchId.contains(bid)).map(_.message.get)
+      assert(rows == Seq("rows=0"), s"${s.name} batch $bid published $rows")
+    }
+  }
+
+  test("the stamped append sizes its files from the plan estimate, at most shuffle partitions") {
+    val t = BigInt(Lake.TargetFileBytes)
+    assert(StoreGuard.estimatedParts(Some(BigInt(0)), 4) == 1)
+    assert(StoreGuard.estimatedParts(Some(BigInt(2048)), 4) == 1)
+    assert(StoreGuard.estimatedParts(Some(t), 4) == 1)
+    assert(StoreGuard.estimatedParts(Some(t + 1), 4) == 2)
+    assert(StoreGuard.estimatedParts(Some(3 * t), 8) == 3)
+    assert(StoreGuard.estimatedParts(Some(100 * t), 8) == 8)
+    assert(StoreGuard.estimatedParts(Some(t * t), 200) == 200)
+    // an unknown estimate is one file, whatever the cap
+    assert(StoreGuard.estimatedParts(None, 1) == 1)
+    assert(StoreGuard.estimatedParts(None, 200) == 1)
+
+    assert(StoreGuard.sizeEstimate(slice(0)).exists(_ < t))
+    // a frame over an RDD: Spark cannot measure it, and a projection
+    // above it scales the unknown size down, but it is still unknown
+    val overRdd = spark.sparkContext.parallelize(0 until 48, 8)
+      .map(i => (i.toLong, ((i * 5 + 3) % 17).toLong)).toDF("doc_id", "dst")
+    assert(StoreGuard.sizeEstimate(overRdd).isEmpty)
+    assert(StoreGuard.sizeEstimate(overRdd.select(col("doc_id"))).isEmpty)
+  }
+
+  test("a batch with no size estimate appends one file, not one per input partition") {
+    val dir = Files.createTempDirectory("graft_storeloop_rdd").resolve("graph").toString
+    val batch = spark.sparkContext.parallelize(0 until 48, 8)
+      .map(i => (i.toLong, ((i * 5 + 3) % 17).toLong)).toDF("doc_id", "dst")
+    assert(batch.rdd.getNumPartitions == 8)
+    IncrementalGraph.ingestBatch(spark, batch, dir, "doc_id", "dst", batchId = Some(0L))
+    assert(parquetFiles(dir) == 1)
+    assert(Lake.read(spark, dir).count() == 48)
+  }
+
+  test("one fresh-id stamped append runs a fixed number of Spark jobs: no count, no cache") {
+    val root = Files.createTempDirectory("graft_storeloop_jobs").toString
+    stamped.foreach(_.ingest(slice(0), root, 0L, true))
+    val jobs = stamped.map(s => s.name -> jobsOf(s.ingest(slice(1), root, 1L, false))).toMap
+    // the persist + count + sized write this replaced ran 5, 5, 5, 7, 4
+    // and 6. Graph and ann plans run narrow from their source, so the
+    // write cuts them after a round-robin exchange: one job more than a
+    // plain write
+    assert(jobs == Map("bm25" -> 2, "hll" -> 2, "kll" -> 2, "manifest" -> 4, "graph" -> 2,
+      "ann" -> 4), s"jobs per append: $jobs")
+  }
+
+  test("a failed SCD2 append releases its pin: nothing stays cached") {
+    val root = Files.createTempDirectory("graft_storeloop_scd2_fail").toString
+    val scd2 = stores.find(_.name == "scd2").get
+    scd2.ingest(slice(0), root, 0L, true)
+    // the version log becomes a regular file: the head append lands,
+    // the log append after it throws
+    val log = Paths.get(root, "scd2")
+    Files.walk(log).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    Files.createFile(log)
+    spark.catalog.clearCache()
+    intercept[Exception](scd2.ingest(slice(1), root, 1L, false))
+    assert(spark.sharedState.cacheManager.isEmpty, "the failed batch is still cached")
   }
 
   // ---- restart with a replayed batch -------------------------------------
@@ -168,7 +263,7 @@ class StoreLoopSpec extends SparkSpec {
       store.seed(crash)
       run(store, crash, 0 until crashed)
       val file = publish(crash, crashed)
-      store.ingest(spark.read.schema(schema).parquet(file), crash, crashed.toLong)
+      store.ingest(spark.read.schema(schema).parquet(file), crash, crashed.toLong, true)
       run(store, crash, crashed until slices)
 
       for ((c, r) <- store.dirs(clean).zip(store.dirs(crash))) {
