@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE SHORT JSON summary line on stdout
   * (total seconds, query count, failures). The per-query seconds map is
   * written to BENCH_LAST.json only — stdout consumers keep a bounded
-  * tail, and the full 87-query map does not fit it.
+  * tail, and the full 87-query map does not fit it. Every timed run
+  * also leaves one row of its [[Profile]] totals in BENCH_LAYERS_<sf>.tsv.
   *
   * Measurement protocol (BASELINE.md): the [[GraftSession]] session
   * (local[cores], shuffle partitions = cores, AQE on, UTC), noop-format
@@ -14,6 +17,14 @@ package graft
   * JVM/codegen init.
   */
 object Bench {
+  // The settle rule (ROADMAP item 4b): re-time a query whose in-suite
+  // time exceeds SettleTrigger × its reference, SettleRepeat times. The
+  // trigger went 1.5 → 1.3 in r19: two rounds running, >1.3× movers
+  // (q_classifier_auc_trained 1.39×, then q_graph_harmonic 1.49×) sat
+  // just under the old trigger and never got a verdict.
+  private val SettleTrigger = 1.3
+  private val SettleRepeat = 5
+
   def main(args: Array[String]): Unit = {
     // Spark writes startup banners ("Setting default log level...") to
     // stdout, which breaks the driver's parse of the one-line JSON
@@ -25,10 +36,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
 
-    // warm-up: JVM + codegen + file listing, outside the timings
-    graft.sources.Tables.names.foreach { t =>
-      graft.sources.Tables.load(spark, sfDir, t).count()
-    }
+    warmUp(spark, sfDir)
 
     // SPARK_GRAFT_ONLY=q_a,q_b limits the run (local iteration on a hot
     // query); SPARK_GRAFT_REPEAT=n re-times each query n times and keeps
@@ -64,135 +72,55 @@ object Bench {
                 catch { case scala.util.control.NonFatal(_) => "" })
         },
       sfDir, cores)
-    // SPARK_GRAFT_DIAG=true: decompose each query's FIRST-run cost into
-    // task work vs driver/JVM overhead (guide §1 — measure before
-    // optimizing the suite's dominant term, the per-query first-run
-    // overhead). Pure measurement: the timed region is unchanged; the
-    // per-query deltas land in SPARK_GRAFT_DIAG_OUT
-    // (default /tmp/bench_diag.tsv), never on stdout.
-    val diag = sys.env.get("SPARK_GRAFT_DIAG").exists(v => v == "1" || v == "true")
-    val diagListener = if (diag) {
-      val l = new org.apache.spark.scheduler.SparkListener {
-        val jobs, stages, tasks, runMs, cpuNs, taskGcMs = new java.util.concurrent.atomic.AtomicLong
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          stages.incrementAndGet()
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          tasks.incrementAndGet()
-          val m = t.taskMetrics
-          if (m != null) {
-            runMs.addAndGet(m.executorRunTime)
-            cpuNs.addAndGet(m.executorCpuTime)
-            taskGcMs.addAndGet(m.jvmGCTime)
-          }
-        }
-        def reset(): Unit = Seq(jobs, stages, tasks, runMs, cpuNs, taskGcMs).foreach(_.set(0))
-      }
-      spark.sparkContext.addSparkListener(l)
-      Some(l)
-    } else None
-    val diagRows = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Catalyst phase decomposition (r20): per-executed-query analysis /
-    // optimization / physical-planning driver time, summed per bench
-    // query via a QueryExecutionListener. Diag-only — the listener is
-    // not registered in timed runs.
-    val phaseMs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
-    def phaseGet(k: String): Long = Option(phaseMs.get(k)).map(_.get).getOrElse(0L)
-    if (diag) spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.tracker.phases.foreach { case (phase, summary) =>
-          phaseMs.computeIfAbsent(phase, _ => new java.util.concurrent.atomic.AtomicLong)
-            .addAndGet(summary.durationMs)
-        }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    })
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def gcTotalMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(_.getCollectionTime).sum
-    }
-    def cgCount: Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def cgSrcBytes: Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount *
-        org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE
-          .getSnapshot.getMean.toLong
-    val selected = SparkEntry.benchQueries.toSeq
-      .sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    val results = selected.map { case (name, fn) =>
-      // A failed run must not win min() with its (fast) time-to-throw:
-      // only successful runs are timed; a query with zero successes is
-      // reported in "failed", not in "queries".
-      diagListener.foreach(_.reset())
-      val (jit0, gc0, cg0) = if (diag) (jitBean.getTotalCompilationTime, gcTotalMs, cgCount) else (0L, 0L, 0L)
-      val (an0, op0, pl0) =
-        if (diag) (phaseGet("analysis"), phaseGet("optimization"), phaseGet("planning"))
-        else (0L, 0L, 0L)
-      val times = (1 to repeat).flatMap { _ =>
+    // Every timed run leaves one layer row, keyed by (query, run), in
+    // BENCH_LAYERS_<sf>.tsv next to BENCH_LAST_<sf>.json: the Profile
+    // totals of the run's window (jobs/stages/tasks, task run vs CPU ms,
+    // shuffle/input/spill/read bytes, Catalyst phases, JIT/GC, codegen).
+    // The window opens and closes outside the timed region.
+    val profile = Profile.of(spark)
+    val layers = scala.collection.mutable.ArrayBuffer.empty[String]
+    // A failed run must not win min() with its (fast) time-to-throw:
+    // only successful runs are timed (None otherwise).
+    def timeRun(name: String, fn: (SparkSession, String) => DataFrame, run: String): Option[Double] = {
+      val (secs, cost) = profile.window {
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
           case e: Throwable =>
-            System.err.println(s"[bench] $name failed: $e"); None
+            System.err.println(s"[bench] $name (run $run) failed: $e"); None
         }
       }
-      diagListener.foreach { l =>
-        Thread.sleep(120) // listener bus drain — diag runs are not timing truth
-        diagRows += f"$name\t${times.minOption.getOrElse(-1.0)}%.3f\t${l.jobs.get}\t${l.stages.get}\t${l.tasks.get}\t${l.runMs.get}\t${l.cpuNs.get / 1000000}\t${l.taskGcMs.get}\t${jitBean.getTotalCompilationTime - jit0}\t${gcTotalMs - gc0}\t${cgCount - cg0}\t${phaseGet("analysis") - an0}\t${phaseGet("optimization") - op0}\t${phaseGet("planning") - pl0}"
-      }
-      name -> times.minOption
+      layers += f"$name\t$run\t${secs.getOrElse(-1.0)}%.3f\t${cost.tsv}"
+      secs
     }
-    if (diag) {
-      val out = sys.env.getOrElse("SPARK_GRAFT_DIAG_OUT", "/tmp/bench_diag.tsv")
-      val header = "query\twall_s\tjobs\tstages\ttasks\ttask_run_ms\ttask_cpu_ms\ttask_gc_ms\tjit_ms\tgc_ms\tcg_units\tanalysis_ms\toptimization_ms\tplanning_ms"
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(out),
-        (header +: diagRows).mkString("", "\n", "\n").getBytes("UTF-8"))
-      System.err.println(s"[bench] diag written to $out (cg source bytes ~ $cgSrcBytes)")
+    val selected = SparkEntry.benchQueries.toSeq
+      .sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // a query with zero successes is reported in "failed", not in "queries"
+    val results = selected.map { case (name, fn) =>
+      name -> (1 to repeat).flatMap(i => timeRun(name, fn, i.toString)).minOption
     }
     val ok = results.collect { case (k, Some(v)) => k -> v }
     val failed = results.collect { case (k, None) => k }
 
     // Settle pass (BASELINE.md mover protocol, automated): any query
-    // whose in-suite time regressed >1.5× vs the reference run is
-    // re-timed warm in this same JVM (min of SETTLE_REPEAT runs) — the
+    // whose in-suite time regressed >SettleTrigger× vs the reference run
+    // is re-timed warm in this same JVM (min of SettleRepeat runs) — the
     // hand re-runs of rounds 13-15 showed such movers are almost always
     // suite interference (GC, codegen-cache pressure from neighbors),
     // and the warm-solo minimum is the honest steady-state number. Both
     // values land in the JSON so the round capture needs no manual pass.
     // Skipped when REPEAT>1 (already steady-state) or under ONLY.
-    val settleRepeat = sys.env.getOrElse("SPARK_GRAFT_SETTLE_REPEAT", "5").toInt
-    // Trigger lowered 1.5 → 1.3 (r19; the r18 verdict's ask): two rounds
-    // running, >1.3× movers (q_classifier_auc_trained 1.39×, then
-    // q_graph_harmonic 1.49×) sat just under the old trigger and never
-    // got a verdict while every stamped mover settled `interference`.
-    // Override: SPARK_GRAFT_SETTLE_TRIGGER.
-    val settleTrigger =
-      sys.env.getOrElse("SPARK_GRAFT_SETTLE_TRIGGER", "1.3").toDouble
     val settled: Seq[(String, Double, Double, Double)] =
-      if (repeat > 1 || only.isDefined || settleRepeat <= 0) Seq.empty
+      if (repeat > 1 || only.isDefined) Seq.empty
       else ok.flatMap { case (name, inSuite) =>
         refQueries.get(name).collect {
-          case ref if ref > 0 && inSuite > settleTrigger * ref =>
+          case ref if ref > 0 && inSuite > SettleTrigger * ref =>
             val fn = SparkEntry.benchQueries(name)
-            val times = (1 to settleRepeat).flatMap { _ =>
-              val t0 = System.nanoTime()
-              try {
-                fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                Some((System.nanoTime() - t0) / 1e9)
-              } catch {
-                case e: Throwable =>
-                  System.err.println(s"[bench] settle $name failed: $e"); None
-              }
-            }
-            times.minOption.map(solo => (name, inSuite, solo, ref))
+            (1 to SettleRepeat).flatMap(i => timeRun(name, fn, s"settle$i")).minOption
+              .map(solo => (name, inSuite, solo, ref))
         }.flatten
       }
     // Verdict per settled mover (r16 VERDICT Next #5): "interference"
@@ -200,8 +128,8 @@ object Bench {
     // (suite neighbors — GC, codegen cache — caused the in-suite blip),
     // "regression" when even solo stays above it. Tolerance 1.15×: the
     // warm-solo min still jitters a few percent run-to-run; movers whose
-    // solo lands in (1.15×, settleTrigger×] of the reference get a hard
-    // regression verdict — at the 1.3 default that band is narrow, and a
+    // solo lands in (1.15×, SettleTrigger×] of the reference get a hard
+    // regression verdict — at 1.3 that band is narrow, and a
     // genuine plan regression typically sits well above it (r19 ADVICE:
     // this comment used to claim such movers can't occur; they can, and
     // flagging them loudly is the point). A regression verdict is a FAILURE:
@@ -245,18 +173,27 @@ object Bench {
     // two copies: the legacy shared path (external consumers) AND the
     // per-sf stamp — so a later run at a DIFFERENT sf can neither
     // destroy this run's per-query evidence nor leave the next same-sf
-    // run referenceless (r19 VERDICT #1)
-    Seq(benchOut, benchOutPerSf).foreach { p =>
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(p),
-        (full + "\n").getBytes("UTF-8"))
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] file write failed ($p): $e")
-      }
+    // run referenceless (r19 VERDICT #1); the layer table sits beside
+    // the per-sf stamp
+    val layersOut = java.nio.file.Paths.get(benchOutPerSf)
+      .resolveSibling(s"BENCH_LAYERS_$sfName.tsv").toString
+    val layersTsv = (("query" +: "run" +: "wall_s" +: Profile.Columns).mkString("\t") +: layers)
+      .mkString("", "\n", "\n")
+    Seq(benchOut -> (full + "\n"), benchOutPerSf -> (full + "\n"), layersOut -> layersTsv).foreach {
+      case (p, text) =>
+        try java.nio.file.Files.write(java.nio.file.Paths.get(p), text.getBytes("UTF-8"))
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] file write failed ($p): $e")
+        }
     }
     spark.stop()
   }
+
+  /** JVM + codegen + file-listing warm-up, outside the timings: touches
+    * each table of `sfDir` so query 1 doesn't pay it. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    graft.sources.Tables.names.foreach(t => graft.sources.Tables.load(spark, sfDir, t).count())
 
   /** The settle reference for a run at `sfDir` on `cpus` cores: the
     * first of `candidates` ((path, file text), in preference order)

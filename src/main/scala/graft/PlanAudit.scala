@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
-import java.util.concurrent.atomic.AtomicLong
-
 /** Scan-duplication audit (BASELINE.md r15 open lead): a composed
   * operator whose STATIC plan references its base table N times is fine
   * when the repeats are pruned column reads or runtime-reused
@@ -18,10 +14,17 @@ import java.util.concurrent.atomic.AtomicLong
   *     plan, where runtime exchange/stage reuse has collapsed whatever
   *     Catalyst actually deduplicated (`ReusedExchange` /
   *     `ReusedQueryStage` markers counted alongside);
-  *   - scanned bytes: task-level `inputMetrics.bytesRead` summed over
-  *     the query's execution — the ground truth: N pruned scans of a
-  *     2-column slice cost less than one unpruned read, and a
-  *     duplicated shingle kernel shows up as bytes ≈ k× the table.
+  *   - scanned bytes: task-level `inputMetrics.bytesRead` (inputMB)
+  *     and the process's read-syscall bytes (ioMB; local parquet is read
+  *     through NIO, which inputMetrics misses) over the query's build and
+  *     execution — the ground truth: N pruned scans of a 2-column slice
+  *     cost less than one unpruned read, and a duplicated shingle kernel
+  *     shows up as bytes ≈ k× the table.
+  *
+  * jobs, bytes, spill and sec are one [[Profile]] window that opens
+  * before the frame is built and closes after it ran, the region Bench
+  * times after the same warm-up, so they match the query's row in
+  * Bench's layer table.
   *
   * Usage: `sbt "runMain graft.PlanAudit [sfDir] [minStaticScans|query...]"`
   * — with no query args, audits every bench query whose static scan
@@ -37,33 +40,8 @@ object PlanAudit {
     }
     val spark = GraftSession.local()
 
-    val bytesRead = new AtomicLong(0)
-    val memSpilled = new AtomicLong(0)
-    val diskSpilled = new AtomicLong(0)
-    // True process-level read bytes (r19/r20 carry: NIO-read local
-    // parquet bypasses Hadoop's FileSystem.Statistics, so
-    // inputMetrics.bytesRead reads ~0 here). local[n] runs driver and
-    // executors in ONE process, so /proc/self/io rchar deltas are the
-    // ground truth for "how many bytes did this query actually read" —
-    // including every duplicated-scan re-read. Includes shuffle-file
-    // and spill re-reads too (an upper bound on scan bytes, and exactly
-    // the number a scan-duplication audit wants to see multiply).
-    def procRchar(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/self/io")
-        try src.getLines().collectFirst {
-          case l if l.startsWith("rchar:") => l.stripPrefix("rchar:").trim.toLong
-        }.getOrElse(-1L)
-        finally src.close()
-      } catch { case scala.util.control.NonFatal(_) => -1L }
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-          memSpilled.addAndGet(t.taskMetrics.memoryBytesSpilled)
-          diskSpilled.addAndGet(t.taskMetrics.diskBytesSpilled)
-        }
-    })
+    val profile = Profile.of(spark)
+    Bench.warmUp(spark, sfDir)
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/tmp/plan_audit"))
 
@@ -80,31 +58,35 @@ object PlanAudit {
       else all.map(n => n -> (try staticScans(n) catch { case _: Throwable => -1 }))
         .filter(_._2 >= threshold).map(_._1)
 
-    println(f"${"query"}%-28s ${"static"}%6s ${"final"}%6s ${"reused"}%6s ${"inputMB"}%8s ${"ioMB"}%8s ${"spillMB"}%8s ${"sec"}%7s")
+    println(f"${"query"}%-28s ${"static"}%6s ${"final"}%6s ${"reused"}%6s ${"jobs"}%5s ${"inputMB"}%8s ${"ioMB"}%8s ${"spillMB"}%8s ${"sec"}%7s")
     targets.foreach { name =>
       try {
-        val df = SparkEntry.benchQueries(name)(spark, sfDir)
-        val qe = df.queryExecution
-        val stat = "Scan parquet".r
-          .findAllIn(qe.explainString(
-            org.apache.spark.sql.execution.FormattedMode)).size
-        bytesRead.set(0); memSpilled.set(0); diskSpilled.set(0)
-        // ONE distributed materialization serves both the timing and the
+        // The window opens before the frame is built, as Bench times
+        // fn(spark, sfDir) plus the write: an iterative operator runs its
+        // per-round checkpoint jobs while the frame is built. ONE
+        // distributed materialization serves both the timing and the
         // final-plan rendering: toRdd.foreach executes the full adaptive
         // plan without pulling a row onto the driver (a row-heavy
         // candidate-pair query would OOM a full executeCollect, r16
         // ADVICE), and the SAME QueryExecution then renders with its
-        // runtime-reused stages visible. At sf1000 scale the former
-        // two-execution shape doubled a 17-minute query.
-        val io0 = procRchar()
-        val t0 = System.nanoTime()
-        qe.toRdd.foreach(_ => ())
-        val sec = (System.nanoTime() - t0) / 1e9
-        // a listener race can trail the action by a beat
-        Thread.sleep(200)
-        val ioMb = if (io0 < 0) -1.0 else (procRchar() - io0) / 1e6
-        val mb = bytesRead.get() / 1e6
-        val spillMb = diskSpilled.get() / 1e6
+        // runtime-reused stages visible (at sf1000 scale the former
+        // two-execution shape doubled a 17-minute query). The clock stops
+        // only while the planned, not yet executed, plan is rendered for
+        // the static count.
+        val ((qe, stat, sec), cost) = profile.window {
+          val t0 = System.nanoTime()
+          val qe = SparkEntry.benchQueries(name)(spark, sfDir).queryExecution
+          qe.executedPlan
+          val planned = System.nanoTime()
+          val stat = "Scan parquet".r
+            .findAllIn(qe.explainString(
+              org.apache.spark.sql.execution.FormattedMode)).size
+          val t1 = System.nanoTime()
+          qe.toRdd.foreach(_ => ())
+          (qe, stat, (planned - t0 + System.nanoTime() - t1) / 1e9)
+        }
+        def mb(column: String): Double = cost(column) / 1e6
+        val ioMb = if (cost("read_bytes") < 0) -1.0 else mb("read_bytes")
         val fin = qe.executedPlan.toString
         val finScans = "Scan parquet".r.findAllIn(fin).size
         val reused = "Reused".r.findAllIn(fin).size
@@ -113,8 +95,8 @@ object PlanAudit {
           (qe.explainString(
             org.apache.spark.sql.execution.FormattedMode) + "\n\n===== FINAL =====\n" + fin)
             .getBytes("UTF-8"))
-        println(f"$name%-28s $stat%6d $finScans%6d $reused%6d $mb%8.1f $ioMb%8.1f $spillMb%8.1f $sec%7.2f" +
-          (if (memSpilled.get() > 0) f"  (mem-spill ${memSpilled.get() / 1e6}%.0f MB)" else ""))
+        println(f"$name%-28s $stat%6d $finScans%6d $reused%6d ${cost("jobs")}%5d ${mb("input_bytes")}%8.1f $ioMb%8.1f ${mb("disk_spill_bytes")}%8.1f $sec%7.2f" +
+          (if (cost("memory_spill_bytes") > 0) f"  (mem-spill ${mb("memory_spill_bytes")}%.0f MB)" else ""))
       } catch {
         case e: Throwable =>
           println(f"$name%-28s FAILED: ${String.valueOf(e.getMessage).take(80)}")

@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.GraftSession
+import graft.{GraftSession, Profile}
 import graft.sources.Tables
 import graft.streaming.IncrementalGraph
 import org.apache.spark.sql.functions._
@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * feed crawl slices (id-range partitions of the deterministic
   * documents link graph) through `ingestBatch` and print, while the
   * accumulated store grows:
-  *   - per-batch WALL seconds and scan BYTES (`/proc/self/io` rchar
-  *     deltas) for the store's O(batch) stamped append;
+  *   - per-batch WALL seconds and scan BYTES ([[graft.Profile]] read bytes
+  *     window) for the store's O(batch) stamped append;
   *   - the same for the naive arm a pipeline without the store pays —
   *     re-derive the edge set from EVERY document crawled so far and
   *     rewrite the graph (O(accumulated corpus) per batch);
@@ -35,13 +35,14 @@ object GraphIngestionScale {
     val batches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "6").toInt
     val spark = GraftSession.local()
 
-    def rchar(): Long =
-      scala.io.Source.fromFile("/proc/self/io").getLines()
-        .find(_.startsWith("rchar:")).map(_.split(" ")(1).toLong).getOrElse(0L)
+    val profile = Profile.of(spark)
     def timedMb[A](body: => A): (A, Double, Double) = {
-      val r0 = rchar(); val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9, (rchar() - r0) / 1e6)
+      val ((a, secs), cost) = profile.window {
+        val t0 = System.nanoTime()
+        val a = body
+        (a, (System.nanoTime() - t0) / 1e9)
+      }
+      (a, secs, cost("read_bytes") / 1e6)
     }
 
     val root = java.nio.file.Files.createTempDirectory("graft_graph_scale").toString

@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.GraftSession
+import graft.{GraftSession, Profile}
 import graft.operators.Dedup
 import graft.sources.Tables
 import graft.streaming.IncrementalDedup
@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   *     full-scan shape on the same snapshot. Flat pruned bytes vs
   *     linearly-growing full-scan bytes is the direct evidence that the
   *     verify stage's last O(|corpus|) term is gone.
-  * Bytes are `/proc/self/io` `rchar` deltas (all read syscalls of the
-  * single local-mode JVM) around each isolated fetch — Spark 4 reads
-  * local parquet through NIO (`LocalInputFile`), bypassing both
-  * task-level `inputMetrics.bytesRead` and Hadoop FS statistics, so
-  * syscall accounting is the only counter that sees the scan. Nothing
+  * Bytes are [[graft.Profile]] `read_bytes` windows (`/proc/self/io`
+  * `rchar`: all read syscalls of the single local-mode JVM) around each
+  * isolated fetch — Spark 4 reads local parquet through NIO
+  * (`LocalInputFile`), bypassing both task-level
+  * `inputMetrics.bytesRead` and Hadoop FS statistics, so syscall
+  * accounting is the only counter that sees the scan. Nothing
   * else runs concurrently, so the delta attributes cleanly; it includes
   * parquet footer reads (every file's footer is consulted for min/max
   * skipping), which is why the pruned arm grows slowly with FILE count
@@ -64,14 +65,8 @@ object IngestionScale {
     val batches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "5").toInt
     val spark = GraftSession.local()
 
-    def rchar(): Long =
-      scala.io.Source.fromFile("/proc/self/io").getLines()
-        .find(_.startsWith("rchar:")).map(_.split(" ")(1).toLong).getOrElse(0L)
-    def measureMb(body: => Unit): Double = {
-      val r0 = rchar()
-      body
-      (rchar() - r0) / 1e6
-    }
+    val profile = Profile.of(spark)
+    def measureMb(body: => Unit): Double = profile.window(body)._2("read_bytes") / 1e6
 
     val root = java.nio.file.Files.createTempDirectory("graft_ingest_scale").toString
     val corpusDir = s"$root/corpus"

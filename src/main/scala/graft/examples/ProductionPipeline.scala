@@ -1,12 +1,9 @@
 package graft.examples
 
-import graft.GraftSession
+import graft.{GraftSession, Profile}
 import graft.operators.{Classifier, Curation, Dedup, HashFamily, Selection, Similarity, TextAnalysis, Tokenizer}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.atomic.AtomicLong
 
 /** The INTEGRATED production sequence measured end-to-end — what a
   * training-data team actually runs as one job chain, not the
@@ -43,54 +40,37 @@ import java.util.concurrent.atomic.AtomicLong
   * pipeline cannot legally fuse past them — the segment boundaries ARE
   * the driver-model fits (band plan, cluster loop, unigram EM).
   *
-  * Per-stage Spark metrics come from a stage-completion listener
-  * (shuffle read/write, scan input, disk spill) — the numbers BASELINE.md
-  * records for the 100 TB extrapolation.
+  * Per-stage Spark metrics are [[Profile]] windows (shuffle read/write,
+  * scan input, disk spill) — the numbers BASELINE.md records for the
+  * 100 TB extrapolation.
   *
   * Run: `sbt "runMain graft.examples.ProductionPipeline <sfDir> <workDir>"`
   */
 object ProductionPipeline {
 
-  final class StageMetrics extends SparkListener {
-    val shuffleWrite = new AtomicLong
-    val shuffleRead = new AtomicLong
-    val input = new AtomicLong
-    val spilled = new AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        input.addAndGet(m.inputMetrics.bytesRead)
-        spilled.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit = Seq(shuffleWrite, shuffleRead, input, spilled).foreach(_.set(0))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val spark = GraftSession.local()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val profile = Profile.of(spark)
     spark.sparkContext.setCheckpointDir(s"$work/checkpoints")
 
-    val rows = scala.collection.mutable.ListBuffer.empty[(String, Double, Long, Long, Long, Long, Long)]
-    def mb(b: Long): Double = b / 1e6
+    val rows = scala.collection.mutable.ListBuffer.empty[(String, Double, Long, Profile.Totals)]
+    def mb(cost: Profile.Totals, column: String): Double = cost(column) / 1e6
+    def traffic(cost: Profile.Totals): String =
+      f"shufW ${mb(cost, "shuffle_write_bytes")}%8.1f MB  shufR ${mb(cost, "shuffle_read_bytes")}%8.1f MB  " +
+        f"scan ${mb(cost, "input_bytes")}%8.1f MB"
     def stage(name: String)(body: => DataFrame): DataFrame = {
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val out = body
-      out.write.mode("overwrite").parquet(s"$work/$name.parquet")
-      val secs = (System.nanoTime() - t0) / 1e9
-      val back = spark.read.parquet(s"$work/$name.parquet")
-      val n = back.count()
-      rows += ((name, secs, n, metrics.shuffleWrite.get, metrics.shuffleRead.get,
-        metrics.input.get, metrics.spilled.get))
-      println(f"[stage] $name%-22s $secs%8.2f s  $n%9d rows  " +
-        f"shufW ${mb(metrics.shuffleWrite.get)}%8.1f MB  shufR ${mb(metrics.shuffleRead.get)}%8.1f MB  " +
-        f"scan ${mb(metrics.input.get)}%8.1f MB  spill ${mb(metrics.spilled.get)}%6.1f MB")
+      val ((secs, back, n), cost) = profile.window {
+        val t0 = System.nanoTime()
+        body.write.mode("overwrite").parquet(s"$work/$name.parquet")
+        val secs = (System.nanoTime() - t0) / 1e9
+        val back = spark.read.parquet(s"$work/$name.parquet")
+        (secs, back, back.count())
+      }
+      rows += ((name, secs, n, cost))
+      println(f"[stage] $name%-22s $secs%8.2f s  $n%9d rows  ${traffic(cost)}  " +
+        f"spill ${mb(cost, "disk_spill_bytes")}%6.1f MB")
       back
     }
 
@@ -275,32 +255,32 @@ object ProductionPipeline {
     // IncrementalManifest store rollup must agree cell-for-cell —
     // order-independent bit_xor checksums make that a set equality.
     {
-      metrics.reset()
-      val t10 = System.nanoTime()
       val nShards = sys.env.getOrElse("SPARK_GRAFT_SHARDS", "256").toInt
-      val shardsDir = s"$work/shards"
-      val manStore = s"$work/manifest_store"
-      val shardSrc = d6.select(col("doc_id"), col("text"), col("source"), col("n_tokens"))
-      val pre = graft.sources.Lake.writeTrainingShards(
-        shardSrc, "doc_id", Seq("doc_id", "text"), shardsDir, nShards,
-        seed = "pp16", tokenCol = Some("n_tokens"), family = HashFamily.XxHash64)
-        .collect().map(_.toString).sorted
-      graft.streaming.IncrementalManifest.seed(
-        shardSrc, manStore, "doc_id", Seq("doc_id", "text"), nShards,
-        seed = "pp16", tokenCol = Some("n_tokens"), family = HashFamily.XxHash64)
-      val secs10 = (System.nanoTime() - t10) / 1e9
-      val readBack = graft.sources.Lake.shardManifest(
-        spark.read.parquet(shardsDir).drop("shard"),
-        "doc_id", Seq("doc_id", "text"), nShards,
-        seed = "pp16", tokenCol = Some("n_tokens"), family = HashFamily.XxHash64)
-        .collect().map(_.toString).sorted
-      val live = graft.streaming.IncrementalManifest.manifest(spark, manStore)
-        .drop(graft.streaming.IncrementalManifest.BatchCol)
-        .collect().map(_.toString).sorted
-      val verified = pre.sameElements(readBack) && pre.sameElements(live)
-      val nDocs10 = spark.read.parquet(shardsDir).count()
-      rows += (("s10_shards", secs10, nDocs10, metrics.shuffleWrite.get,
-        metrics.shuffleRead.get, metrics.input.get, metrics.spilled.get))
+      val ((secs10, nDocs10, verified), cost10) = profile.window {
+        val t10 = System.nanoTime()
+        val shardsDir = s"$work/shards"
+        val manStore = s"$work/manifest_store"
+        val shardSrc = d6.select(col("doc_id"), col("text"), col("source"), col("n_tokens"))
+        val pre = graft.sources.Lake.writeTrainingShards(
+          shardSrc, "doc_id", Seq("doc_id", "text"), shardsDir, nShards,
+          seed = "pp16", tokenCol = Some("n_tokens"), family = HashFamily.XxHash64)
+          .collect().map(_.toString).sorted
+        graft.streaming.IncrementalManifest.seed(
+          shardSrc, manStore, "doc_id", Seq("doc_id", "text"), nShards,
+          seed = "pp16", tokenCol = Some("n_tokens"), family = HashFamily.XxHash64)
+        val secs10 = (System.nanoTime() - t10) / 1e9
+        val readBack = graft.sources.Lake.shardManifest(
+          spark.read.parquet(shardsDir).drop("shard"),
+          "doc_id", Seq("doc_id", "text"), nShards,
+          seed = "pp16", tokenCol = Some("n_tokens"), family = HashFamily.XxHash64)
+          .collect().map(_.toString).sorted
+        val live = graft.streaming.IncrementalManifest.manifest(spark, manStore)
+          .drop(graft.streaming.IncrementalManifest.BatchCol)
+          .collect().map(_.toString).sorted
+        val verified = pre.sameElements(readBack) && pre.sameElements(live)
+        (secs10, spark.read.parquet(shardsDir).count(), verified)
+      }
+      rows += (("s10_shards", secs10, nDocs10, cost10))
       println(f"[stage] s10_shards          $secs10%8.2f s  $nDocs10%9d rows  " +
         f"$nShards shards; manifest pre==read-back==store: " +
         (if (verified) "IDENTICAL" else "MISMATCH"))
@@ -309,8 +289,9 @@ object ProductionPipeline {
 
     val wallStaged = (System.nanoTime() - tWall0) / 1e9
     println("\nstage | wall s | rows | shufW MB | shufR MB | scan MB | spill MB")
-    rows.foreach { case (n, s, r, w, rd, in, sp) =>
-      println(f"$n | $s%.2f | $r%d | ${mb(w)}%.1f | ${mb(rd)}%.1f | ${mb(in)}%.1f | ${mb(sp)}%.1f")
+    rows.foreach { case (n, s, r, c) =>
+      println(f"$n | $s%.2f | $r%d | " + Seq("shuffle_write_bytes", "shuffle_read_bytes",
+        "input_bytes", "disk_spill_bytes").map(k => f"${mb(c, k)}%.1f").mkString(" | "))
     }
     println(f"[total] staged end-to-end: $wallStaged%.1f s, " +
       f"input ${docs.count()}%d docs -> ${d9.count()}%d training examples")
@@ -319,30 +300,29 @@ object ProductionPipeline {
     // stage-5 parquet (the post-model segment is pure plan) — what the
     // staged form pays in parquet round-trips, and whether the composed
     // DAG shares the scan (audit with SPARK_GRAFT_EXPLAIN=1)
-    metrics.reset()
-    val tf0 = System.nanoTime()
-    val curatedStage =
-      if (sys.env.get("SPARK_GRAFT_SELECT").contains("1")) "s5b_model_select"
-      else "s5_decontaminate"
-    val curated = spark.read.parquet(s"$work/$curatedStage.parquet")
-    val toks = Tokenizer.tokenizeUnigram(curated, "text", model)
-      .select(col("doc_id"), col("source"), col("text"), col("tokens"), col("n_tokens"))
-    val packed = Curation.packSequences(toks, "doc_id", "source", "n_tokens", ctxTokens = 2048)
-    val mixed = Curation.mixCorpus(toks, "doc_id", "text", "source",
-      targets = Map.empty, defaultTarget = Some(1.5 * medianSourceTokens))
-      .join(packed.select("doc_id", "pack_id"), "doc_id")
-    val fusedOut = Curation.shuffleForTraining(
-      mixed.select((col("doc_id") * 1000 + col("copy")).as("example_id"),
-        col("doc_id"), col("copy"), col("pack_id")),
-      "example_id", seed = 17L)
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) fusedOut.explain("formatted")
-    fusedOut.write.mode("overwrite").parquet(s"$work/fused_tail.parquet")
-    val fusedSecs = (System.nanoTime() - tf0) / 1e9
+    val (fusedSecs, fusedCost) = profile.window {
+      val tf0 = System.nanoTime()
+      val curatedStage =
+        if (sys.env.get("SPARK_GRAFT_SELECT").contains("1")) "s5b_model_select"
+        else "s5_decontaminate"
+      val curated = spark.read.parquet(s"$work/$curatedStage.parquet")
+      val toks = Tokenizer.tokenizeUnigram(curated, "text", model)
+        .select(col("doc_id"), col("source"), col("text"), col("tokens"), col("n_tokens"))
+      val packed = Curation.packSequences(toks, "doc_id", "source", "n_tokens", ctxTokens = 2048)
+      val mixed = Curation.mixCorpus(toks, "doc_id", "text", "source",
+        targets = Map.empty, defaultTarget = Some(1.5 * medianSourceTokens))
+        .join(packed.select("doc_id", "pack_id"), "doc_id")
+      val fusedOut = Curation.shuffleForTraining(
+        mixed.select((col("doc_id") * 1000 + col("copy")).as("example_id"),
+          col("doc_id"), col("copy"), col("pack_id")),
+        "example_id", seed = 17L)
+      if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) fusedOut.explain("formatted")
+      fusedOut.write.mode("overwrite").parquet(s"$work/fused_tail.parquet")
+      (System.nanoTime() - tf0) / 1e9
+    }
     val stagedTail = rows.toList.filter(r => Set("s6_tokenize", "s7_pack", "s8_mix", "s9_epoch_shuffle")(r._1))
     println(f"[fused tail] tokenize->pack->mix->shuffle one-plan: $fusedSecs%.2f s " +
-      f"(staged sum ${stagedTail.map(_._2).sum}%.2f s), " +
-      f"shufW ${mb(metrics.shuffleWrite.get)}%.1f MB shufR ${mb(metrics.shuffleRead.get)}%.1f MB " +
-      f"scan ${mb(metrics.input.get)}%.1f MB")
+      f"(staged sum ${stagedTail.map(_._2).sum}%.2f s), ${traffic(fusedCost)}")
 
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.GraftSession
+import graft.{GraftSession, Profile}
 import graft.sources.Tables
 import graft.streaming.IncrementalScd2
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   - per-batch WALL seconds for the full loop body (collapse +
   *     open-fetch + cross-batch collapse + two appends + head fold);
   *   - the open-version fetch cost per batch in scan BYTES
-  *     (`/proc/self/io` rchar deltas, the [[IngestionScale]] counter
+  *     ([[graft.Profile]] read bytes, the [[IngestionScale]] counter
   *     rationale), replaying the exact fetch `ingestBatch` runs against
   *     the compacted HEAD store next to the pre-round-12 shape that
   *     semi-pruned the FULL version log.
@@ -34,14 +34,8 @@ object Scd2IngestionScale {
     val batches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "5").toInt
     val spark = GraftSession.local()
 
-    def rchar(): Long =
-      scala.io.Source.fromFile("/proc/self/io").getLines()
-        .find(_.startsWith("rchar:")).map(_.split(" ")(1).toLong).getOrElse(0L)
-    def measureMb(body: => Unit): Double = {
-      val r0 = rchar()
-      body
-      (rchar() - r0) / 1e6
-    }
+    val profile = Profile.of(spark)
+    def measureMb(body: => Unit): Double = profile.window(body)._2("read_bytes") / 1e6
 
     val K = Seq("user_id")
     val A = Seq("event_type")

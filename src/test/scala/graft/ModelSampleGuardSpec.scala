@@ -114,9 +114,6 @@ class ModelSampleGuardSpec extends SparkSpec {
       // manifest-verification pulls in the crawl→shards pipeline stage:
       // each is ≤ #shards rows (1024 manifest lines), never the corpus
       "examples/ProductionPipeline.scala" -> 3,
-      // limit(pairs·2·17)-bounded batch material for the paired probe
-      // A/B — a measurement harness input, never an operator plan
-      "examples/ProbeTailAB.scala" -> 1,
       // A/B equality-proof dumper: toJSON.collect() of named BENCH
       // query outputs (top-k / per-radius / per-group frames, all
       // driver-sized by the queries' own bounds), written to files for
@@ -134,6 +131,9 @@ class ModelSampleGuardSpec extends SparkSpec {
           offenders += s"$rel has $n .collect() sites (allowlisted: ${allowed.getOrElse(rel, 0)})"
       }
     }
+    // a stale entry would silently re-admit a file of that name
+    allowed.keys.filterNot(rel => java.nio.file.Files.exists(root.resolve(rel))).toSeq.sorted
+      .foreach(rel => offenders += s"$rel is allowlisted but no longer exists")
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 

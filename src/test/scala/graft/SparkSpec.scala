@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local SparkSession for specs. */
@@ -22,32 +22,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   def jobsOf(body: => Unit): Int = {
     val group = "graft-spec-job-count"
-    val sentinel = "sentinel"
     val jobs = new AtomicInteger
-    val sentinelSeen = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (p.exists(_.getProperty("spark.job.description") == sentinel))
-            sentinelSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "job count")
     try {
       body
-      // listener events arrive in order: once the sentinel job's start
-      // is seen, every job started before it has been counted
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1)).count()
-      assert(sentinelSeen.await(30, TimeUnit.SECONDS))
+      // every job `body` started has posted its start event by now
+      ListenerBusBridge.drain(sc)
     } finally {
       sc.clearJobGroup()
-      sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
     jobs.get
