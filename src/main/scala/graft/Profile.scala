@@ -62,21 +62,28 @@ final class Profile private (sc: SparkContext) {
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
   }
 
-  /** The totals so far, in [[Profile.Columns]] order. */
+  /** The totals so far; a bus that cannot be drained reads -1 in the
+    * listener columns, blanking a window instead of aborting its caller. */
   private def totals(): Profile.Totals = {
-    ListenerBusBridge.drain(sc)
-    Profile.Totals(Vector(
-      jobs.get, stages.get, tasks.get, taskRunMs.get, taskCpuNs.get / 1000000, taskGcMs.get,
-      shuffleRead.get, shuffleWrite.get, inputBytes.get, memorySpill.get, diskSpill.get,
-      analysisMs.get, optimizationMs.get, planningMs.get,
-      ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
-      ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum,
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1000000,
-      Profile.codegenSourceBytes(), Profile.readBytes()))
+    val drained =
+      try { ListenerBusBridge.drain(sc); true }
+      catch { case _: java.util.concurrent.TimeoutException => false }
+    def bus(n: AtomicLong, per: Long = 1L): Long = if (drained) n.get / per else -1L
+    Profile.Totals.of("jobs" -> bus(jobs), "stages" -> bus(stages), "tasks" -> bus(tasks),
+      "task_run_ms" -> bus(taskRunMs), "task_cpu_ms" -> bus(taskCpuNs, 1000000),
+      "task_gc_ms" -> bus(taskGcMs), "shuffle_read_bytes" -> bus(shuffleRead),
+      "shuffle_write_bytes" -> bus(shuffleWrite), "input_bytes" -> bus(inputBytes),
+      "memory_spill_bytes" -> bus(memorySpill), "disk_spill_bytes" -> bus(diskSpill),
+      "analysis_ms" -> bus(analysisMs), "optimization_ms" -> bus(optimizationMs),
+      "planning_ms" -> bus(planningMs),
+      "jit_ms" -> ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
+      "gc_ms" -> ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum,
+      "codegen_units" -> CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      "codegen_compile_ms" -> CodeGenerator.compileTime / 1000000,
+      "codegen_source_bytes" -> Profile.codegenSourceBytes(), "read_bytes" -> Profile.readBytes())
   }
 
-  /** `body`'s result and what it cost: the totals after it less those
-    * before it. */
+  /** `body`'s result and what it cost: the totals after it less those before. */
   def window[A](body: => A): (A, Profile.Totals) = {
     val before = totals()
     val result = body
@@ -97,10 +104,21 @@ object Profile {
 
   /** One value per [[Columns]] entry; -1 where the value cannot be read. */
   final case class Totals(values: Vector[Long]) {
-    def apply(column: String): Long = values(Columns.indexOf(column))
+    def apply(column: String): Long = {
+      require(Columns.contains(column), s"no Profile column $column")
+      values(Columns.indexOf(column))
+    }
     def -(earlier: Totals): Totals =
       Totals(values.lazyZip(earlier.values).map((a, b) => if (a < 0 || b < 0) -1L else a - b))
     def tsv: String = values.mkString("\t")
+  }
+
+  object Totals {
+    /** Totals from (column, value) pairs, which must name [[Columns]] in order. */
+    def of(pairs: (String, Long)*): Totals = {
+      require(pairs.map(_._1) == Columns, s"Profile columns ${pairs.map(_._1)}")
+      Totals(pairs.map(_._2).toVector)
+    }
   }
 
   private val bySession =

@@ -9,6 +9,8 @@ import org.apache.spark.SparkContext
   * [[ColumnBridge]]); the public entry point is `graft.Profile`.
   */
 object ListenerBusBridge {
-  def drain(sc: SparkContext, timeoutMs: Long = 30000L): Unit =
-    sc.listenerBus.waitUntilEmpty(timeoutMs)
+  // One action's events arrive in milliseconds: a bus still busy after
+  // 30 s has a stuck listener, and waitUntilEmpty throws TimeoutException.
+  private val DrainTimeoutMs = 30000L
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(DrainTimeoutMs)
 }

@@ -45,9 +45,32 @@ class ProfileSpec extends SparkSpec {
     assert(unread.values == Vector(2L, -1L))
   }
 
+  test("a shuffle-only window fills the shuffle columns, and labels stay on their values") {
+    val (_, cost) = profile.window(spark.range(0, 1000, 1, 4).repartition(3).foreach(_ => ()))
+    assert(cost("shuffle_write_bytes") > 0 && cost("shuffle_read_bytes") > 0, cost.values)
+    assert(cost("input_bytes") == 0 && cost.values.size == Profile.Columns.size)
+    intercept[IllegalArgumentException](cost("shuffle_writes"))
+    val swapped = Profile.Columns.updated(0, Profile.Columns(1)).updated(1, Profile.Columns(0))
+    intercept[IllegalArgumentException](Profile.Totals.of(swapped.map(_ -> 0L): _*))
+  }
+
+  private val listener = ("""\b(new|extends)\s+(?:[\w.]+\.)?""" +
+    """(SparkListener|SparkFirehoseListener|QueryExecutionListener)\b""" +
+    """|\baddSparkListener\b|\blistenerManager\s*\.\s*register\b|/proc/self/io""").r
+
+  test("the listener sweep sees qualified, firehose and registration forms") {
+    val src = Seq(
+      "val a = new org.apache.spark.scheduler.SparkListener {",
+      "object B extends SparkFirehoseListener",
+      "sc.addSparkListener(c)",
+      "spark.listenerManager.register(d)",
+      "val e = new SparkListenerJobStart(1, 0L, Nil)",
+      "// new SparkListener in a comment").mkString("\n")
+    assert(SourceSweep.find(listener, src).map(_._2) == Seq(1, 2, 3, 4))
+  }
+
   test("no listener and no /proc/self/io read in src/main outside Profile") {
-    val pattern = """\b(new|extends)\s+(SparkListener|QueryExecutionListener)\b|/proc/self/io""".r
-    val found = SourceSweep.sweep("src/main/scala", pattern, _ != "graft/Profile.scala")
+    val found = SourceSweep.sweep("src/main/scala", listener, _ != "graft/Profile.scala")
     assert(found.isEmpty, found.map { case ((f, s), l) => s"$f:${l.mkString(",")} ($s)" }
       .mkString("measure through graft.Profile:\n", "\n", ""))
   }
