@@ -44,9 +44,7 @@ object RuntimeEvents {
     // sink incidents to your own logger instead of polling restartCount:
     // the bus fans out to every registered sink (logger + this collector)
     val seen = new java.util.concurrent.CopyOnWriteArrayList[RuntimeEvent]()
-    val collector = new RuntimeEventSink {
-      override def publish(e: RuntimeEvent): Unit = seen.add(e)
-    }
+    val collector: RuntimeEventSink = e => { seen.add(e); () }
     RuntimeEventBus.addSink(RuntimeEventBus.loggerSink)
     RuntimeEventBus.addSink(collector)
 

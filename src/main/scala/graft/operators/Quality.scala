@@ -59,7 +59,10 @@ object Quality {
 
   /** One report row per constraint: `check_name`, `metric` (satisfied
     * fraction, 6 dp), `passed` (satisfied ≥ threshold·n). ONE aggregate
-    * over `df` no matter how many constraints.
+    * over `df` no matter how many constraints. An empty `df` reports no
+    * rows: its fractions would be 0/0 (a division-by-zero error under
+    * ANSI), and a streaming monitor's empty micro-batch has nothing to
+    * report.
     */
   def check(
       df: DataFrame,
@@ -72,7 +75,7 @@ object Quality {
     require(threshold > 0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val cells = count(lit(1)).as("__n") +:
       constraints.zipWithIndex.map { case (c, i) => c.satisfied.as(s"__c$i") }
-    val row = df.agg(cells.head, cells.tail: _*)
+    val row = df.agg(cells.head, cells.tail: _*).filter(col("__n") > 0)
     val reportRows = constraints.zipWithIndex.map { case (c, i) =>
       struct(
         lit(c.name).as("check_name"),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Date-partitioned storage layout — the second storage axis (with
@@ -37,8 +38,26 @@ object Lake {
     * UNABLE_TO_INFER_SCHEMA) stay Spark's own.
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    org.apache.spark.sql.graftbridge.ParquetSchemaBridge.footerSchema(spark, path)
-      .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
+    read(spark, path, ParquetSchemaBridge.listing(spark, path))
+
+  /** [[read]] of a path that holds data, or None when it does not (the
+    * path is missing or lists no data file), decided from the same
+    * listing: no read that fails analysis is attempted, so an absent
+    * store logs no error through the session's query listeners. A glob
+    * reads as absent. Any other read failure (a corrupt footer)
+    * propagates.
+    */
+  def readPresent(spark: SparkSession, path: String): Option[DataFrame] =
+    ParquetSchemaBridge.listing(spark, path) match {
+      case ParquetSchemaBridge.NoData => None
+      case listed => Some(read(spark, path, listed))
+    }
+
+  private def read(spark: SparkSession, path: String, listed: ParquetSchemaBridge.Listing)
+      : DataFrame = listed match {
+    case ParquetSchemaBridge.HasData(Some(s)) => spark.read.schema(s).parquet(path)
+    case _ => spark.read.parquet(path)
+  }
 
   /** Write `df` partitioned by the DATE of its event-time column. */
   def materializeByDay(

@@ -9,18 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Streaming distribution-drift monitor: the reference bin counts are
   * persisted ONCE ([[Anomaly.binCounts]] of a trusted snapshot); each
   * arriving micro-batch is binned scan-locally and scored against them
-  * ([[Anomaly.psiFromCounts]]), and one (batch id, PSI, alert) row is
+  * ([[Anomaly.psiFromCounts]]), and one (PSI, alert, batch id) row is
   * appended to the monitor log — the retraining tripwire a 100 TB
   * ingest pipeline runs alongside [[IncrementalSketches]].
   *
   * Per-batch cost: one count aggregate over the BATCH plus bins-sized
   * frame math — the reference snapshot is never re-read (its counts
-  * table is a few rows of parquet). Same `ingest_batch` replay
-  * discipline as [[IncrementalDedup]]: a replayed batch id no-ops.
+  * table is a few rows of parquet). The log is a [[StoreLoop]] stamped
+  * store: a replayed batch id no-ops.
   */
 object DriftMonitor {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
   /** Persist the reference distribution's dense bin counts. */
   def seedReference(
@@ -33,8 +33,14 @@ object DriftMonitor {
       .binCounts(ref, valueCol, binEdges)
       .write.mode("overwrite").parquet(refDir)
 
-  /** Score one micro-batch; append its monitor row. Replay-idempotent
-    * with `batchId` set.
+  /** Score one micro-batch; append its monitor row (`psi`, `alert`, then
+    * the `ingest_batch` stamp). An empty batch has no distribution to
+    * score and appends nothing: against the Laplace mass alone its PSI
+    * would read as drift. Replay-idempotent with `batchId` set;
+    * `probeReplay = false` skips the log probe — only safe when the
+    * caller KNOWS the id is fresh ([[StoreGuard.ReplayProbe]]). Returns
+    * true iff it appended stamped rows (false for a replay no-op or an
+    * empty append).
     */
   def scoreBatch(
       spark: SparkSession,
@@ -44,23 +50,17 @@ object DriftMonitor {
       refDir: String,
       monitorDir: String,
       threshold: Double = 0.25,
-      batchId: Option[Long] = None
-  ): Unit = {
-    batchId match {
-      case Some(b) if StoreGuard.hasBatch(spark, monitorDir, BatchCol, b) => return
-      case _ => ()
-    }
-    Anomaly
-      .psiFromCounts(
-        Lake.read(spark, refDir),
-        Anomaly.binCounts(batch, valueCol, binEdges))
-      .agg(round(sum(col("psi_term")), 6).as("psi"))
-      .select(
-        lit(batchId.getOrElse(-1L)).as(BatchCol),
-        col("psi"),
-        (col("psi") > threshold).as("alert"))
-      .write.mode("append").parquet(monitorDir)
-  }
+      batchId: Option[Long] = None,
+      probeReplay: Boolean = true
+  ): Boolean =
+    StoreLoop.appendStamped(spark, monitorDir, batchId, probeReplay)(
+      Anomaly
+        .psiFromCounts(
+          Lake.read(spark, refDir),
+          Anomaly.binCounts(batch, valueCol, binEdges))
+        .agg(round(sum(col("psi_term")), 6).as("psi"), sum(col("n_cur")).as("n_cur"))
+        .filter(col("n_cur") > 0)
+        .select(col("psi"), (col("psi") > threshold).as("alert")))
 
   /** Attach the monitor loop to a stream of raw rows. */
   def attach(
@@ -71,16 +71,10 @@ object DriftMonitor {
       monitorDir: String,
       threshold: Double = 0.25,
       checkpointLocation: Option[String] = None
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        scoreBatch(spark, batch, valueCol, binEdges, refDir, monitorDir,
-          threshold, batchId = Some(bid))
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Nil, checkpointLocation, None, asyncCompact = false) {
+      (batch, bid, probe) =>
+        scoreBatch(arriving.sparkSession, batch, valueCol, binEdges, refDir, monitorDir,
+          threshold, batchId = Some(bid), probeReplay = probe)
+    }
 }

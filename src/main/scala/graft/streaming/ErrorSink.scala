@@ -88,23 +88,21 @@ object ErrorSink {
       }
     }
     if (!done) {
-      def emit(name: String): Unit =
-        try onEvent(RuntimeEvent(
-          name, sourceName, System.currentTimeMillis(),
-          success = Some(false), attempt = Some(attempt), batchId = Some(batchId),
-          message = lastError.map(e => String.valueOf(e.getMessage))))
-        catch {
-          case t: Throwable =>
-            System.err.println(s"[graft-errorsink] onEvent threw: $t")
-        }
-      action match {
-        case ErrorAction.Skip =>
-          emit("batch.skip") // drop (reference Skip policy)
+      val incident = action match {
+        case ErrorAction.Skip => "batch.skip" // drop (reference Skip policy)
         case _ =>
           envelope(batch, sourceName, lastError.get).write
             .mode("append")
             .parquet(dlqPath)
-          emit("dlq.enqueue")
+          "dlq.enqueue"
+      }
+      try onEvent(RuntimeEvent(
+        incident, sourceName, System.currentTimeMillis(),
+        success = Some(false), attempt = Some(attempt), batchId = Some(batchId),
+        message = lastError.map(e => String.valueOf(e.getMessage))))
+      catch {
+        case t: Throwable =>
+          System.err.println(s"[graft-errorsink] onEvent threw: $t")
       }
     }
   }

@@ -60,7 +60,8 @@ object IncrementalAnn {
   /** Assign one arriving batch and append it to the index.
     * `probeReplay = false` skips the store probe — only safe when the
     * caller KNOWS the id is fresh ([[StoreGuard.ReplayProbe]]).
-    * Returns false iff the batch was a replay no-op.
+    * Returns true iff it appended stamped rows (false for a replay
+    * no-op or an empty append).
     */
   def ingestBatch(
       spark: SparkSession,

@@ -49,8 +49,8 @@ object IncrementalBm25 {
   /** Append one micro-batch's tf rows; replay-idempotent with
     * `batchId` set. `probeReplay = false` skips the store probe — only
     * safe when the caller KNOWS the id is fresh
-    * ([[StoreGuard.ReplayProbe]]). Returns false iff the batch was a
-    * replay no-op.
+    * ([[StoreGuard.ReplayProbe]]). Returns true iff it appended stamped
+    * rows (false for a replay no-op or an empty append).
     */
   def ingestBatch(
       spark: SparkSession,

@@ -35,7 +35,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * appends one file-set per batch, corpus files carry disjoint id
   * ranges, and parquet min/max stats skip every file/row-group holding
   * no candidate — per-batch corpus-scan BYTES stay flat as the corpus
-  * grows (measured in `examples/IngestionScale`; BASELINE.md). Above
+  * grows (BASELINE.md, "Ingestion-loop corpus-scan bytes (round 9)"). Above
   * the cap the loop falls back to the previous full-scan left-semi
   * shape (correct, just not pruned).
   *
@@ -151,6 +151,8 @@ object IncrementalDedup {
     * @param idPushdownCap max candidate-corpus-id count pushed into the
     *                      corpus scan as an `isin` filter; above it the
     *                      verify fetch falls back to a full corpus scan
+    * @return              true iff it appended stamped rows (false for a
+    *                      replay no-op or a batch with no survivor)
     */
   def ingestBatch(
       spark: SparkSession,
@@ -281,7 +283,7 @@ object IncrementalDedup {
     // loop-health ride-along: rows = survivors appended (the count is
     // already materialized above, so this costs nothing either way)
     RuntimeEventBus.ingested(corpusDir, batchId, nSurvivors)
-    true
+    nSurvivors > 0
     } finally survivors.unpersist()
     } finally if (pruned) spark.conf.set(inThresholdKey, prevInThreshold)
     } finally cands.unpersist()

@@ -49,7 +49,8 @@ object IncrementalGraph {
     * set. Bootstraps a missing store (attach without seed).
     * `probeReplay = false` skips the store probe — only safe when the
     * caller KNOWS the id is fresh ([[StoreGuard.ReplayProbe]]).
-    * Returns false iff the batch was a replay no-op.
+    * Returns true iff it appended stamped rows (false for a replay
+    * no-op or an empty append).
     */
   def ingestBatch(
       spark: SparkSession,

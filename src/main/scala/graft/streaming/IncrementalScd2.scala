@@ -29,8 +29,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      latest-per-key ([[graft.functions.BoundedHeap.maxBy]] — built-in
   *      max_by on a struct carry falls to SortAggregate). Reading the
   *      head makes the per-batch cost O(|batch| + #keys), independent
-  *      of how many versions the history holds (Scd2IngestionScale
-  *      measures this flat);
+  *      of how many versions the history holds (measured flat:
+  *      BASELINE.md round 12, the flat-cost SCD2 head store);
   *   3. drop the batch's LEADING rows whose attributes null-safely
   *      equal the open version (the cross-batch collapse — without it
   *      every batch boundary would fabricate a version);
@@ -59,8 +59,8 @@ object IncrementalScd2 {
     * parquet dir. Step 2's open-version fetch reads THIS, not the full
     * version log: the head is O(#keys) rows (plus the current batch's
     * un-folded tail), so the per-batch read cost is independent of how
-    * many VERSIONS the history has accreted — the property
-    * Scd2IngestionScale measures. The version log itself is only ever
+    * many VERSIONS the history has accreted — the property BASELINE.md
+    * round 12 measures. The version log itself is only ever
     * APPENDED to; nothing per-batch scans it.
     */
   private[graft] def openDir(storeDir: String): String =
@@ -88,8 +88,8 @@ object IncrementalScd2 {
   /** Fold one micro-batch of changelog rows into the store.
     * `probeReplay = false` skips the version-log replay probe — only
     * safe when the caller KNOWS the id is fresh
-    * ([[StoreGuard.ReplayProbe]]). Returns false iff the batch was a
-    * replay no-op.
+    * ([[StoreGuard.ReplayProbe]]). Returns true iff it appended stamped
+    * rows (false for a replay no-op or an empty append).
     */
   def ingestBatch(
       spark: SparkSession,
@@ -205,7 +205,7 @@ object IncrementalScd2 {
     RuntimeEventBus.ingested(storeDir, batchId, nChanges)
     if (nChanges > 0)
       foldOpen(spark, storeDir, keyCols, tsCol, attrCols, tieBreak)
-    true
+    nChanges > 0
   }
 
   /** Fold the head store back to one row per key (latest by ts, tie) —

@@ -32,9 +32,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * corpus-sized cost lives where it must (the ingest scan you were
   * already paying), and the model refresh is free.
   *
-  * Exactly-once: the [[StoreGuard]] stamp discipline — a replayed
-  * `foreachBatch` invocation sees its own batch id in the store and
-  * no-ops; counting is deterministic, so a repaired append carries
+  * Exactly-once: the [[StoreLoop.appendStamped]] stamp discipline — a
+  * replayed `foreachBatch` invocation sees its own batch id in the store
+  * and no-ops; counting is deterministic, so a repaired append carries
   * identical content.
   */
 object IncrementalSelection {
@@ -133,7 +133,8 @@ object IncrementalSelection {
     * only safe after a prior fresh ingest through the same parameters
     * ([[StoreGuard.ReplayProbe]]: meta existence and legacy status
     * cannot change mid-run, and the parameters are fixed per attach).
-    * Returns false iff the batch was a replay no-op.
+    * Returns true iff it appended stamped rows (false for a replay
+    * no-op or an empty append).
     */
   def ingestBatch(
       spark: SparkSession,
@@ -149,16 +150,11 @@ object IncrementalSelection {
   ): Boolean = {
     // heal a compaction the previous run crashed mid-swap BEFORE any
     // read (the meta sidecar rides inside storeDir, so the swap heal
-    // restores it too — Lake.rescueLateAppends carries subdirs)
-    graft.sources.Lake.recoverCompact(storeDir)
+    // restores it too — Lake.rescueLateAppends carries subdirs). It must
+    // run before checkMeta reads the store; appendStamped's own call
+    // below then finds nothing to heal (two existence checks)
+    Lake.recoverCompact(storeDir)
     if (probeReplay) checkMeta(spark, storeDir, buckets, Some(n), Some(family))
-    batchId match {
-      // StoreGuard tolerates a missing/partial store: attach-without-seed
-      // bootstraps on the first micro-batch (see StoreGuard scaladoc)
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
     // Bootstrap-stamp eligibility must be decided BEFORE the append: a
     // legacy pre-metadata store that already holds count rows must NOT
     // get the first post-upgrade caller's parameters stamped as canonical
@@ -176,18 +172,17 @@ object IncrementalSelection {
     // store is legacy — either way the block below would no-op/renag
     val metaAbsent = probeReplay && StoreGuard.readStore(spark, metaDir(storeDir)).isEmpty
     val storeWasEmpty = metaAbsent && StoreGuard.readStore(spark, storeDir).isEmpty
-    countsRow(batch, textCol, isTarget, buckets, n, family)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .write.mode("append").parquet(storeDir)
-    // the count-store append is exactly one vector row per batch
-    RuntimeEventBus.ingested(storeDir, batchId, 1L)
-    if (metaAbsent) {
+    // the stamped append tolerates a missing/partial store:
+    // attach-without-seed bootstraps on the first micro-batch
+    val fresh = StoreLoop.appendStamped(spark, storeDir, batchId, probeReplay)(
+      countsRow(batch, textCol, isTarget, buckets, n, family))
+    if (fresh && metaAbsent) {
       if (storeWasEmpty) writeMeta(spark, storeDir, buckets, n, family)
       else System.err.println(
         s"[graft] $storeDir: legacy store without _graft_meta — existing rows' " +
           "(buckets, n, family) unverifiable; not stamping caller parameters")
     }
-    true
+    fresh
   }
 
   /** The maintained model: element-wise-sum the store's count vectors

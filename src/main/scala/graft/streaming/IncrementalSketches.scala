@@ -47,8 +47,9 @@ object IncrementalSketches {
 
   /** Sketch one micro-batch and append its shard rows to the store.
     * With `batchId` set, a replay is a no-op. `probeReplay = false`
-    * skips the store probe ([[StoreGuard.ReplayProbe]]); returns false
-    * iff the batch was a replay no-op.
+    * skips the store probe ([[StoreGuard.ReplayProbe]]); returns true
+    * iff it appended stamped rows (false for a replay no-op or an empty
+    * append).
     */
   def ingestBatch(
       spark: SparkSession,

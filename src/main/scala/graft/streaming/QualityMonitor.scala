@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Quality
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -11,31 +10,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * with the batch id — the ingest-side contract check that catches a
   * broken upstream (nulls, duplicate keys, schema drift shaped as
   * out-of-set values) within one batch instead of at training time.
-  * Same [[IncrementalDedup]] replay discipline: a replayed batch id
-  * no-ops.
+  * The log is a [[StoreLoop]] stamped store: a replayed batch id no-ops.
   */
 object QualityMonitor {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreLoop.BatchCol
 
-  /** Score one micro-batch; append its report rows. */
+  /** Score one micro-batch; append its report rows. An empty batch has
+    * nothing to check and appends nothing. Replay-idempotent with
+    * `batchId` set; `probeReplay = false` skips the log probe
+    * ([[StoreGuard.ReplayProbe]]). Returns true iff it appended stamped
+    * rows (false for a replay no-op or an empty append).
+    */
   def scoreBatch(
       spark: SparkSession,
       batch: DataFrame,
       constraints: Seq[Quality.Constraint],
       monitorDir: String,
       threshold: Double = 1.0,
-      batchId: Option[Long] = None
-  ): Unit = {
-    batchId match {
-      case Some(b) if StoreGuard.hasBatch(spark, monitorDir, BatchCol, b) => return
-      case _ => ()
-    }
-    Quality
-      .check(batch, constraints, threshold)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .write.mode("append").parquet(monitorDir)
-  }
+      batchId: Option[Long] = None,
+      probeReplay: Boolean = true
+  ): Boolean =
+    StoreLoop.appendStamped(spark, monitorDir, batchId, probeReplay)(
+      Quality.check(batch, constraints, threshold))
 
   /** Attach the per-batch constraint check to a stream. */
   def attach(
@@ -44,16 +41,10 @@ object QualityMonitor {
       monitorDir: String,
       threshold: Double = 1.0,
       checkpointLocation: Option[String] = None
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        scoreBatch(spark, batch, constraints, monitorDir, threshold,
-          batchId = Some(bid))
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Nil, checkpointLocation, None, asyncCompact = false) {
+      (batch, bid, probe) =>
+        scoreBatch(arriving.sparkSession, batch, constraints, monitorDir, threshold,
+          batchId = Some(bid), probeReplay = probe)
+    }
 }

@@ -4,27 +4,26 @@ import graft.sources.Lake
 import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Replay-idempotence guard shared by the incremental stores: the
-  * nine store loops (through [[StoreLoop]], plus the own ingest bodies
-  * of IncrementalSelection / IncrementalScd2 / IncrementalDedup) and the
-  * output sinks of DriftMonitor / QualityMonitor / StreamingCuration.
+  * nine store loops and the output sinks of DriftMonitor /
+  * QualityMonitor / StreamingCuration (through [[StoreLoop]], plus the
+  * own ingest bodies of IncrementalScd2 / IncrementalDedup).
   *
   * Deliberately filesystem-AGNOSTIC: a `java.io.File(dir).exists()`
   * probe is local-only — on HDFS/S3 it always answers false, so a
   * replayed foreachBatch would append a duplicate row and break the
-  * documented "replayed batch id no-ops" contract. Instead we attempt
-  * the read through Spark's own filesystem layer and treat the two
-  * ABSENCE conditions (store not created yet → PATH_NOT_FOUND; dir
-  * present but no parquet footers after a partial write →
-  * UNABLE_TO_INFER_SCHEMA) as "batch not seen" — correct in both
-  * cases, because an absent/empty store cannot contain the batch, and
-  * it lets the FIRST micro-batch bootstrap a store that `seed` never
-  * created. Any OTHER failure (an object-store throttle, a permission
-  * blip, a corrupted footer) is RETHROWN: swallowing it into "not
-  * seen" would let a replayed batch double-append — exactly the
-  * corruption this guard exists to prevent. Better to fail the
+  * documented "replayed batch id no-ops" contract. Instead we list the
+  * store through Hadoop's filesystem layer and treat the two ABSENCE
+  * cases (store not created yet; dir present but no data file after a
+  * partial write) as "batch not seen" — correct in both cases, because
+  * an absent/empty store cannot contain the batch, and it lets the
+  * FIRST micro-batch bootstrap a store that `seed` never created. Any
+  * read failure of a store that IS present (an object-store throttle,
+  * a permission blip, a corrupted footer) is RETHROWN: swallowing it
+  * into "not seen" would let a replayed batch double-append — exactly
+  * the corruption this guard exists to prevent. Better to fail the
   * micro-batch and let the streaming restart policy retry.
   */
 private[streaming] object StoreGuard {
@@ -35,9 +34,8 @@ private[streaming] object StoreGuard {
     * batches still fan out (the r19 dedup-loop fix). Used by the SCD2
     * and dedup appends, which pin and count their rows anyway because
     * two appends consume one materialization; the stamped append of
-    * [[StoreLoop.appendStamped]] is laid out by [[sized]] instead, and
-    * the selection store appends one global-aggregate row, hence one
-    * file. Without a sized fan-out, every store whose append inherits
+    * [[StoreLoop.appendStamped]] is laid out by [[sized]] instead.
+    * Without a sized fan-out, every store whose append inherits
     * input or shuffle partitioning grows one NEAR-EMPTY file per
     * partition per trigger — file count outruns data volume and every
     * later store read goes footer-bound.
@@ -96,15 +94,13 @@ private[streaming] object StoreGuard {
       .filter(_ < unknown && plan.collectLeaves().forall(_.stats.sizeInBytes < unknown))
   }
 
-  /** The store dir as a DataFrame, or None iff the store genuinely
-    * does not exist yet (absent path / no committed parquet files).
-    * Transient or structural read errors propagate. Read through
-    * [[Lake.read]], which hands both absence cases to Spark's reader,
-    * so the error conditions matched here are Spark's own.
+  /** The store dir as a DataFrame, or None iff the store does not exist
+    * yet: the path is missing or lists no data file
+    * ([[Lake.readPresent]], decided from the listing without a failing
+    * read). Transient or structural read errors propagate.
     */
   def readStore(spark: SparkSession, dir: String): Option[DataFrame] =
-    try Some(Lake.read(spark, dir))
-    catch { case e: AnalysisException if isAbsence(e) => None }
+    Lake.readPresent(spark, dir)
 
   /** True iff `dir` is a readable store whose `batchCol` already
     * contains `b`.
@@ -122,32 +118,28 @@ private[streaming] object StoreGuard {
     * batch committed in the checkpoint log is never redelivered — only
     * the FIRST trigger after a (re)start can be a replay of the last
     * uncommitted batch. So each attach probes the store until its first
-    * FRESH (non-replayed) ingest and skips the probe from then on,
-    * dropping a listing + scan job from every steady-state trigger (the
-    * 300-batch replay measured ~4.7 s of per-trigger FIXED cost even at
-    * 17-doc batches — BASELINE.md r17 observed lead).
+    * FRESH (non-replayed) ingest that appended stamped rows and skips
+    * the probe from then on, dropping a listing + scan job from every
+    * steady-state trigger (the 300-batch replay measured ~4.7 s of
+    * per-trigger FIXED cost even at 17-doc batches — BASELINE.md r17
+    * observed lead).
     *
-    * A replay-SKIPPED first trigger keeps probing: without a
-    * `checkpointLocation` a restarted stream restarts batch ids at 0,
+    * A replay-SKIPPED trigger keeps probing, and so does a trigger that
+    * appended nothing (an empty batch, a gate that kept no row): without
+    * a `checkpointLocation` a restarted stream restarts batch ids at 0,
     * and the store probe is then the only thing standing between the
-    * old ids and silent double-appends (the documented contract remains
-    * "use a checkpoint for exactly-once"; this just preserves the
-    * probe-every-trigger behavior for uncheckpointed reruns).
+    * old ids and silent double-appends. An id that left no stamp in the
+    * earlier run is not found by the probe either, so only a stamped
+    * append shows the rerun has passed the logged ids (the documented
+    * contract remains "use a checkpoint for exactly-once"; this just
+    * preserves the probe-every-trigger behavior for uncheckpointed
+    * reruns).
     */
   final class ReplayProbe {
     @volatile private var freshSeen = false
     /** True while this attach must still consult the store. */
     def needed: Boolean = !freshSeen
-    /** Record a trigger that ingested fresh (non-replayed) content. */
+    /** Record a trigger that appended fresh rows stamped with its id. */
     def ingested(): Unit = freshSeen = true
-  }
-
-  private def isAbsence(e: AnalysisException): Boolean = {
-    val cond = Option(e.getCondition).getOrElse("")
-    cond.startsWith("PATH_NOT_FOUND") ||
-    cond.startsWith("UNABLE_TO_INFER_SCHEMA") ||
-    // older error-class spellings, belt-and-braces for point releases
-    e.getMessage.contains("Path does not exist") ||
-    e.getMessage.contains("Unable to infer schema")
   }
 }

@@ -10,7 +10,13 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** The one exactly-once store-loop engine behind every incremental
   * store's `attach` (BM25, HLL/KLL sketches, manifest, graph, ANN,
-  * selection, SCD2, dedup).
+  * selection, SCD2, dedup) and every stamped output sink (the
+  * DriftMonitor and QualityMonitor logs, the StreamingCuration
+  * decontamination, NB and perplexity gates). [[attach]] is the only
+  * `foreachBatch` of these, and [[appendStamped]] the only stamped
+  * append outside the SCD2 and dedup bodies, whose two appends share
+  * one materialization (StoreLoopGuardSpec sweeps the source for
+  * any other).
   *
   * Protocol: the idempotent sink keyed by batch id of Structured
   * Streaming, with recovery by deterministic recomputation as in
@@ -26,7 +32,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
   *   2. the store's ingest with `probeReplay = probe.needed`
   *      ([[StoreGuard.ReplayProbe]]: only the first trigger after a
   *      (re)start can be a replay);
-  *   3. `probe.ingested()`, only when the ingest was fresh;
+  *   3. `probe.ingested()`, only when the ingest appended stamped rows;
   *   4. [[CompactCadence.maybeCompact]] for every compacted store.
   */
 private[streaming] object StoreLoop {
@@ -43,9 +49,10 @@ private[streaming] object StoreLoop {
       rangeCols: Seq[String] = Nil,
       offset: Int = 0)
 
-  /** Start the loop: `ingest(batch, batchId, probeReplay)` returns false
-    * iff the batch was a replay no-op. The caller owns the returned
-    * query's lifecycle.
+  /** Start the loop: `ingest(batch, batchId, probeReplay)` returns true
+    * iff it appended rows stamped with `batchId` (false for a replay
+    * no-op and for a batch with nothing to append). The caller owns the
+    * returned query's lifecycle.
     */
   def attach(
       arriving: DataFrame,
@@ -70,8 +77,10 @@ private[streaming] object StoreLoop {
       .start()
   }
 
-  /** The stamped append shared by the single-store loops; returns false
-    * iff `batchId` is already in the store (a replay no-op).
+  /** The stamped append of every single-store loop and output sink;
+    * returns true iff it appended rows stamped with `batchId`: false
+    * when `batchId` is already in the store (a replay no-op) and when
+    * `rows` is empty.
     *
     *   - heal a compaction the previous run crashed mid-swap BEFORE any
     *     read of the store (two existence checks when healthy —
@@ -99,7 +108,7 @@ private[streaming] object StoreLoop {
     Lake.recoverCompact(storeDir)
     val replay = batchId.exists(b =>
       probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b))
-    if (!replay) {
+    !replay && {
       val stamped = rows.withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
       val observed = Observation()
       StoreGuard.sized(stamped.observe(observed, count(lit(1)).as("rows")))
@@ -107,8 +116,8 @@ private[streaming] object StoreLoop {
       val n = observed.get("rows").asInstanceOf[Long]
       if (n == 0) dropEmptyFile(spark, storeDir)
       RuntimeEventBus.ingested(storeDir, batchId, n)
+      n > 0
     }
-    !replay
   }
 
   /** Delete the newest zero-row parquet file of `dir`: the schema-only

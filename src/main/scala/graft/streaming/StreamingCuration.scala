@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming faces of the round-10 batch curation gates — fuzzy
   * decontamination and perplexity (unigram-LM) gating — as
-  * `foreachBatch` components against PERSISTED model tables, the
+  * [[StoreLoop]] sinks against PERSISTED model tables, the
   * [[IncrementalDedup]] pattern:
   *
   *   - the EXPENSIVE side is computed once at seed time (the eval set's
@@ -18,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     an equi-join against the stored bands (never re-shingling the
   *     eval set), or a term join against the stored vocabulary (never
   *     re-scoring the reference corpus);
-  *   - appends are stamped with `ingest_batch` and replay-idempotent:
+  *   - appends are [[StoreLoop]] stamped appends, replay-idempotent:
   *     a replayed batch that is already fully appended is a no-op
   *     (foreachBatch replays after failures; a plain append would
   *     double-write).
@@ -30,8 +30,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * trick; eval sets are small, so the cap is a formality).
   */
 object StreamingCuration {
-
-  private val BatchCol = IncrementalDedup.BatchCol
 
   // ---- fuzzy decontamination ---------------------------------------
 
@@ -75,34 +73,31 @@ object StreamingCuration {
       .candidatesAgainstBanded(batch, evalBands, idCol, textCol,
         maxBucketSize = maxBucketSize)
       .select(col("new_id").as("doc1"), col("corpus_id").as("doc2"))
-      .persist()
-    try {
-      val evalText = Lake.read(spark, s"$evalDir/text")
-      val candEvalIds = cands.select(col("doc2")).distinct()
-        .limit(idPushdownCap + 1).collect().map(_.getLong(0))
-      val evalFetched =
-        if (candEvalIds.length <= idPushdownCap && candEvalIds.nonEmpty)
-          evalText.filter(col(idCol).isin(candEvalIds.toIndexedSeq: _*))
-        else if (candEvalIds.isEmpty) evalText.limit(0)
-        else evalText // over the cap: full (still eval-sized) scan
-      val both = batch.select(col(idCol), col(textCol))
-        .union(evalFetched.select(col(idCol), col(textCol)))
-      val flagged = Dedup
-        .verifyCandidates(cands, both, idCol, textCol, minJaccard = minJaccard)
-        .groupBy(col("doc1"))
-        .agg(
-          count_distinct(col("doc2")).as("n_eval_matches"),
-          max(col("jaccard")).as("max_jaccard"))
-        .withColumnRenamed("doc1", idCol)
-      batch
-        .join(flagged, Seq(idCol), "left")
-        .withColumn("n_eval_matches", coalesce(col("n_eval_matches"), lit(0L)))
-    } finally cands.unpersist()
+    val evalText = Lake.read(spark, s"$evalDir/text")
+    val candEvalIds = cands.select(col("doc2")).distinct()
+      .limit(idPushdownCap + 1).collect().map(_.getLong(0))
+    val evalFetched =
+      if (candEvalIds.length <= idPushdownCap && candEvalIds.nonEmpty)
+        evalText.filter(col(idCol).isin(candEvalIds.toIndexedSeq: _*))
+      else if (candEvalIds.isEmpty) evalText.limit(0)
+      else evalText // over the cap: full (still eval-sized) scan
+    val both = batch.select(col(idCol), col(textCol))
+      .union(evalFetched.select(col(idCol), col(textCol)))
+    val flagged = Dedup
+      .verifyCandidates(cands, both, idCol, textCol, minJaccard = minJaccard)
+      .groupBy(col("doc1"))
+      .agg(
+        count_distinct(col("doc2")).as("n_eval_matches"),
+        max(col("jaccard")).as("max_jaccard"))
+      .withColumnRenamed("doc1", idCol)
+    batch
+      .join(flagged, Seq(idCol), "left")
+      .withColumn("n_eval_matches", coalesce(col("n_eval_matches"), lit(0L)))
   }
 
   /** Attach the decontamination loop to a stream: per micro-batch,
     * annotate against the seeded eval set and append the CLEAN rows to
-    * `outDir`, stamped and replay-idempotent.
+    * `outDir`, stamped and replay-idempotent ([[StoreLoop]]).
     */
   def attachDecontaminate(
       docs: DataFrame,
@@ -113,21 +108,28 @@ object StreamingCuration {
       textCol: String = "text",
       minJaccard: Double = 0.5
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!StoreGuard.hasBatch(spark, outDir, BatchCol, batchId)) {
-          decontaminateBatch(spark, batch, evalDir, idCol, textCol, minJaccard)
-            .filter(col("n_eval_matches") === 0)
-            .drop("n_eval_matches", "max_jaccard")
-            .withColumn(BatchCol, lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    StoreLoop.attach(docs, Nil, Some(checkpointDir), None, asyncCompact = false) {
+      (batch, bid, probe) =>
+        ingestDecontaminate(batch, evalDir, outDir, bid, probe, idCol, textCol, minJaccard)
+    }
+
+  /** One trigger of [[attachDecontaminate]]; true iff it appended stamped rows. */
+  private[graft] def ingestDecontaminate(
+      batch: DataFrame,
+      evalDir: String,
+      outDir: String,
+      batchId: Long,
+      probeReplay: Boolean,
+      idCol: String = "doc_id",
+      textCol: String = "text",
+      minJaccard: Double = 0.5
+  ): Boolean = {
+    val spark = batch.sparkSession
+    StoreLoop.appendStamped(spark, outDir, Some(batchId), probeReplay)(
+      decontaminateBatch(spark, batch, evalDir, idCol, textCol, minJaccard)
+        .filter(col("n_eval_matches") === 0)
+        .drop("n_eval_matches", "max_jaccard"))
+  }
 
   // ---- perplexity (unigram-LM) gating ------------------------------
 
@@ -226,7 +228,7 @@ object StreamingCuration {
 
   /** Attach the NB quality gate to a stream: per micro-batch, score
     * against the seeded model and append rows with `score > minScore`
-    * to `outDir`, stamped and replay-idempotent.
+    * to `outDir`, stamped and replay-idempotent ([[StoreLoop]]).
     */
   def attachNbGate(
       docs: DataFrame,
@@ -237,25 +239,32 @@ object StreamingCuration {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!StoreGuard.hasBatch(spark, outDir, BatchCol, batchId)) {
-          nbBatch(spark, batch, modelDir, idCol, textCol)
-            .filter(col("score") > minScore)
-            .join(batch, Seq(idCol))
-            .withColumn(BatchCol, lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    StoreLoop.attach(docs, Nil, Some(checkpointDir), None, asyncCompact = false) {
+      (batch, bid, probe) =>
+        ingestNbGate(batch, modelDir, outDir, bid, probe, minScore, idCol, textCol)
+    }
+
+  /** One trigger of [[attachNbGate]]; true iff it appended stamped rows. */
+  private[graft] def ingestNbGate(
+      batch: DataFrame,
+      modelDir: String,
+      outDir: String,
+      batchId: Long,
+      probeReplay: Boolean,
+      minScore: Double = 0.0,
+      idCol: String = "doc_id",
+      textCol: String = "text"
+  ): Boolean = {
+    val spark = batch.sparkSession
+    StoreLoop.appendStamped(spark, outDir, Some(batchId), probeReplay)(
+      nbBatch(spark, batch, modelDir, idCol, textCol)
+        .filter(col("score") > minScore)
+        .join(batch, Seq(idCol)))
+  }
 
   /** Attach the perplexity gate to a stream: per micro-batch, score
     * against the seeded LM and append rows in buckets ≤ `keepMaxBucket`
-    * to `outDir`, stamped and replay-idempotent.
+    * to `outDir`, stamped and replay-idempotent ([[StoreLoop]]).
     */
   def attachGate(
       docs: DataFrame,
@@ -266,18 +275,25 @@ object StreamingCuration {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!StoreGuard.hasBatch(spark, outDir, BatchCol, batchId)) {
-          gateBatch(spark, batch, modelDir, idCol, textCol)
-            .filter(col("bucket") <= keepMaxBucket)
-            .withColumn(BatchCol, lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    StoreLoop.attach(docs, Nil, Some(checkpointDir), None, asyncCompact = false) {
+      (batch, bid, probe) =>
+        ingestGate(batch, modelDir, outDir, bid, probe, keepMaxBucket, idCol, textCol)
+    }
+
+  /** One trigger of [[attachGate]]; true iff it appended stamped rows. */
+  private[graft] def ingestGate(
+      batch: DataFrame,
+      modelDir: String,
+      outDir: String,
+      batchId: Long,
+      probeReplay: Boolean,
+      keepMaxBucket: Int,
+      idCol: String = "doc_id",
+      textCol: String = "text"
+  ): Boolean = {
+    val spark = batch.sparkSession
+    StoreLoop.appendStamped(spark, outDir, Some(batchId), probeReplay)(
+      gateBatch(spark, batch, modelDir, idCol, textCol)
+        .filter(col("bucket") <= keepMaxBucket))
+  }
 }

@@ -33,31 +33,43 @@ import scala.util.control.NonFatal
   */
 object ParquetSchemaBridge {
 
-  /** The inferred read schema of `path`, or None when this path must go
-    * through Spark's own reader: the path does not exist (or is a glob),
-    * holds no data file, asks for schema merging, or its footer cannot
-    * be read — so every error a caller sees stays Spark's own
-    * (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA, a corrupt-footer failure).
+  /** What one listing of a parquet path found. */
+  sealed trait Listing
+
+  /** The path does not exist (a glob included) or lists no data file:
+    * Spark's reader would fail analysis on it (PATH_NOT_FOUND,
+    * UNABLE_TO_INFER_SCHEMA).
     */
-  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  case object NoData extends Listing
+
+  /** The path lists data. `schema` is the read schema Spark's inference
+    * would give, or None when the path must go through Spark's own
+    * reader: the session asks for schema merging, or the footer cannot
+    * be read — so the error a caller sees (a corrupt footer) stays
+    * Spark's own.
+    */
+  final case class HasData(schema: Option[StructType]) extends Listing
+
+  def listing(spark: SparkSession, path: String): Listing = {
     val conf = spark.sessionState.conf
-    if (new ParquetOptions(Map.empty[String, String], conf).mergeSchema) return None
     val hadoopConf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(hadoopConf)
-    if (!fs.exists(p)) return None
+    if (!fs.exists(p)) return NoData
     val qualified = p.makeQualified(fs.getUri, fs.getWorkingDirectory)
     val files =
       if (FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf))
         new MetadataLogFileIndex(spark, qualified, Map.empty, None).allFiles()
       else new InMemoryFileIndex(spark, Seq(qualified), Map.empty, None).allFiles()
+    if (files.isEmpty) return NoData
+    if (new ParquetOptions(Map.empty[String, String], conf).mergeSchema) return HasData(None)
     val leaves = files.sortBy(_.getPath.toString)
     // ParquetUtils.inferSchema's non-merging pick, in its order
     val summaries = Seq(
       ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
-    summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+    HasData(summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
       .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
-      .flatMap(f => readFooterSchema(conf, f, hadoopConf))
+      .flatMap(f => readFooterSchema(conf, f, hadoopConf)))
   }
 
   private def readFooterSchema(

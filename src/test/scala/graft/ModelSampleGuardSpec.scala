@@ -103,14 +103,11 @@ class ModelSampleGuardSpec extends SparkSpec {
       // measurement mirrors: one-row aggregates (count/sum) and
       // per-batch key sets bounded by the batch, all feeding printed
       // evidence tables, not operator plans
-      "examples/AnnIngestionScale.scala" -> 2,
       // nShards-bounded manifest pulls (pre-write + read-back verify)
       "examples/ShardWriteScale.scala" -> 2,
-      "examples/Scd2IngestionScale.scala" -> 3,
       "examples/RuntimeEvents.scala" -> 1,
       "examples/HoppingPull.scala" -> 1,
       "examples/IncrementalIngestion.scala" -> 1,
-      "examples/IngestionScale.scala" -> 4,
       // manifest-verification pulls in the crawl→shards pipeline stage:
       // each is ≤ #shards rows (1024 manifest lines), never the corpus
       "examples/ProductionPipeline.scala" -> 3,

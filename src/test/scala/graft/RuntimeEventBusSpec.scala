@@ -182,10 +182,29 @@ class RuntimeEventBusSpec extends SparkSpec {
         Seq((200L, "a completely novel arriving document with many different interesting words"))
           .toDF("doc_id", "text"),
         s"$root/corpus", s"$root/bands", batchId = Some(0L))
+      DriftMonitor.seedReference(Seq(1.0, 5.0, 9.0).toDF("v"), "v", Seq(4.0, 8.0),
+        s"$root/drift_ref")
+      DriftMonitor.scoreBatch(spark, Seq(2.0, 6.0).toDF("v"), "v", Seq(4.0, 8.0),
+        s"$root/drift_ref", s"$root/drift", batchId = Some(0L))
+      QualityMonitor.scoreBatch(spark, Seq((1L, "x"), (2L, null)).toDF("id", "text"),
+        Seq(graft.operators.Quality.Complete("text")), s"$root/quality", batchId = Some(0L))
+      val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "an unrelated arriving document about columnar storage formats")).toDF("doc_id", "text")
+      StreamingCuration.seedEvalSet(docs.filter(col("doc_id") === 1L), s"$root/eval")
+      StreamingCuration.ingestDecontaminate(docs, s"$root/eval", s"$root/decontaminate", 0L,
+        probeReplay = true)
+      StreamingCuration.seedNbClassifier(docs.withColumn("y", (col("doc_id") % 2).cast("int")),
+        s"$root/nb")
+      StreamingCuration.ingestNbGate(docs, s"$root/nb", s"$root/nb_gate", 0L, probeReplay = true,
+        minScore = -1e9)
+      StreamingCuration.seedLanguageModel(docs, s"$root/lm", buckets = 2)
+      StreamingCuration.ingestGate(docs, s"$root/lm", s"$root/perplexity_gate", 0L,
+        probeReplay = true, keepMaxBucket = 2)
 
       val byEntity = sink.events.asScala
         .filter(_.name == "batch.ingested").map(e => e.entity -> e).toMap
-      for (store <- Seq("bm25", "ann", "scd2", "manifest", "dsir", "hll", "kll", "graph", "corpus")) {
+      for (store <- Seq("bm25", "ann", "scd2", "manifest", "dsir", "hll", "kll", "graph", "corpus",
+          "drift", "quality", "decontaminate", "nb_gate", "perplexity_gate")) {
         val e = byEntity.getOrElse(s"$root/$store",
           fail(s"no batch.ingested for $store; got ${byEntity.keys}"))
         assert(e.batchId.contains(0L) && e.success.contains(true), s"$store: $e")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The per-attach replay-probe memoization ([[StoreGuard.ReplayProbe]]):
   * a loop probes the store until its first FRESH ingest, then skips the
@@ -8,7 +9,8 @@ import graft.SparkSpec
   * run and only the first trigger after a (re)start can be a replay.
   * The conservative branch matters for UNcheckpointed reruns, whose
   * batch ids restart at 0: a replay-SKIPPED trigger must keep probing,
-  * or stale ids would double-append.
+  * and so must a trigger that appended nothing (it leaves no stamp for
+  * the rerun's probe to find), or stale ids would double-append.
   */
 class ReplayProbeSpec extends SparkSpec {
   import spark.implicits._
@@ -63,5 +65,39 @@ class ReplayProbeSpec extends SparkSpec {
       spark, edges(0, 10).toDF("src", "dst"), store, batchId = Some(0L),
       probeReplay = false)
     assert(spark.read.parquet(store).filter($"ingest_batch" === 0L).count() == 20L)
+  }
+
+  test("an uncheckpointed rerun past a batch that appended nothing does not double-append (monitors)") {
+    val root = java.nio.file.Files.createTempDirectory("graft_probe_empty").toString
+    val edges = Seq(10.0, 20.0, 40.0)
+    DriftMonitor.seedReference((0 until 40).map(_.toDouble).toDF("v"), "v", edges, s"$root/ref")
+    val checks = Seq(graft.operators.Quality.Complete("v"))
+    // negative values are filtered out before the sink, so the middle
+    // batch reaches it empty and appends nothing
+    val monitors = Seq[(String, org.apache.spark.sql.DataFrame => StreamingQuery)](
+      "drift" -> (in => DriftMonitor.attach(in, "v", edges, s"$root/ref", s"$root/drift")),
+      "quality" -> (in => QualityMonitor.attach(in, checks, s"$root/quality")))
+    val batches = Seq((0 until 30).map(_.toDouble), Seq(-1.0, -2.0), (5 until 45).map(_.toDouble))
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    def run(attach: org.apache.spark.sql.DataFrame => StreamingQuery, data: Seq[Seq[Double]]): Unit = {
+      val mem = MemoryStream[Double]
+      val q = attach(mem.toDF().toDF("v").filter($"v" >= 0))
+      try data.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    def byBatch(dir: String): Map[Long, Long] =
+      spark.read.parquet(dir).groupBy($"ingest_batch").count().as[(Long, Long)].collect().toMap
+
+    for ((name, attach) <- monitors) {
+      val dir = s"$root/$name"
+      run(attach, batches)
+      val first = byBatch(dir)
+      assert(first.keySet == Set(0L, 2L), s"$name: first run logged $first")
+      // the rerun restarts ids at 0: batches 0-2 are the logged ones
+      // again, and only batch 3 is new
+      run(attach, batches :+ (10 until 20).map(_.toDouble))
+      assert(byBatch(dir) == first + (3L -> first(0L)), s"$name: rerun logged ${byBatch(dir)}")
+    }
   }
 }

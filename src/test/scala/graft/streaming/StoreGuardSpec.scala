@@ -1,6 +1,12 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The replay-idempotence guard's failure taxonomy: genuine ABSENCE
   * (no store yet / no committed footers) reads as "batch not seen" so
@@ -41,5 +47,28 @@ class StoreGuardSpec extends SparkSpec {
     try f.write("this is not a parquet file".getBytes("UTF-8"))
     finally f.close()
     assertThrows[Exception](StoreGuard.hasBatch(spark, dir, B, 1L))
+  }
+
+  test("absent-store probes fail no query, even after an observed stamped append") {
+    val root = Files.createTempDirectory("graft_sg_listen")
+    // the stamped append's Dataset.observe registers Spark's observation
+    // listener, which rethrows (and logs) every failed query
+    IncrementalBm25.ingestBatch(spark, Seq((1L, "alpha beta")).toDF("doc_id", "text"),
+      root.resolve("bm25").toString, batchId = Some(0L))
+    val empty = Files.createDirectory(root.resolve("empty"))
+    Files.createFile(empty.resolve("_SUCCESS"))
+    val failures = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        failures.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(StoreGuard.readStore(spark, root.resolve("missing").toString).isEmpty)
+      assert(StoreGuard.readStore(spark, empty.toString).isEmpty)
+      ListenerBusBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(failures.get == 0, s"${failures.get} failed queries around absent-store reads")
   }
 }

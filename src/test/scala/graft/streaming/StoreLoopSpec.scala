@@ -10,11 +10,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
-/** The shared store-loop engine ([[StoreLoop]]) over all nine stores:
-  * the stamped append (its file sizing, its empty batch, its job
-  * count), a failed SCD2 append's pin, and exactly-once across a
-  * restart whose first trigger re-delivers a batch that already reached
-  * the store.
+/** The shared store-loop engine ([[StoreLoop]]) over all nine stores
+  * and the five stamped output sinks (the drift and quality monitor
+  * logs, the decontamination, NB and perplexity gates): the stamped
+  * append (its file sizing, its empty batch, its job count), a failed
+  * SCD2 append's pin, and exactly-once across a restart whose first
+  * trigger re-delivers a batch that already reached the store.
   */
 class StoreLoopSpec extends SparkSpec {
   import spark.implicits._
@@ -113,6 +114,55 @@ class StoreLoopSpec extends SparkSpec {
           .toDF("doc_id", "text"), s"$root/corpus", s"$root/bands"))
   )
 
+  private val driftEdges = Seq(3.0, 6.0, 9.0)
+  private val qualityChecks =
+    Seq(graft.operators.Quality.Complete("text"), graft.operators.Quality.InSet("source", Seq("s0")))
+
+  /** An output sink over a seeded model: `seed` writes the model to
+    * `$root/$name-model`, and the sink appends to `$root/$name`.
+    */
+  private def sink(
+      name: String,
+      seed: String => Unit,
+      attach: (DataFrame, String, String, String) => StreamingQuery,
+      ingest: (DataFrame, String, String, Long, Boolean) => Unit
+  ): Store =
+    Store(name, (in, root, chk) => attach(in, s"$root/$name-model", s"$root/$name", chk),
+      (b, root, bid, probe) => ingest(b, s"$root/$name-model", s"$root/$name", bid, probe),
+      root => Seq(s"$root/$name"), seed = root => seed(s"$root/$name-model"))
+
+  private val sinks: Seq[Store] = Seq(
+    sink("drift",
+      model => DriftMonitor.seedReference(slice(0), "v", driftEdges, model),
+      (in, model, out, chk) => DriftMonitor.attach(in, "v", driftEdges, model, out,
+        checkpointLocation = Some(chk)),
+      (b, model, out, bid, probe) => DriftMonitor.scoreBatch(spark, b, "v", driftEdges, model,
+        out, batchId = Some(bid), probeReplay = probe)),
+    sink("quality", _ => (),
+      (in, _, out, chk) => QualityMonitor.attach(in, qualityChecks, out,
+        checkpointLocation = Some(chk)),
+      (b, _, out, bid, probe) => QualityMonitor.scoreBatch(spark, b, qualityChecks, out,
+        batchId = Some(bid), probeReplay = probe)),
+    // the eval set holds slice 0's first text, which slice 2 repeats
+    sink("decontaminate",
+      model => StreamingCuration.seedEvalSet(Seq((900L, text(0))).toDF("doc_id", "text"), model),
+      (in, model, out, chk) => StreamingCuration.attachDecontaminate(in, model, out, chk),
+      (b, model, out, bid, probe) => StreamingCuration.ingestDecontaminate(b, model, out, bid,
+        probe)),
+    sink("nb_gate",
+      model => StreamingCuration.seedNbClassifier(
+        (0 until 12).map(i => (i.toLong, text(i), i % 2)).toDF("doc_id", "text", "y"), model),
+      (in, model, out, chk) => StreamingCuration.attachNbGate(in, model, out, chk),
+      (b, model, out, bid, probe) => StreamingCuration.ingestNbGate(b, model, out, bid, probe)),
+    sink("perplexity_gate",
+      model => StreamingCuration.seedLanguageModel(
+        slice(0).union(slice(1)).select("doc_id", "text"), model),
+      (in, model, out, chk) => StreamingCuration.attachGate(in, model, out, chk,
+        keepMaxBucket = 2),
+      (b, model, out, bid, probe) => StreamingCuration.ingestGate(b, model, out, bid, probe,
+        keepMaxBucket = 2))
+  )
+
   private def parquetFiles(dir: String): Int =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -121,16 +171,20 @@ class StoreLoopSpec extends SparkSpec {
   private lazy val stamped =
     stores.filter(s => Set("bm25", "hll", "kll", "manifest", "graph", "ann")(s.name))
 
-  test("a 4-partition micro-batch appends exactly one parquet file (six stamped-append stores)") {
+  private def appendsOneFile(group: Seq[Store]): Unit = {
     val root = Files.createTempDirectory("graft_storeloop_append").toString
     val batch = slice(0).repartition(4)
     assert(batch.rdd.getNumPartitions == 4)
-    val files = stamped
-      .map { s => s.ingest(batch, root, 0L, true); s.name -> parquetFiles(s"$root/${s.name}") }
-    assert(files.size == 6 && files.forall(_._2 == 1), s"files per store after one append: $files")
+    val files = group.map { s =>
+      s.seed(root)
+      s.ingest(batch, root, 0L, true)
+      s.name -> parquetFiles(s"$root/${s.name}")
+    }
+    assert(files.size == group.size && files.forall(_._2 == 1),
+      s"files per store after one append: $files")
   }
 
-  test("an empty micro-batch appends no parquet file and publishes rows=0 (six stamped stores)") {
+  private def appendsNoFileWhenEmpty(group: Seq[Store]): Unit = {
     val root = Files.createTempDirectory("graft_storeloop_empty").toString
     slice(1).write.parquet(s"$root/stage")
     // empty by plan (the optimizer sees the limit) and empty only when
@@ -140,9 +194,11 @@ class StoreLoopSpec extends SparkSpec {
     val events = new java.util.concurrent.CopyOnWriteArrayList[RuntimeEvent]()
     val sink = new RuntimeEventSink { def publish(e: RuntimeEvent): Unit = events.add(e) }
     RuntimeEventBus.addSink(sink)
-    try stamped.foreach { s =>
+    try group.foreach { s =>
+      s.seed(s"$root/fresh")
       s.ingest(empties.head, s"$root/fresh", 0L, true)
       assert(parquetFiles(s"$root/fresh/${s.name}") == 0, s"${s.name}: a fresh store got a file")
+      s.seed(root)
       s.ingest(slice(0), root, 0L, true)
       val before = parquetFiles(s"$root/${s.name}")
       for ((empty, bid) <- empties.zip(Seq(1L, 2L))) {
@@ -150,11 +206,27 @@ class StoreLoopSpec extends SparkSpec {
         assert(parquetFiles(s"$root/${s.name}") == before, s"${s.name}: batch $bid added a file")
       }
     } finally RuntimeEventBus.removeSink(sink)
-    for (s <- stamped; bid <- Seq(1L, 2L)) {
+    for (s <- group; bid <- Seq(1L, 2L)) {
       val rows = events.asScala.filter(e => e.name == "batch.ingested" &&
         e.entity == s"$root/${s.name}" && e.batchId.contains(bid)).map(_.message.get)
       assert(rows == Seq("rows=0"), s"${s.name} batch $bid published $rows")
     }
+  }
+
+  test("a 4-partition micro-batch appends exactly one parquet file (six stamped-append stores)") {
+    appendsOneFile(stamped)
+  }
+
+  test("a 4-partition micro-batch appends exactly one parquet file (five output sinks)") {
+    appendsOneFile(sinks)
+  }
+
+  test("an empty micro-batch appends no parquet file and publishes rows=0 (six stamped stores)") {
+    appendsNoFileWhenEmpty(stamped)
+  }
+
+  test("an empty micro-batch appends no parquet file and publishes rows=0 (five output sinks)") {
+    appendsNoFileWhenEmpty(sinks)
   }
 
   test("the stamped append sizes its files from the plan estimate, at most shuffle partitions") {
@@ -191,14 +263,18 @@ class StoreLoopSpec extends SparkSpec {
 
   test("one fresh-id stamped append runs a fixed number of Spark jobs: no count, no cache") {
     val root = Files.createTempDirectory("graft_storeloop_jobs").toString
-    stamped.foreach(_.ingest(slice(0), root, 0L, true))
-    val jobs = stamped.map(s => s.name -> jobsOf(s.ingest(slice(1), root, 1L, false))).toMap
+    val group = stamped ++ sinks
+    group.foreach { s => s.seed(root); s.ingest(slice(0), root, 0L, true) }
+    val jobs = group.map(s => s.name -> jobsOf(s.ingest(slice(1), root, 1L, false))).toMap
     // the persist + count + sized write this replaced ran 5, 5, 5, 7, 4
     // and 6. Graph and ann plans run narrow from their source, so the
     // write cuts them after a round-robin exchange: one job more than a
-    // plain write
+    // plain write. The sinks' counts include their broadcast joins
+    // against the seeded model (each broadcast is a job) and, for
+    // decontamination, the candidate-id collect before the append
     assert(jobs == Map("bm25" -> 2, "hll" -> 2, "kll" -> 2, "manifest" -> 4, "graph" -> 2,
-      "ann" -> 4), s"jobs per append: $jobs")
+      "ann" -> 4, "drift" -> 7, "quality" -> 2, "decontaminate" -> 15, "nb_gate" -> 5,
+      "perplexity_gate" -> 5), s"jobs per append: $jobs")
   }
 
   test("a failed SCD2 append releases its pin: nothing stays cached") {
@@ -252,7 +328,7 @@ class StoreLoopSpec extends SparkSpec {
     finally q.stop()
   }
 
-  for (store <- stores)
+  for (store <- stores ++ sinks)
     test(s"restart after a crash between append and commit: ${store.name} equals an uninterrupted run") {
       val base = Files.createTempDirectory(s"graft_storeloop_${store.name}").toString
       val clean = s"$base/clean"
