@@ -1,8 +1,8 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.operators.AsOfJoin
 import graft.streaming.StreamAsOf
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,9 +21,8 @@ import java.sql.Timestamp
   *
   * Run: `sbt "runMain graft.examples.AsOfEnrichment"`
   */
-object AsOfEnrichment {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object AsOfEnrichment extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -64,6 +63,5 @@ object AsOfEnrichment {
     spark.table("asof_demo").orderBy("seq").show(truncate = false)
 
     q.stop()
-    spark.stop()
   }
 }

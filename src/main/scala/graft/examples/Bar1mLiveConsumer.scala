@@ -1,10 +1,10 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.core.Period
 import graft.dsl.Ksql
 import graft.sources.TestEntities
 import graft.streaming.{BarCascade, GapFill}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -27,13 +27,11 @@ case class ExTick(broker: String, symbol: String, ts: Timestamp, bid: Double, se
   *
   * Run: `sbt "runMain graft.examples.Bar1mLiveConsumer"`
   */
-object Bar1mLiveConsumer {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object Bar1mLiveConsumer extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val root = java.nio.file.Files.createTempDirectory("bar_live").toString
     def t(s: String) = Timestamp.valueOf(s)
 
     val model = Ksql
@@ -47,7 +45,7 @@ object Bar1mLiveConsumer {
     val mem = MemoryStream[ExTick]
     val plan = BarCascade.startFromModel(
       spark, mem.toDF(), "bar", Seq("broker", "symbol"),
-      "ts", "bid", "seq", model, root, GapFill.CarryForward)
+      "ts", "bid", "seq", model, work, GapFill.CarryForward)
     try {
       mem.addData(
         ExTick("b", "X", t("2024-01-01 00:00:10"), 10.0, 1),
@@ -69,6 +67,6 @@ object Bar1mLiveConsumer {
       spark.read.parquet(plan.fillPaths("1m"))
         .select($"bucket", $"open", $"close", $"filled")
         .orderBy("bucket").show(8, truncate = false)
-    } finally { plan.queries.foreach(_.stop()); spark.stop() }
+    } finally plan.queries.foreach(_.stop())
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -18,13 +19,11 @@ case class Reading(sensor_id: Int, at: Timestamp, celsius: Double)
   *
   * Run: `sbt "runMain graft.examples.BasicProduceConsume"`
   */
-object BasicProduceConsume {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object BasicProduceConsume extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_basic").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val readings = EntityModel[Reading]("readings").key("sensor_id").timestamp("at")
     val ctx = new GraftContext(spark, name => store.snapshot(name, readings.keys))
 
@@ -39,7 +38,5 @@ object BasicProduceConsume {
     // the consumed snapshot sees ONE record: key 1's latest value
     ctx.eventSet(readings).forEach(r =>
       println(s"sensor=${r.sensor_id} at=${r.at} celsius=${r.celsius}"))
-
-    spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.core.EntityModel
 import graft.sources.KafkaBinding
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -23,7 +23,7 @@ case class CfgMessage(id: Int, created_at: Timestamp, text: String)
   *
   * Run: `GRAFT_ENV=Production sbt "runMain graft.examples.Configuration"`
   */
-object Configuration {
+object Configuration extends Example {
   private val profiles: Map[String, Map[String, String]] = Map(
     "Development" -> Map(
       "bootstrap.servers" -> "localhost:9092",
@@ -41,14 +41,21 @@ object Configuration {
     )
   )
 
-  def main(args: Array[String]): Unit = {
-    val env = sys.env.getOrElse("GRAFT_ENV", "Development")
-    val cfg = profiles.getOrElse(env, profiles("Development"))
-    println(s"environment: $env")
+  private def env = sys.env.getOrElse("GRAFT_ENV", "Development")
+  private def profile = profiles.getOrElse(env, profiles("Development"))
 
-    val spark = GraftSession.local()
+  /** The profile's log level is context-wide, so only the command-line
+    * run applies it: `run` may share its context with other work.
+    */
+  override def main(args: Array[String]): Unit = Example.session { spark =>
+    spark.sparkContext.setLogLevel(profile("log.level"))
+    runIn(spark, args)
+  }
+
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val cfg = profile
+    println(s"environment: $env")
     spark.conf.set("spark.sql.shuffle.partitions", cfg("shuffle.partitions"))
-    spark.sparkContext.setLogLevel(cfg("log.level"))
 
     // connection options from the profile (KsqlDslOptions analog)
     val kafka = KafkaBinding.KafkaOptions(
@@ -65,7 +72,5 @@ object Configuration {
       .foreach { case (k, v) => println(f"  $k%-28s = $v") }
     val (keySubject, valueSubject) = KafkaBinding.subjects(model)
     println(s"schema-registry subjects: $keySubject / $valueSubject")
-
-    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.core.EntityModel
 import graft.sources.KafkaBinding
 import org.apache.spark.sql.SparkSession
@@ -26,7 +25,7 @@ case class MappedMessage(id: Int, created_at: Timestamp, text: String)
   *
   * Run: `GRAFT_ENV=Production sbt "runMain graft.examples.ConfigurationMapping"`
   */
-object ConfigurationMapping {
+object ConfigurationMapping extends Example {
 
   /** Flatten one JSON settings object into dotted keys ("Logging.LogLevel
     * .Default" -> "Debug"), the shape .NET's ConfigurationBuilder exposes.
@@ -50,27 +49,37 @@ object ConfigurationMapping {
     walk("", row, df.schema)
   }
 
-  def main(args: Array[String]): Unit = {
+  /** The mapped log level is context-wide, so only the command-line run
+    * applies it: `run` may share its context with other work.
+    */
+  override def main(args: Array[String]): Unit = Example.session { spark =>
+    Example.inWork(this)(work => spark.sparkContext.setLogLevel(resolve(spark, work)))
+  }
+
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = resolve(spark, work)
+
+  /** Prints the effective settings and the options they map to, and
+    * returns the mapped Spark log level.
+    */
+  private def resolve(spark: SparkSession, work: String): String = {
     val env = sys.env.getOrElse("GRAFT_ENV", "Development")
-    val spark = GraftSession.local()
 
     // the reference ships these as files next to the binary; written out
     // here so the example is self-contained and runnable anywhere
-    val dir = Files.createTempDirectory("graft_cfgmap")
-    Files.writeString(Paths.get(dir.toString, "appsettings.json"),
+    Files.writeString(Paths.get(work, "appsettings.json"),
       """{"Logging": {"LogLevel": {"Default": "Debug", "Graft.Query": "Debug"}},
         | "Graft": {"Common": {"BootstrapServers": "localhost:9092",
         |                      "ClientId": "config-sample-app"},
         |           "SchemaRegistry": {"Url": "http://localhost:8085"}}}""".stripMargin)
-    Files.writeString(Paths.get(dir.toString, "appsettings.Development.json"),
+    Files.writeString(Paths.get(work, "appsettings.Development.json"),
       """{"Logging": {"LogLevel": {"Default": "Debug", "Graft.Messaging": "Information"}}}""")
-    Files.writeString(Paths.get(dir.toString, "appsettings.Production.json"),
+    Files.writeString(Paths.get(work, "appsettings.Production.json"),
       """{"Logging": {"LogLevel": {"Default": "Warning", "Graft.Messaging": "Warning",
         |                          "Graft.Query": "None"}}}""".stripMargin)
 
     // ConfigurationBuilder.AddJsonFile(base).AddJsonFile(env) — later wins
-    val base = flatten(spark, s"$dir/appsettings.json")
-    val overlayPath = Paths.get(dir.toString, s"appsettings.$env.json")
+    val base = flatten(spark, s"$work/appsettings.json")
+    val overlayPath = Paths.get(work, s"appsettings.$env.json")
     val overlay =
       if (Files.exists(overlayPath)) flatten(spark, overlayPath.toString)
       else Map.empty[String, String]
@@ -88,7 +97,6 @@ object ConfigurationMapping {
       case "Warning" | "None" => "WARN"
       case other => other.toUpperCase
     }
-    spark.sparkContext.setLogLevel(sparkLevel)
     println(s"log level mapped to Spark: $sparkLevel")
 
     // Graft.Common / SchemaRegistry -> connection options
@@ -100,7 +108,6 @@ object ConfigurationMapping {
     KafkaBinding.sourceOptions(model, kafka).toSeq.sorted
       .foreach { case (k, v) => println(f"  $k%-28s = $v") }
     println(s"schema registry: ${effective("Graft.SchemaRegistry.Url")}")
-
-    spark.stop()
+    sparkLevel
   }
 }

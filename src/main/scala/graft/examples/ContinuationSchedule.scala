@@ -1,10 +1,10 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.core.Period
 import graft.dsl.{Ksql, ScheduleSpec}
 import graft.plans.{DerivationPlanner, Planner}
 import graft.sources.TestEntities
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's continuation-schedule example
@@ -25,10 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.examples.ContinuationSchedule [sfDir]"`
   */
-object ContinuationSchedule {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object ContinuationSchedule extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     val schedule = ScheduleSpec(
       schedule = TestEntities.marketScheduleEntity,
@@ -56,7 +55,5 @@ object ContinuationSchedule {
     val bars = Planner.batch(oneMinute, TestEntities.catalog(spark, sfDir))
     println("session-gated 1m bars (first 5):")
     bars.orderBy(col("window_start"), col("event_type")).show(5, truncate = false)
-
-    spark.stop()
   }
 }

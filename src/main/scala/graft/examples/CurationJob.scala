@@ -1,8 +1,8 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.operators.Curation
 import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The integrated training-data curation job over the documents table:
@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.examples.CurationJob [sfDir]"`
   */
-object CurationJob {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object CurationJob extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     val kept = Curation.curate(
       Tables.load(spark, sfDir, "documents"),
@@ -31,7 +30,5 @@ object CurationJob {
       )
       .orderBy(col("source"))
       .show(50, truncate = false)
-
-    spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.examples
 
-import graft.GraftSession
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's custom-executor example
@@ -19,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.examples.CustomExecutor"`
   */
-object CustomExecutor {
+object CustomExecutor extends Example {
   final class LoggingRetryExecutor(maxAttempts: Int = 3) {
     def execute[A](df: DataFrame)(action: DataFrame => A): A = {
       val preview = df.queryExecution.logical.toString
@@ -44,13 +43,10 @@ object CustomExecutor {
     }
   }
 
-  // a transiently-failing action: the first TWO calls throw (a broker
-  // rebalance, a flaky object store), the third succeeds
-  private val failures = new java.util.concurrent.atomic.AtomicInteger(2)
-
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
-
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    // a transiently-failing action: the first TWO calls throw (a broker
+    // rebalance, a flaky object store), the third succeeds
+    val failures = new java.util.concurrent.atomic.AtomicInteger(2)
     val exec = new LoggingRetryExecutor(maxAttempts = 3)
     val df = spark.range(1000).select((col("id") % 7).as("k"))
       .groupBy("k").count()
@@ -61,7 +57,5 @@ object CustomExecutor {
       d.count()
     }
     println(s"result groups: $rows")
-
-    spark.stop()
   }
 }

@@ -1,11 +1,11 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.core.{EntityModel, Period}
 import graft.dsl.Ksql
 import graft.functions.{BoundedHeap, KFunctions}
 import graft.operators.TopN
 import graft.plans.Planner
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +24,8 @@ case class DailyRate(
   *
   * Run: `sbt "runMain graft.examples.DailyComparison"`
   */
-object DailyComparison {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object DailyComparison extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
     def t(s: String) = Timestamp.valueOf(s)
 
@@ -74,7 +73,5 @@ object DailyComparison {
     println("newest 3 candles per symbol:")
     TopN.newestPerKey(candles, "symbol", "window_start", "broker", n = 3)
       .orderBy($"window_start").show(truncate = false)
-
-    spark.stop()
   }
 }

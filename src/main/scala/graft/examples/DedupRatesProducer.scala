@@ -1,7 +1,7 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.operators.Dedup
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -23,14 +23,12 @@ case class RateTick(broker: String, symbol: String, ts: Timestamp, bid: Double)
   *
   * Run: `sbt "runMain graft.examples.DedupRatesProducer"`
   */
-object DedupRatesProducer {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object DedupRatesProducer extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
 
-    val root = java.nio.file.Files.createTempDirectory("dedup_rates").toString
     val mem = MemoryStream[RateTick]
     val deduped = Dedup.streamingExact(
       mem.toDF(), keyCols = Seq("broker", "symbol", "ts"), tsCol = "ts", delay = "10 seconds")
@@ -47,16 +45,14 @@ object DedupRatesProducer {
     )
     val q = deduped.writeStream
       .format("parquet")
-      .option("path", s"$root/rates_dedup")
-      .option("checkpointLocation", s"$root/ckpt")
+      .option("path", s"$work/rates_dedup")
+      .option("checkpointLocation", s"$work/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
 
     println("deduplicated rates topic:")
-    spark.read.parquet(s"$root/rates_dedup").orderBy("broker", "symbol", "ts")
+    spark.read.parquet(s"$work/rates_dedup").orderBy("broker", "symbol", "ts")
       .show(truncate = false)
-
-    spark.stop()
   }
 }

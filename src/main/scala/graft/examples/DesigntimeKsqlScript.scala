@@ -1,9 +1,10 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.dsl.Ksql
 import graft.plans.KsqlScriptGen
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -20,9 +21,8 @@ case class OrderSummary(id: Int, created_date: java.sql.Date)
   *
   * Run: `sbt "runMain graft.examples.DesigntimeKsqlScript"`
   */
-object DesigntimeKsqlScript {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object DesigntimeKsqlScript extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
 
     // OnModelCreating analog: register the source entity and the
     // ToQuery projection (Status == "Completed" → Id + CreatedAt.Date)
@@ -49,6 +49,5 @@ object DesigntimeKsqlScript {
       println(schema)
       println()
     }
-    spark.stop()
   }
 }

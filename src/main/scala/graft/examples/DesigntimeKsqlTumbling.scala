@@ -1,9 +1,10 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.{EntityModel, Period}
 import graft.dsl.Ksql
 import graft.plans.KsqlScriptGen
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -18,9 +19,8 @@ case class Tick(symbol: String, timestamp_utc: Timestamp, price: java.math.BigDe
   *
   * Run: `sbt "runMain graft.examples.DesigntimeKsqlTumbling"`
   */
-object DesigntimeKsqlTumbling {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object DesigntimeKsqlTumbling extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
 
     val ticks = EntityModel[Tick]("ticks")
       .key("symbol").timestamp("timestamp_utc")
@@ -44,6 +44,5 @@ object DesigntimeKsqlTumbling {
 
     println("-- Design-time KSQL script for TumblingContext")
     println(KsqlScriptGen.build(ctx).toSql)
-    spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.operators.Similarity
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Building a memory-bounded embedding index — the storage/accuracy
@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.examples.EmbeddingIndexJob [sfDir]"`
   */
-object EmbeddingIndexJob {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object EmbeddingIndexJob extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val n = emb.count()
@@ -44,7 +43,5 @@ object EmbeddingIndexJob {
     adc.filter(col("query_id") === 0).orderBy("rank").show(5, truncate = false)
     println("with exact re-rank of the top-50 candidates:")
     rr.filter(col("query_id") === 0).orderBy("rank").show(5, truncate = false)
-
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.{EntityModel, ErrorAction}
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 case class RiskyOrder(id: Int, amount: java.math.BigDecimal)
 
@@ -21,13 +22,11 @@ case class RiskyOrder(id: Int, amount: java.math.BigDecimal)
   *
   * Run: `sbt "runMain graft.examples.ErrorHandling"`
   */
-object ErrorHandling {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object ErrorHandling extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_errh").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val orders = EntityModel[RiskyOrder]("orders")
       .key("id").decimal("amount", 18, 2)
       .onError(ErrorAction.Retry) // OnError(DLQ).WithRetry(3) analog
@@ -54,7 +53,5 @@ object ErrorHandling {
       onDlq = (o, e) =>
         println(s"DLQ <- order ${o.id} after $attempts attempts: ${e.getMessage}")
     )
-
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.{EntityModel, ErrorAction}
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -23,13 +24,11 @@ case class DlqRecord(id: Int, error: String, failed_at: Long)
   *
   * Run: `sbt "runMain graft.examples.ErrorHandlingDlq"`
   */
-object ErrorHandlingDlq {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object ErrorHandlingDlq extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_dlq").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val orders = EntityModel[DlqOrder]("dlq_orders").key("id").timestamp("at")
       .onError(ErrorAction.Dlq)
     val ctx = new GraftContext(spark, name => store.snapshot(name, Seq("id")))
@@ -52,6 +51,5 @@ object ErrorHandlingDlq {
 
     println("DLQ contents:")
     store.snapshot("dlq_orders_dlq", Seq("id")).show(truncate = false)
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -23,13 +24,11 @@ case class HmMessage(id: Int, sent_at: Timestamp, text: String)
   *
   * Run: `sbt "runMain graft.examples.HeadersMeta"`
   */
-object HeadersMeta {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object HeadersMeta extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_headers").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val messages = EntityModel[HmMessage]("hm_messages").key("id").timestamp("sent_at")
     // serve the LOG view (not the compacted snapshot): headers and the
     // produce sequence are record metadata, which compaction drops —
@@ -48,6 +47,5 @@ object HeadersMeta {
         s"Consumed: ${m.text} cid=${headers.getOrElse("cid", "<none>")} " +
           s"topic=${meta.topic} offset=${meta.offset} ts=${meta.timestampUtc.orNull}")
     }
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -16,13 +17,11 @@ case class HelloMessage(id: Int, created_at: Timestamp, text: String)
   *
   * Run: `sbt "runMain graft.examples.HelloWorld"`
   */
-object HelloWorld {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object HelloWorld extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_hello").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val hello = EntityModel[HelloMessage]("hello_world").key("id").timestamp("created_at")
 
     val ctx = new GraftContext(spark, name => store.snapshot(name, hello.keys))
@@ -36,7 +35,5 @@ object HelloWorld {
 
     // consume (ForEachAsync)
     messages.forEach(m => println(s"Received: ${m.text}"))
-
-    spark.stop()
   }
 }

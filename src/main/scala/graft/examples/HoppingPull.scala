@@ -1,10 +1,10 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.core.EntityModel
 import graft.dsl.Ksql
 import graft.plans.Planner
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -29,13 +29,11 @@ case class Txn(transaction_id: String, user_id: String, amount: Double,
   *
   * Run: `sbt "runMain graft.examples.HoppingPull"`
   */
-object HoppingPull {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object HoppingPull extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_hop").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val txns = EntityModel[Txn]("transactions")
       .key("transaction_id").timestamp("transaction_time")
 
@@ -82,7 +80,5 @@ object HoppingPull {
     // both transactions
     assert(rows.length == 3, s"expected 3 hopping windows in range, got ${rows.length}")
     assert(rows.take(2).forall(_.getAs[Long]("transaction_count") == 2L))
-
-    spark.stop()
   }
 }

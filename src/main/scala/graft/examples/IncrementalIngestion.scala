@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.GraftSession
+import org.apache.spark.sql.SparkSession
 
 /** Continuous-ingestion dedup — the end-to-end loop a training-data
   * pipeline runs forever: a stream of arriving documents is checked
@@ -15,14 +15,12 @@ import graft.GraftSession
   *
   * Run: `sbt "runMain graft.examples.IncrementalIngestion"`
   */
-object IncrementalIngestion {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object IncrementalIngestion extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    val corpusDir = s"$root/corpus"
-    val bandsDir = s"$root/bands"
+    val corpusDir = s"$work/corpus"
+    val bandsDir = s"$work/bands"
 
     // day 0: a seeded, already-deduplicated corpus + its band table
     val seed = Seq(
@@ -52,7 +50,5 @@ object IncrementalIngestion {
     // 200 (near-dup of 100) dropped; 201 kept; 300/301 collapsed to 300
     assert(finalCorpus == Set(100L, 101L, 201L, 300L),
       s"unexpected corpus: $finalCorpus")
-
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -24,13 +25,11 @@ case class ConsumerOffset(group: String, committed_seq: Long)
   *
   * Run: `sbt "runMain graft.examples.ManualCommit"`
   */
-object ManualCommit {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object ManualCommit extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_commit").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val orders = EntityModel[McOrder]("mc_orders").key("order_id").timestamp("placed_at")
     val offsets = EntityModel[ConsumerOffset]("mc_offsets").key("group")
     // orders are consumed from the LOG view so meta.offset is the stable
@@ -74,7 +73,5 @@ object ManualCommit {
         commit(meta.offset)
       }
     }
-
-    spark.stop()
   }
 }

@@ -1,9 +1,10 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.plans.ToQueryValidator
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -29,9 +30,8 @@ case class OvView(id: Int, text_len: Long)
   *
   * Run: `sbt "runMain graft.examples.OptionsValidationTimeouts"`
   */
-object OptionsValidationTimeouts {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object OptionsValidationTimeouts extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
     // 1. registration-time validation (ConfigureValidation analog)
@@ -56,8 +56,7 @@ object OptionsValidationTimeouts {
 
     // 2. consumption timeout (WithTimeouts analog): a slow handler is
     // cut off at the deadline instead of draining the whole set
-    val root = java.nio.file.Files.createTempDirectory("graft_ovt").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val ctx = new GraftContext(spark, name => store.snapshot(name, model.keys))
     store.add("ov_messages", (1 to 100).map(i =>
       OvMessage(i, Timestamp.valueOf("2024-01-01 00:00:00"), s"m$i")).toDF())
@@ -65,7 +64,5 @@ object OptionsValidationTimeouts {
     var seen = 0
     ctx.eventSet(model).forEach({ _ => seen += 1; Thread.sleep(30) }, timeout = 2.seconds)
     println(s"timeout-bounded consume: handled $seen of 100 before the 2s deadline")
-
-    spark.stop()
   }
 }

@@ -1,10 +1,10 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.core.{EntityModel, Period}
 import graft.dsl.Ksql
 import graft.functions.KFunctions
 import graft.plans.Planner
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -26,9 +26,8 @@ case class VerifyTick(broker: String, symbol: String, ts: Timestamp, seq: Long, 
   *
   * Run: `sbt "runMain graft.examples.OssBarsVerify"`
   */
-object OssBarsVerify {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object OssBarsVerify extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
     // 30 minutes of synthetic ticks, 1 tick / 20s, two symbols
@@ -77,7 +76,5 @@ object OssBarsVerify {
     println(s"direct 5m bars: ${a.count()}, rolled-up 5m bars: ${b.count()}, mismatches: $diff")
     if (diff == 0) println("VERIFY OK: cascade rollup == direct aggregation")
     else { a.orderBy("symbol", "window_start").show(); b.orderBy("symbol", "window_start").show() }
-
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -23,13 +24,11 @@ case class Bar(symbol: String, bucket: Timestamp, close: Double)
   *
   * Run: `sbt "runMain graft.examples.PullQuery"`
   */
-object PullQuery {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object PullQuery extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_pull").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val bars = EntityModel[Bar]("bar_1m_live").key("symbol", "bucket").timestamp("bucket")
     val ctx = new GraftContext(spark, name => store.snapshot(name, bars.keys))
 
@@ -50,7 +49,5 @@ object PullQuery {
 
     // PullRowsAsync(..., limit: n) — newest-N by event time
     ctx.eventSet(bars).latest(2).foreach(b => println(s"latest: $b"))
-
-    spark.stop()
   }
 }

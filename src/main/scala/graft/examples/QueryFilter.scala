@@ -1,9 +1,9 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.dsl.Ksql
 import graft.plans.Planner
 import graft.sources.TestEntities
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's query-basics + query-filter examples
@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.examples.QueryFilter [sfDir]"`
   */
-object QueryFilter {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object QueryFilter extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     val catalog = TestEntities.catalog(spark, sfDir)
 
@@ -42,7 +41,5 @@ object QueryFilter {
     val scanLines = filtered.queryExecution.executedPlan.toString
       .linesIterator.filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
     scanLines.foreach(l => println(l.trim.take(120)))
-
-    spark.stop()
   }
 }

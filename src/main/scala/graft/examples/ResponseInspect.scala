@@ -1,7 +1,7 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 
 /** The reference's ksql-response-inspect example
   * (`/root/reference/examples/ksql-response-inspect/Program.cs`):
@@ -17,10 +17,9 @@ import graft.sources.Tables
   *
   * Run: `sbt "runMain graft.examples.ResponseInspect [sfDir]"`
   */
-object ResponseInspect {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object ResponseInspect extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     Tables.load(spark, sfDir, "events").createOrReplaceTempView("events")
 
@@ -41,7 +40,5 @@ object ResponseInspect {
     res.queryExecution.executedPlan.toString.linesIterator
       .filter(l => l.contains("PushedFilters") || l.contains("HashAggregate"))
       .take(4).foreach(l => println("  " + l.trim.take(110)))
-
-    spark.stop()
   }
 }

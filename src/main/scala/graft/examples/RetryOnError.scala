@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.{EntityModel, ErrorAction}
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -20,13 +21,11 @@ case class RetryItem(id: Int, at: Timestamp, text: String)
   *
   * Run: `sbt "runMain graft.examples.RetryOnError"`
   */
-object RetryOnError {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object RetryOnError extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_retry").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val items = EntityModel[RetryItem]("retry_items").key("id").timestamp("at")
       .onError(ErrorAction.Retry)
     val ctx = new GraftContext(spark, name => store.snapshot(name, items.keys))
@@ -48,6 +47,5 @@ object RetryOnError {
       onDlq = (_, _) => dlqCount += 1
     )
     println(s"DLQ records: $dlqCount (retry succeeded, nothing routed)")
-    spark.stop()
   }
 }

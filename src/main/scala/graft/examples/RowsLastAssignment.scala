@@ -1,7 +1,7 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.functions.KFunctions
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -22,9 +22,8 @@ case class AssignTick(broker: String, symbol: String, ts: Timestamp, seq: Long, 
   *
   * Run: `sbt "runMain graft.examples.RowsLastAssignment"`
   */
-object RowsLastAssignment {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object RowsLastAssignment extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
     def t(s: String) = Timestamp.valueOf(s)
 
@@ -49,7 +48,5 @@ object RowsLastAssignment {
 
     println("deterministic last assignment (latest_by_offset over seq):")
     assigned.orderBy($"broker", $"symbol").show(truncate = false)
-
-    spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.streaming.{RuntimeEvent, RuntimeEventBus, RuntimeEventSink, Supervisor}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -28,13 +28,11 @@ import java.util.concurrent.atomic.AtomicInteger
   *
   * Run: `sbt "runMain graft.examples.RuntimeEvents"`
   */
-object RuntimeEvents {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object RuntimeEvents extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val chk = java.nio.file.Files.createTempDirectory("rt_events_chk").toString
     val attempts = new AtomicInteger(0)
     val processed = new AtomicInteger(0)
 
@@ -52,7 +50,7 @@ object RuntimeEvents {
     try {
       val q = sup.supervise("flaky_job") { () =>
         mem.toDS().writeStream
-          .option("checkpointLocation", chk)
+          .option("checkpointLocation", s"$work/chk")
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[Int], _: Long) =>
             if (attempts.getAndIncrement() == 0)
               sys.error("simulated transient failure on first batch")
@@ -75,7 +73,7 @@ object RuntimeEvents {
     } finally {
       RuntimeEventBus.removeSink(collector)
       RuntimeEventBus.removeSink(RuntimeEventBus.loggerSink)
-      sup.close(); spark.stop()
+      sup.close()
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.examples
 
 import graft.core.EntityModel
 import graft.sources.{AvroSchemaGen, KafkaBinding}
+import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -25,8 +26,8 @@ case class Trade(
   *
   * Run: `sbt "runMain graft.examples.SchemaAttributes"`
   */
-object SchemaAttributes {
-  def main(args: Array[String]): Unit = {
+object SchemaAttributes extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     val trades = EntityModel[Trade]("trades")
       .key("symbol")
       .timestamp("executed_at")

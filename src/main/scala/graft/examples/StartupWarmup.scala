@@ -1,7 +1,7 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's startup-warmup example
@@ -19,10 +19,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Run: `sbt "runMain graft.examples.StartupWarmup [sfDir]"`
   */
-object StartupWarmup {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object StartupWarmup extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     def timed[A](f: => A): (A, Long) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1000000)
@@ -47,7 +46,5 @@ object StartupWarmup {
       val (n, ms) = timed(Tables.load(spark, sfDir, t).count())
       println(f"  $t%-12s $n%9d rows  $ms%5d ms (cold pass above)")
     }
-
-    spark.stop()
   }
 }

@@ -1,11 +1,11 @@
 package graft.examples
 
-import graft.GraftSession
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The reference's streamiz-clear maintenance tool
@@ -22,21 +22,15 @@ import scala.jdk.CollectionConverters._
   *
   * Run: `sbt "runMain graft.examples.StateClear"`
   */
-object StateClear {
+object StateClear extends Example {
   private def du(p: Path): Long =
     Files.walk(p).iterator.asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
 
-  private def rmTree(p: Path): Unit =
-    Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-      .iterator.asScala.foreach(Files.delete)
-
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val root = Files.createTempDirectory("graft_state_clear")
-    val ckpt = root.resolve("ckpt")
+    val ckpt = Paths.get(work, "ckpt")
     val mem = MemoryStream[Int]
     mem.addData(1 to 1000: _*) // before start: AvailableNow snapshots offsets at start
     // a stateful aggregation — this populates state/ in the checkpoint
@@ -54,10 +48,7 @@ object StateClear {
     // the streamiz-clear operation: state only (rebuild), offsets kept
     val state = ckpt.resolve("state")
     println(s"clearing ${state} (${du(state)} bytes) — next start rebuilds state, keeps offsets")
-    rmTree(state)
+    Example.delete(state)
     println(s"state/ exists after clear: ${Files.exists(state)}")
-
-    rmTree(root) // full cleanup of the demo dir
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.core.EntityModel
 import graft.sources.ChangelogStore
+import org.apache.spark.sql.SparkSession
 
 case class RefData(ref_key: String, value: String)
 
@@ -19,13 +20,11 @@ case class RefData(ref_key: String, value: String)
   *
   * Run: `sbt "runMain graft.examples.TableCacheLookup"`
   */
-object TableCacheLookup {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
+object TableCacheLookup extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft_cache").toString
-    val store = new ChangelogStore(spark, root)
+    val store = new ChangelogStore(spark, work)
     val refs = EntityModel[RefData]("ref_data").key("ref_key").asTable.cached
     val ctx = new GraftContext(spark, name => store.snapshot(name, refs.keys))
 
@@ -43,6 +42,5 @@ object TableCacheLookup {
       case Some(row) => println(s"Lookup ref-001: ${row.value}")
       case None      => println("Lookup ref-001: not found")
     }
-    spark.stop()
   }
 }

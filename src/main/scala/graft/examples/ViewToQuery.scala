@@ -1,8 +1,9 @@
 package graft.examples
 
-import graft.{GraftContext, GraftSession}
+import graft.GraftContext
 import graft.dsl.Ksql
 import graft.sources.TestEntities
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's view-toquery
@@ -17,10 +18,9 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.examples.ViewToQuery [sfDir]"`
   */
-object ViewToQuery {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object ViewToQuery extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     val ctx = new GraftContext(spark, TestEntities.catalog(spark, sfDir))
     ctx.register(TestEntities.orders)
@@ -46,7 +46,5 @@ object ViewToQuery {
     ctx.set("big_orders_by_cust")
       .orderBy(col("cnt").desc, col("o_custkey"))
       .show(5, truncate = false)
-
-    spark.stop()
   }
 }

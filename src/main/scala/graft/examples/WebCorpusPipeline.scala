@@ -1,7 +1,7 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.operators.{Curation, Dedup, HashFamily, TextAnalysis}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end web-corpus preparation with the round-4 operator set —
@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.examples.WebCorpusPipeline [sfDir]"`
   */
-object WebCorpusPipeline {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object WebCorpusPipeline extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
     import spark.implicits._
 
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
@@ -75,7 +74,5 @@ object WebCorpusPipeline {
     mixed.groupBy("source")
       .agg(sum("n_tokens").as("tokens"), max("copy").as("max_epoch"))
       .orderBy("source").show(5, truncate = false)
-
-    spark.stop()
   }
 }

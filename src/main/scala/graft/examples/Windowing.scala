@@ -1,10 +1,10 @@
 package graft.examples
 
-import graft.GraftSession
 import graft.dsl.Ksql
 import graft.plans.Planner
 import graft.core.Period
 import graft.sources.TestEntities
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.concurrent.duration._
@@ -22,10 +22,9 @@ import scala.concurrent.duration._
   *
   * Run: `sbt "runMain graft.examples.Windowing [sfDir]"`
   */
-object Windowing {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+object Windowing extends Example {
+  def run(spark: SparkSession, args: Array[String], work: String): Unit = {
+    val sfDir = Example.sfDir(args)
 
     val catalog = TestEntities.catalog(spark, sfDir)
 
@@ -52,7 +51,5 @@ object Windowing {
       catalog)
     println("Hopping 5m/2m (each event lands in ceil(5/2)=3 windows):")
     hopping.orderBy(col("window_start"), col("event_type")).show(5, truncate = false)
-
-    spark.stop()
   }
 }

@@ -3,41 +3,44 @@ package graft
 import scala.util.matching.Regex
 
 /** The source scan behind the guard specs (`ParquetReadGuardSpec`,
-  * `SessionGuardSpec`): find every match of a pattern in code, outside
-  * comments, keyed by file and enclosing `def` or `test(...)`, and
+  * `SessionGuardSpec`, `ExamplesSpec`): find every match of a pattern in
+  * code, outside comments, keyed by file and enclosing `def` or
+  * `test(...)` (or another scope pattern's name), and
   * compare those sites with an allowlist of expected counts.
   */
 object SourceSweep {
 
   private val comment = """(?s)/\*.*?\*/|(?m)(?<![:"])//[^\n]*""".r
-  private val scope = """\bdef\s+(\w+)|\btest\s*\(\s*"([^"]*)"""".r
+  private val defOrTest = """\bdef\s+(\w+)|\btest\s*\(\s*"([^"]*)"""".r
 
   /** Comments blanked to spaces, so offsets and line numbers survive. */
   private def code(src: String): String =
     comment.replaceAllIn(src, m =>
       Regex.quoteReplacement(m.matched.map(c => if (c == '\n') c else ' ')))
 
-  /** (enclosing def or test, line) of every match of `pattern` in `src`. */
-  def find(pattern: Regex, src: String): Seq[(String, Int)] = {
+  /** (enclosing scope, line) of every match of `pattern` in `src`; the
+    * scope is the name the last `scope` match before it captured (by
+    * default the enclosing def or test). */
+  def find(pattern: Regex, src: String, scope: Regex = defOrTest): Seq[(String, Int)] = {
     val c = code(src)
     pattern.findAllMatchIn(c).map { m =>
       val before = c.substring(0, m.start)
       val s = scope.findAllMatchIn(before).toSeq.lastOption
-        .map(s => Option(s.group(1)).getOrElse(s.group(2))).getOrElse("<top>")
+        .flatMap(_.subgroups.find(_ != null)).getOrElse("<top>")
       (s, before.count(_ == '\n') + 1)
     }.toSeq
   }
 
-  /** (file relative to `root`, enclosing def or test) -> match lines, over
+  /** (file relative to `root`, enclosing scope) -> match lines, over
     * every `.scala` file under `root` that `include` accepts. */
-  def sweep(root: String, pattern: Regex, include: String => Boolean = _ => true)
-      : Map[(String, String), Seq[Int]] = {
+  def sweep(root: String, pattern: Regex, include: String => Boolean = _ => true,
+      scope: Regex = defOrTest): Map[(String, String), Seq[Int]] = {
     val dir = java.nio.file.Paths.get(root)
     val found = scala.collection.mutable.Map.empty[(String, String), Seq[Int]]
     java.nio.file.Files.walk(dir).forEach { p =>
       val rel = dir.relativize(p).toString.replace('\\', '/')
       if (rel.endsWith(".scala") && include(rel))
-        find(pattern, java.nio.file.Files.readString(p)).foreach { case (s, line) =>
+        find(pattern, java.nio.file.Files.readString(p), scope).foreach { case (s, line) =>
           found((rel, s)) = found.getOrElse((rel, s), Seq.empty) :+ line
         }
     }

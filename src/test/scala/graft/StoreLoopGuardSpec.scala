@@ -29,7 +29,7 @@ class StoreLoopGuardSpec extends AnyFunSuite {
   /** (file under src/main/scala/graft, enclosing def) -> (sites, reason) */
   private val foreachAllowed: Map[(String, String), (Int, String)] = Map(
     ("streaming/StoreLoop.scala", "attach") -> (1, "the engine itself"),
-    ("examples/RuntimeEvents.scala", "main") ->
+    ("examples/RuntimeEvents.scala", "run") ->
       (1, "a Supervisor demo whose sink fails once on purpose; it stores nothing")
   )
 
