@@ -5,6 +5,7 @@ import graft.dsl.QueryModel
 import graft.plans.Planner
 import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.DecimalType
 
 import scala.collection.concurrent.TrieMap
 
@@ -140,7 +141,15 @@ final class GraftContext(
 final class EventSet[T](ctx: GraftContext, val model: EntityModel[T]) {
   private implicit def enc: org.apache.spark.sql.Encoder[T] = model.encoder
 
-  def toDS: Dataset[T] = ctx.set(model.name).as[T](model.encoder)
+  def toDS: Dataset[T] = rows.as[T](model.encoder)
+
+  /** The entity's rows with each declared `decimal(col, p, s)` column
+    * cast to its declared precision and scale: the encoder alone keeps
+    * whatever decimal type the store holds. */
+  private def rows: DataFrame =
+    model.decimals.foldLeft(ctx.set(model.name)) { case (df, (c, (p, s))) =>
+      if (df.columns.contains(c)) df.withColumn(c, df(c).cast(DecimalType(p, s))) else df
+    }
 
   /** Driver-materialization budget for pull reads (session conf
     * `graft.pull.maxRows`, default 1,000,000). The reference's
@@ -288,7 +297,7 @@ final class EventSet[T](ctx: GraftContext, val model: EntityModel[T]) {
     */
   def forEachWithMeta(action: (T, Map[String, String], RecordMeta) => Unit): Unit = {
     import org.apache.spark.sql.functions._
-    val df0 = ctx.set(model.name)
+    val df0 = rows
     // a log-backed set carries tombstones (__op = "d"); consumers see
     // LIVE records only — dispatching a delete as an upsert would
     // resurrect the key on replay

@@ -49,6 +49,23 @@ object Example {
     try body(work.toString) finally delete(work)
   }
 
+  /** Each file scan of a physical plan's text as one line: the scan's
+    * head (format and read columns) and its `PushedFilters: [...]`, the
+    * filters the reader applies itself. A scan line runs to hundreds of
+    * characters, so a fixed-width cut ends it before its pushed filters.
+    */
+  def scanFilters(plan: String): Seq[String] =
+    plan.linesIterator.filter(l => l.contains("FileScan") && l.contains("PushedFilters: [")).map { l =>
+      val from = l.indexOf("FileScan")
+      val open = l.indexOf("PushedFilters: [") + "PushedFilters: ".length
+      var depth = 0
+      val close = (open until l.length).find { i =>
+        if (l(i) == '[') depth += 1 else if (l(i) == ']') depth -= 1
+        depth == 0
+      }.getOrElse(l.length - 1)
+      s"${l.substring(from, l.indexOf(']', from) + 1)} PushedFilters: ${l.substring(open, close + 1)}"
+    }.toSeq
+
   /** Deletes `p` and everything under it. */
   def delete(p: Path): Unit =
     Using.resource(Files.walk(p)) {

@@ -38,8 +38,6 @@ object QueryFilter extends Example {
     filtered.orderBy(col("event_id")).show(5, truncate = false)
 
     // the filter reaches the scan — no post-hoc row sifting
-    val scanLines = filtered.queryExecution.executedPlan.toString
-      .linesIterator.filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
-    scanLines.foreach(l => println(l.trim.take(120)))
+    Example.scanFilters(filtered.queryExecution.executedPlan.toString).foreach(println)
   }
 }

@@ -37,8 +37,9 @@ object ResponseInspect extends Example {
       .foreach(l => println("  " + l.take(110)))
 
     println("\nresponse / physical plan (scan pushdown):")
-    res.queryExecution.executedPlan.toString.linesIterator
-      .filter(l => l.contains("PushedFilters") || l.contains("HashAggregate"))
-      .take(4).foreach(l => println("  " + l.trim.take(110)))
+    val physical = res.queryExecution.executedPlan.toString
+    physical.linesIterator.filter(_.contains("HashAggregate"))
+      .take(3).foreach(l => println("  " + l.trim.take(110)))
+    Example.scanFilters(physical).foreach(l => println("  " + l))
   }
 }

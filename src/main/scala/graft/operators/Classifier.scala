@@ -341,20 +341,4 @@ object Classifier {
       )
       .orderBy(col("bin"))
   }
-
-  /** The pre-kernel composed twin of [[score]] (interpreted
-    * aggregate-lambda fold) — retained as the identity oracle for the
-    * native kernel's spec pin.
-    */
-  private[graft] def scoreComposed(textCol: Column, model: HashedLogReg): Column = {
-    val wLit = typedLit(model.weights.toSeq)
-    val toks = split(textCol, " ")
-    val dot = aggregate(
-      toks,
-      lit(0.0),
-      (acc, t) =>
-        acc + element_at(wLit, (tokenBucket(t, model.buckets, model.family) + lit(1L)).cast("int"))
-    ) / size(toks).cast("double")
-    lit(1.0) / (lit(1.0) + exp(-(lit(model.bias) + dot)))
-  }
 }

@@ -644,10 +644,12 @@ object TextAnalysis {
     * broadcast one-row aggregate. The QUERY side is small by contract
     * (an eval set, not a second corpus), so query terms broadcast onto
     * the term stream — the corpus never shuffles on terms for the match.
-    * The per-(query, doc) sum is again hash-aggregable, and top-K per
-    * query goes through the rank window's WindowGroupLimit partial: only
-    * K rows per query survive each partition before the exchange, so the
-    * shuffled volume is O(K·|queries|), independent of corpus size.
+    * The per-(query, doc) sum runs after one explicit (query, doc)
+    * exchange ([[bm25Serve]]), and top-K per query is a bounded heap
+    * ([[graft.functions.BoundedHeap.topKBy]]) whose map-side partial
+    * keeps only K rows per query per partition before the exchange on
+    * the query id, so the ranking's shuffled volume is O(K·|queries|),
+    * independent of corpus size, and nothing is sorted.
     *
     * Determinism (oracle convention, QueryPack.scala): per-term scores
     * sum in engine-dependent order, so the FINAL score is rounded to
@@ -705,10 +707,26 @@ object TextAnalysis {
 
   /** Score a query batch against a (possibly persisted and re-read)
     * [[Bm25Index]]. Query terms are deduped per query (BM25 scores a
-    * term once) and SMALL by contract; attaching df to the query side
-    * keeps the df lookup broadcast-shaped — the corpus-side tf stream
-    * never shuffles on term for the match, and with `tf` stored
-    * term-bucketed the match is also exchange-free on re-reads.
+    * term once) and SMALL by contract, so ONE broadcast side carries
+    * everything but tf: the (query, term) pairs joined to df, crossed
+    * with the one-row N/avgdl, with each term's idf computed there. The
+    * corpus-side tf stream never shuffles on term for the match, and
+    * with `tf` stored term-bucketed the match is also exchange-free on
+    * re-reads; each matched row's term score is one projection.
+    *
+    * Scale shape: the matched rows shuffle once, on an explicit
+    * `repartition(numShufflePartitions, query, doc)`, which the
+    * (query, doc) sum then needs no other exchange for. An explicit
+    * partition count keeps AQE from coalescing this CPU-bound scoring
+    * stage into one task (it did: for 32 queries against a 5,000-doc
+    * store, 1.1 MB of shuffle ran as one task).
+    * The trade-off is the map-side partial sum: the scoring shuffle
+    * carries one row per matched (query, term, doc), at most the query
+    * length times the rows a combined (query, doc) shuffle would.
+    * Top-K per query is a bounded heap keyed (-score, doc) — the
+    * (score DESC, doc ASC) rank order exactly, since the score is 6-dp
+    * rounded — so only K rows per query per partition cross the final
+    * exchange and nothing is sorted; array position is the rank.
     */
   def bm25Serve(
       index: Bm25Index,
@@ -721,29 +739,36 @@ object TextAnalysis {
   ): DataFrame = {
     require(topK > 0, "topK must be positive")
     val idCol = index.docIdCol
-    val qterms = queries
+    val side = queries
       .select(col(queryIdCol), explode(split(col(queryTextCol), " ")).as("term"))
       .distinct()
-    val qdf = qterms.join(index.dfreq, "term")
-    val perTerm = index.tf
-      .join(broadcast(qdf), "term")
-      .crossJoin(broadcast(index.stats))
-      .withColumn(
-        "idf",
-        log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .withColumn(
-        "ts",
-        col("idf") * (col("tf") * (k1 + 1.0)) /
+      .join(index.dfreq, "term")
+      .crossJoin(index.stats)
+      .select(
+        col("term"), col(queryIdCol), col("avgdl"),
+        log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0).as("idf"))
+    val parts = index.tf.sparkSession.sessionState.conf.numShufflePartitions
+    val scored = index.tf
+      .join(broadcast(side), "term")
+      .select(
+        col(queryIdCol), col(idCol),
+        (col("idf") * (col("tf") * (k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-    val scored = perTerm
+          .as("ts"))
+      .repartition(parts, col(queryIdCol), col(idCol))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(round(sum(col("ts")), 6).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol))
     scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .groupBy(col(queryIdCol))
+      .agg(graft.functions.BoundedHeap
+        .topKBy(struct(col(idCol), col("score")), struct(negate(col("score")), col(idCol)), topK)
+        .as("__top"))
+      .select(col(queryIdCol), posexplode(col("__top")).as(Seq("__i", "__d")))
+      .select(
+        col(queryIdCol),
+        col(s"__d.$idCol").as(idCol),
+        col("__d.score").as("score"),
+        (col("__i") + 1).cast("int").as("rank"))
   }
 
   /** Naive-Bayes quality classifier — the model-based filtering step

@@ -4,16 +4,18 @@ import graft.operators.TextAnalysis
 import graft.operators.TextAnalysis.Bm25Index
 import graft.sources.Lake
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Incrementally-maintained BM25 index: each arriving micro-batch
   * appends its documents' term-frequency rows to ONE persisted store;
-  * document frequencies and corpus stats are DERIVED from that store at
-  * load time, so there is no second table to keep transactionally in
-  * step — the maintainer inherits exactly-once from a single
-  * batch-stamped append (the [[IncrementalSketches]] shape, applied to
-  * retrieval).
+  * document frequencies and corpus stats are DERIVED from that store,
+  * once per store file set ([[load]]), so there is no second table to
+  * keep transactionally in step — the maintainer inherits exactly-once
+  * from a single batch-stamped append (the [[IncrementalSketches]]
+  * shape, applied to retrieval).
   *
   * Contract (spec-pinned): `bm25Serve(load(store))` returns the SAME
   * ranking as a from-scratch [[TextAnalysis.bm25Index]] over the
@@ -66,10 +68,29 @@ object IncrementalBm25 {
 
   /** Load the store as a servable [[Bm25Index]]: df and corpus stats
     * derive from the tf rows (df = terms' doc counts; N/avgdl from the
-    * per-doc lengths, one row per doc via the (id, dl) projection).
-    * The store is read through [[Lake.read]], so loading runs no Spark
-    * job: the schema comes from one footer on the driver, and the first
-    * job is the caller's first serve.
+    * per-doc lengths, one row per doc via the (id, dl) projection),
+    * once per store file set. The store is read through [[Lake.read]],
+    * so loading runs no Spark job: the schema comes from one footer on
+    * the driver, and the first job is the caller's first serve.
+    *
+    * The derived df table and stats row are persisted, one entry per
+    * store dir, keyed by the session, the id column and the exact file
+    * set of the tf frame this load returns (`Dataset.inputFiles`, read
+    * from the relation's file index on the driver: no job, no second
+    * listing), so the statistics always match the rows being scored.
+    * Every graft write of the store creates new file names (part files
+    * carry a per-write UUID) and none rewrites a file in place, so an
+    * append, a compaction swap or an empty-file drop each changes the
+    * key. On a key change the tables are re-derived as before and the
+    * old entry is unpersisted (non-blocking). They derive from tf rows
+    * detached from the store path ([[ColumnBridge.detached]]): Spark's
+    * cache manager re-lists and re-plans every cached plan over a path
+    * at each write to it, which would put that work on every ingest
+    * trigger, and matches cached plans by root path. The first serve
+    * after a change materializes the entry; later serves of the same
+    * file set read it. Another session or file set replaces the entry,
+    * so a stopped session's frames stay pinned only until the store's
+    * next load.
     */
   def load(
       spark: SparkSession,
@@ -77,13 +98,48 @@ object IncrementalBm25 {
       idCol: String = "doc_id"
   ): Bm25Index = {
     val tf = Lake.read(spark, storeDir).drop(BatchCol)
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val docs = tf.select(col(idCol), col("dl")).groupBy(col(idCol))
-      .agg(max(col("dl")).as("dl"))
-    val stats = docs.agg(
-      avg(col("dl")).as("avgdl"),
-      count(lit(1)).cast("double").as("n"))
-    Bm25Index(tf, dfreq, stats, idCol)
+    val d = Derived.of(spark, storeDir, tf, idCol)
+    Bm25Index(tf, d.dfreq, d.stats, idCol)
+  }
+
+  /** One store's derived side tables, for `spark`, `idCol` and the tf
+    * file set `files`. */
+  private final case class Derived(
+      spark: SparkSession, idCol: String, files: Set[String], dfreq: DataFrame, stats: DataFrame) {
+    // a cleared cache (catalog.clearCache) re-derives rather than
+    // recomputing both tables inside every serve
+    def live: Boolean =
+      dfreq.storageLevel != StorageLevel.NONE && stats.storageLevel != StorageLevel.NONE
+    def release(): Unit =
+      if (!spark.sparkContext.isStopped) {
+        dfreq.unpersist(blocking = false)
+        stats.unpersist(blocking = false)
+      }
+  }
+
+  private object Derived {
+    private val byStore = scala.collection.mutable.Map.empty[String, Derived]
+
+    def of(spark: SparkSession, storeDir: String, tf: DataFrame, idCol: String): Derived = {
+      val files = tf.inputFiles.toSet
+      byStore.synchronized {
+        byStore.get(storeDir)
+          .filter(d => (d.spark eq spark) && d.idCol == idCol && d.files == files && d.live)
+          .getOrElse {
+            byStore.remove(storeDir).foreach(_.release())
+            val rows = ColumnBridge.detached(tf)
+            val dfreq = rows.groupBy(col("term")).agg(count(lit(1)).as("df"))
+            val docs = rows.select(col(idCol), col("dl")).groupBy(col(idCol))
+              .agg(max(col("dl")).as("dl"))
+            val stats = docs.agg(
+              avg(col("dl")).as("avgdl"),
+              count(lit(1)).cast("double").as("n"))
+            val fresh = Derived(spark, idCol, files, dfreq.persist(), stats.persist())
+            byStore(storeDir) = fresh
+            fresh
+          }
+      }
+    }
   }
 
   /** Attach the index maintenance loop to a document stream.
@@ -95,10 +151,10 @@ object IncrementalBm25 {
     * so a long-running loop goes footer-bound without it). The repack
     * RANGE-clusters on `term` so a serve-time term probe can skip
     * whole files on min/max stats — the df/stats derivation in
-    * [[load]] aggregates everything regardless, but retrieval touches
-    * only the query's terms. `asyncCompact` moves the rewrite off the
-    * trigger path (the [[IncrementalDedup]] discipline — measured
-    * guidance on that attach's scaladoc).
+    * [[load]] aggregates everything (once per file set), but retrieval
+    * touches only the query's terms. `asyncCompact` moves the rewrite
+    * off the trigger path (the [[IncrementalDedup]] discipline —
+    * measured guidance on that attach's scaladoc).
     */
   def attach(
       arriving: DataFrame,

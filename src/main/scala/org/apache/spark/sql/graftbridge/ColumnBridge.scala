@@ -40,6 +40,20 @@ object ColumnBridge {
   ): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `df` over its already-planned RDD: the same rows, but the plan no
+    * longer names `df`'s source. A frame cached on top of it is then
+    * neither re-listed and re-planned by Spark's cache manager at each
+    * write to that source's path (`CacheManager.recacheByPath`) nor
+    * matched against other plans over the same root path. Plans on the
+    * driver: a plan without an exchange runs no job.
+    */
+  def detached(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD
+        .fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
+
   /** Release the blocks behind a `localCheckpoint()`ed DataFrame.
     * `Dataset.unpersist` only reaches cache-manager entries; a local
     * checkpoint lives as a persisted RDD inside a `LogicalRDD` leaf,

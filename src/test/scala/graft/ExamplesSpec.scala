@@ -44,7 +44,7 @@ class ExamplesSpec extends SparkSpec {
     DesigntimeKsqlTumbling -> Seq("WINDOW TUMBLING (SIZE 1 MINUTES)"),
     EmbeddingIndexJob -> Seq("corpus: 500 vectors x 64 dims",
       "with exact re-rank of the top-50 candidates:"),
-    ErrorHandling -> Seq("Processed order 3: 7.25",
+    ErrorHandling -> Seq("Processed order 1: 19.99\n", "Processed order 3: 7.25\n",
       "DLQ <- order 2 after 4 attempts: Amount cannot be negative"),
     ErrorHandlingDlq -> Seq("Processed order 3: 7.5", "|2  |Amount cannot be negative|0        |"),
     HeadersMeta -> Seq("topic=hm_messages offset=1000000"),
@@ -57,8 +57,10 @@ class ExamplesSpec extends SparkSpec {
       "failOnErrors: column 'id': type STRING does not match entity type INT"),
     OssBarsVerify -> Seq("VERIFY OK: cascade rollup == direct aggregation"),
     PullQuery -> Seq("count=3", "latest: Bar(S1,2024-01-01 09:02:00.0,101.2)"),
-    QueryFilter -> Seq("filtered purchases > 100 (first 5):", "FileScan parquet [event_id"),
-    ResponseInspect -> Seq("  loud: string", "FileScan parquet [event_type"),
+    QueryFilter -> Seq("filtered purchases > 100 (first 5):", "FileScan parquet [event_id",
+      "PushedFilters: [IsNotNull(event_type), IsNotNull(value), EqualTo(event_type,purchase), GreaterThan(value,100.0)]"),
+    ResponseInspect -> Seq("  loud: string", "FileScan parquet [event_type",
+      "PushedFilters: [IsNotNull(value), GreaterThan(value,50.0)]"),
     RetryOnError -> Seq("Processed item 1 on attempt 3", "DLQ records: 0"),
     RowsLastAssignment -> Seq("|b     |X     |12.5    |3          |3         |"),
     RuntimeEvents -> Seq("restarts: 1", "processed after self-heal: 3 records",

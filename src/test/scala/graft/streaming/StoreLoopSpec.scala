@@ -277,6 +277,27 @@ class StoreLoopSpec extends SparkSpec {
       "perplexity_gate" -> 5), s"jobs per append: $jobs")
   }
 
+  test("a BM25 serve runs a fixed number of Spark jobs, fewer on an unchanged store") {
+    spark.streams.active.foreach(_.stop()) // a Profile window counts every job
+    val profile = graft.Profile.of(spark)
+    val root = Files.createTempDirectory("graft_storeloop_serve").toString
+    val bm25 = stores.find(_.name == "bm25").get
+    bm25.ingest(slice(0), root, 0L, true)
+    val queries = Seq((1L, "alpha beta gamma"), (2L, "delta omega")).toDF("qid", "qtext")
+    def serveJobs(): Long = profile.window {
+      graft.operators.TextAnalysis.bm25Serve(
+        IncrementalBm25.load(spark, s"$root/bm25"), queries, "qid", "qtext", 10).collect()
+    }._2("jobs")
+    def firstAndRepeat(): (Long, Long) = (serveJobs(), serveJobs())
+    val afterSeed = firstAndRepeat()
+    bm25.ingest(slice(1), root, 1L, false)
+    val afterAppend = firstAndRepeat()
+    // a serve that derived df and N/avgdl on every call ran 10 jobs; the
+    // first serve after a change materializes the cached tables as well
+    assert(Seq(afterSeed, afterAppend) == Seq((12L, 7L), (12L, 7L)),
+      s"jobs per (first, repeat) serve: after the seed $afterSeed, after an append $afterAppend")
+  }
+
   test("a failed SCD2 append releases its pin: nothing stays cached") {
     val root = Files.createTempDirectory("graft_storeloop_scd2_fail").toString
     val scd2 = stores.find(_.name == "scd2").get
