@@ -88,9 +88,11 @@ object IncrementalBm25 {
     * at each write to it, which would put that work on every ingest
     * trigger, and matches cached plans by root path. The first serve
     * after a change materializes the entry; later serves of the same
-    * file set read it. Another session or file set replaces the entry,
-    * so a stopped session's frames stay pinned only until the store's
-    * next load.
+    * file set read it. Another file set replaces the store's entry, and
+    * a load in another session drops the entries of every store (a
+    * stopped session's too), so at most one live session's frames stay
+    * pinned; a deleted store's frames go when that session stops or at
+    * the next load in another session.
     */
   def load(
       spark: SparkSession,
@@ -123,8 +125,13 @@ object IncrementalBm25 {
     def of(spark: SparkSession, storeDir: String, tf: DataFrame, idCol: String): Derived = {
       val files = tf.inputFiles.toSet
       byStore.synchronized {
+        byStore.filterInPlace { (_, d) =>
+          val keep = (d.spark eq spark) && !d.spark.sparkContext.isStopped
+          if (!keep) d.release()
+          keep
+        }
         byStore.get(storeDir)
-          .filter(d => (d.spark eq spark) && d.idCol == idCol && d.files == files && d.live)
+          .filter(d => d.idCol == idCol && d.files == files && d.live)
           .getOrElse {
             byStore.remove(storeDir).foreach(_.release())
             val rows = ColumnBridge.detached(tf)

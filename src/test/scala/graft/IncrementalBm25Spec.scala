@@ -5,6 +5,7 @@ import graft.sources.AsyncCompactor
 import graft.streaming.IncrementalBm25
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import scala.jdk.CollectionConverters._
 
@@ -201,5 +202,17 @@ class IncrementalBm25Spec extends SparkSpec {
     assert((theirs.dfreq.sparkSession eq other) && (theirs.stats.sparkSession eq other))
     val back = assertServes(store, 0 until 100)
     assert((back.dfreq.sparkSession eq spark) && !(back.dfreq eq mine.dfreq))
+  }
+
+  test("a load in another session releases every store's derived tables") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bm25_release").toString
+    Seq("a", "b").foreach(s => IncrementalBm25.seed(docs(0 until 50).toDF("doc_id", "text"), s"$root/$s"))
+    val pinned = Seq("a", "b").map(s => assertServes(s"$root/$s", 0 until 50))
+    assert(pinned.forall(_.dfreq.storageLevel != StorageLevel.NONE))
+    // a load of one store in another session frees the other store's frames too
+    IncrementalBm25.load(spark.newSession(), s"$root/a")
+    pinned.foreach { p =>
+      assert(p.dfreq.storageLevel == StorageLevel.NONE && p.stats.storageLevel == StorageLevel.NONE)
+    }
   }
 }
