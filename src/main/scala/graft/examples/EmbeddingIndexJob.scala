@@ -29,8 +29,9 @@ object EmbeddingIndexJob extends Example {
     val maxScale = q8.agg(max("scale")).first().getDouble(0)
     println(f"int8 codes: ${n * dim / 1024} KiB, worst per-element error <= ${maxScale / 2}%.5f")
 
-    // 2. PQ: 16 subspaces x 64 codewords -> 16-byte codes
-    val cb = Similarity.trainPQ(emb, "embedding", m = 16, k = 64)
+    // 2. PQ: 16 subspaces x 64 codewords -> 16-byte codes, trained on
+    //    a bounded id-ordered sample of the corpus
+    val cb = Similarity.lloydCodebooks(emb, "vec_id", "embedding", m = 16, k = 64)
     val enc = Similarity.pqEncode(emb, "vec_id", "embedding", cb)
     println(s"pq codes: ${n * 16 / 1024} KiB (16x) + codebook ${16 * 64 * (dim / 16) * 4 / 1024} KiB")
 

@@ -121,8 +121,8 @@ object ProductionPipeline {
     // (245 vs 6213 dups): untrained fine-grained cells split
     // near-identical vectors across boundaries. The lesson the solo
     // family rows already encode (BASELINE r8/r11): growing nlist is
-    // only sound with TRAINED centroids (trainCentroidsKMeans /
-    // lloydCodebooks on a capped sample) + assignCellsApprox; with a
+    // only sound with TRAINED centroids (lloydCentroids on its capped
+    // sample) + assignCellsApprox; with a
     // handful of arbitrary cells the id-window banding inside
     // embeddingNearDup bounds the pairing instead, which is the shape
     // this stage keeps.

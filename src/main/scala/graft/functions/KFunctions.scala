@@ -24,8 +24,6 @@ object KFunctions {
   def len(c: Column): Column = length(c)
   /** C# `s.Contains(t)` → `INSTR(s,t) > 0` (registry :26). */
   def containsStr(s: Column, sub: String): Column = instr(s, sub) > 0
-  def startsWithStr(s: Column, p: String): Column = s.startsWith(p)
-  def endsWithStr(s: Column, p: String): Column = s.endsWith(p)
   /** Left(s, n) — clamped substring composite (registry :35-39). */
   def leftStr(c: Column, n: Int): Column = substring(c, 1, n)
   /** Right(s, n) — clamped composite (registry :40-44). */

@@ -9,8 +9,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * behave on anisotropic embedding spaces (decorrelated, unit-variance
   * dimensions; optional rank reduction for cheaper distance math).
   *
-  * Scale shape (the trainPQ/codebook discipline): ONE corpus pass
-  * accumulates n/Σx/Σxxᵀ through a map-side-combinable typed aggregate
+  * Scale shape (the PQ-codebook discipline: a driver-sized model from
+  * bounded work): ONE corpus pass accumulates n/Σx/Σxxᵀ through a
+  * map-side-combinable typed aggregate
   * ([[graft.functions.MomentsAgg]] — d=64 ⇒ a 17 KB buffer per
   * partition on the exchange); only the d×d matrix reaches the driver,
   * where a deterministic cyclic Jacobi eigendecomposition (classic

@@ -75,40 +75,12 @@ object Similarity {
         .as("q"))
   }
 
-  /** Product-quantization codebooks (Jégou et al. 2011): the vector is
-    * cut into `m` subvectors and each subspace gets its own `k`-word
-    * codebook from seeded KMeans — the FAISS-standard companion of IVF
-    * for memory-bounded ANN. The model is tiny (m·k·d/m floats) and
-    * driver-side, like [[randomPlanes]]; training scans the corpus once
-    * per subspace through Spark ML's distributed KMeans.
-    */
-  def trainPQ(
-      corpus: DataFrame,
-      vecCol: String,
-      m: Int = 8,
-      k: Int = 16,
-      seed: Long = 42L
-  ): Seq[Array[Array[Float]]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
-    require(dim % m == 0, s"vector dim $dim must divide into $m subspaces")
-    val sub = dim / m
-    (0 until m).map { j =>
-      val feats = corpus.select(
-        array_to_vector(slice(col(vecCol), j * sub + 1, sub).cast("array<double>"))
-          .as("features"))
-      val model = new KMeans().setK(k).setSeed(seed + j).setFeaturesCol("features").fit(feats)
-      model.clusterCenters.map(_.toArray.map(_.toFloat))
-    }
-  }
-
   /** Fixed data-derived codebooks: codeword c of subspace j is the j-th
-    * slice of the c-th sample row. Like [[trainPQ]]'s KMeans centers
+    * slice of the c-th sample row. Like [[lloydCodebooks]]' centers
     * this is MODEL extraction (a handful of rows to the driver, not a
     * data path) — it exists so the PQ pipeline has a deterministic,
     * SQL-mirrorable form for the oracle gate; production trains with
-    * [[trainPQ]].
+    * [[lloydCodebooks]].
     */
   def codebooksFromRows(
       samples: DataFrame,
@@ -128,11 +100,11 @@ object Similarity {
     * the driver, not a data path), but the codewords are TRAINED
     * centroids instead of raw sample rows, which measurably raises ADC
     * recall at identical (m, k) (SkewAndIvfSpec pins the comparison).
-    * Unlike Spark ML's kmeans|| init, this is bit-deterministic across
-    * runs AND partitionings: fixed-seed k-means++ init over the
-    * caller's sort order, fixed `iters` Lloyd's iterations, empty
-    * clusters keep their previous center. Callers must pass an ORDERED
-    * sample.
+    * Bit-deterministic across runs AND partitionings: fixed-seed
+    * k-means++ init over the order of `points`, fixed `iters` Lloyd's
+    * iterations, empty clusters keep their previous center. The public
+    * trainers pass the id-ordered [[trainingSample]], so the order is
+    * never the caller's to get wrong.
     */
   private[graft] def lloydTrain(
       points: Array[Array[Float]],
@@ -213,21 +185,81 @@ object Similarity {
     centers.map(_.map(_.toFloat))
   }
 
-  /** Lloyd's-trained PQ codebooks: [[lloydTrain]] per subspace over a
-    * bounded ordered sample. Same signature family as
-    * [[codebooksFromRows]]; swap-in for higher recall when the model
-    * need not be SQL-mirrorable.
+  /** The bounded, id-ordered sample every Lloyd's trainer fits on (the
+    * sample-FIRST rule, BASELINE.md round 8): the `idCol < sampleCap`
+    * filter pushes to the parquet scan, so a 4096-row sample reads
+    * ~4096 rows, NOT the whole corpus the way an orderBy+limit sample
+    * would (full sort before the limit); the id order fixes the
+    * k-means++ init. With `centroids`, the rows are the residuals
+    * (vec − assigned centroid) of the same bounded rows — the IVF-PQ
+    * training space — computed AFTER the filter, so residuals never
+    * see the corpus. One float-array column; ModelSampleGuardSpec pins
+    * both scan bounds.
+    */
+  private[graft] def trainingSample(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      sampleCap: Int,
+      centroids: Option[DataFrame] = None
+  ): DataFrame = {
+    val bounded = corpus.filter(col(idCol) < sampleCap)
+    val vecs = centroids.fold(bounded.select(col(idCol), col(vecCol).as("__v"))) { cents =>
+      assignCells(bounded, cents, vecCol)
+        .join(broadcast(cents), col("cell") === col("centroid_id"))
+        .select(col(idCol), zip_with(col(vecCol), col("centroid_vec"),
+          (x, c) => (x.cast("double") - c.cast("double")).cast("float")).as("__v"))
+    }
+    // the sort sits above the join: a sort below one is dropped by the
+    // optimizer, and the pulled order would then be the join's
+    vecs.orderBy(col(idCol)).select(col("__v")).limit(sampleCap)
+  }
+
+  private def sampleRows(sample: DataFrame): Array[Array[Float]] =
+    sample.collect().map(_.getSeq[Float](0).toArray)
+
+  /** Lloyd's-trained PQ codebooks (Jégou et al., TPAMI 2011: the vector
+    * is cut into `m` subvectors and each subspace gets its own `k`-word
+    * codebook, trained on a sample): [[lloydTrain]] per subspace over
+    * the [[trainingSample]] of `corpus`. Same model shape as
+    * [[codebooksFromRows]]; the swap-in for higher recall when the
+    * model need not be SQL-mirrorable.
     */
   def lloydCodebooks(
-      samples: DataFrame,
+      corpus: DataFrame,
+      idCol: String,
       vecCol: String,
       m: Int,
       k: Int = 16,
       iters: Int = 20,
       sampleCap: Int = 4096
+  ): Seq[Array[Array[Float]]] =
+    subspaceCodebooks(
+      sampleRows(trainingSample(corpus, idCol, vecCol, sampleCap)), m, k, iters)
+
+  /** Residual-space PQ training for [[ivfPqEncode]]: [[lloydCodebooks]]
+    * fit on (vec − assigned centroid), the space the codes live in.
+    */
+  def lloydResidualCodebooks(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      centroids: DataFrame,
+      m: Int,
+      k: Int = 16,
+      iters: Int = 20,
+      sampleCap: Int = 4096
+  ): Seq[Array[Array[Float]]] =
+    subspaceCodebooks(
+      sampleRows(trainingSample(corpus, idCol, vecCol, sampleCap, Some(centroids))),
+      m, k, iters)
+
+  private def subspaceCodebooks(
+      rows: Array[Array[Float]],
+      m: Int,
+      k: Int,
+      iters: Int
   ): Seq[Array[Array[Float]]] = {
-    val rows = samples.select(col(vecCol)).limit(sampleCap)
-      .collect().map(_.getSeq[Float](0).toArray)
     require(rows.nonEmpty, "codebook sample set is empty")
     val dim = rows.head.length
     require(dim % m == 0, s"vector dim $dim must divide into $m subspaces")
@@ -237,21 +269,21 @@ object Similarity {
     }
   }
 
-  /** Lloyd's-trained IVF coarse centroids over a bounded ordered sample,
-    * in the (centroid_id, centroid_vec) frame shape [[assignCells]] and
-    * [[ivfTopK]] consume. Deterministic twin of [[trainCentroidsKMeans]].
+  /** Lloyd's-trained IVF coarse centroids over the [[trainingSample]] of
+    * `corpus`, in the (centroid_id, centroid_vec) frame shape
+    * [[assignCells]] and [[ivfTopK]] consume.
     */
   def lloydCentroids(
-      samples: DataFrame,
+      corpus: DataFrame,
+      idCol: String,
       vecCol: String,
       nlist: Int,
       iters: Int = 20,
       sampleCap: Int = 4096
   ): DataFrame = {
-    val rows = samples.select(col(vecCol)).limit(sampleCap)
-      .collect().map(_.getSeq[Float](0).toArray)
-    val centers = lloydTrain(rows, nlist, iters)
-    val spark = samples.sparkSession
+    val centers =
+      lloydTrain(sampleRows(trainingSample(corpus, idCol, vecCol, sampleCap)), nlist, iters)
+    val spark = corpus.sparkSession
     import spark.implicits._
     centers.zipWithIndex.toSeq
       .map { case (v, i) => (i, v) }
@@ -325,8 +357,8 @@ object Similarity {
     * per row the distance is Σ_j ‖q_sub_j − codebook_j[code_j]‖² —
     * pure column math over the literal codebooks, no shuffle beyond
     * the per-query rank window.
-    */
-  /** @param reRank when > 0, the top `reRank` ADC candidates per query
+    *
+    * @param reRank when > 0, the top `reRank` ADC candidates per query
     *   are re-scored with EXACT distances against `vecCol` (which must
     *   then be present on `encoded`) — the standard PQ accuracy
     *   recovery: the expensive exact math touches only reRank rows per
@@ -401,24 +433,6 @@ object Similarity {
           org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("__res")),
           codebooks))
         .as("pq_code"))
-  }
-
-  /** Residual-space PQ training for [[ivfPqEncode]]: the codebooks are
-    * fit on (vec − assigned centroid), the space the codes live in.
-    */
-  def trainIvfPq(
-      corpus: DataFrame,
-      vecCol: String,
-      centroids: DataFrame,
-      m: Int = 16,
-      k: Int = 64,
-      seed: Long = 42L
-  ): Seq[Array[Array[Float]]] = {
-    val res = assignCells(corpus, centroids, vecCol)
-      .join(broadcast(centroids), col("cell") === col("centroid_id"))
-      .select(zip_with(col(vecCol), col("centroid_vec"),
-        (x, c) => (x - c).cast("float")).as("__res"))
-    trainPQ(res, "__res", m, k, seed)
   }
 
   /** IVF-PQ search: probe the `nprobe` nearest cells per query, ADC
@@ -528,16 +542,6 @@ object Similarity {
       (acc, v) => acc * 2 + when(v > lit(0f), 1L).otherwise(0L)
     )
 
-  /** IVF (inverted-file) ANN: assign every corpus vector to its nearest
-    * centroid cell, then search only the query's `nprobe` best cells.
-    * At 100 TB: the assignment is one broadcast pass over the corpus,
-    * cells are the shuffle key, and each query touches |corpus|/nlist ·
-    * nprobe candidates instead of the full corpus.
-    *
-    * `centroids` is a (centroid_id, centroid_vec) frame — use
-    * [[trainCentroidsKMeans]] for real cells, or any deterministic
-    * subset for reproducible tests.
-    */
   /** Nearest-centroid cell assignment as a per-row argmax folded over
     * the centroid set in ONE expression: the (tiny) centroid array
     * rides in on a constant-key broadcast hash join, so there is no
@@ -663,7 +667,16 @@ object Similarity {
       .drop("__one", "__bmap", "__cents", "__cand", "__nearest")
   }
 
-  /** @param assignPlanes Some(p): corpus-side cell assignment via the
+  /** IVF (inverted-file) ANN: assign every corpus vector to its nearest
+    * centroid cell, then search only the query's `nprobe` best cells.
+    * At 100 TB: the assignment is one broadcast pass over the corpus,
+    * cells are the shuffle key, and each query touches |corpus|/nlist ·
+    * nprobe candidates instead of the full corpus.
+    *
+    * @param centroids a (centroid_id, centroid_vec) frame — use
+    *   [[lloydCentroids]] for real cells, or any deterministic subset
+    *   for reproducible tests.
+    * @param assignPlanes Some(p): corpus-side cell assignment via the
     *   hash-blocked [[assignCellsApprox]] — the nlist ∝ n sizing makes
     *   the exact fold quadratic over the corpus (see that scaladoc);
     *   the query side stays exact (it is small and needs the n-best
@@ -672,7 +685,7 @@ object Similarity {
     *   (`Embeddings.fitWhitening` on the corpus →
     *   `Embeddings.transform` both sides → this call on the whitened
     *   column). Measured A/B in EmbeddingsSpec "whitening A/B":
-    *   recall@5 vs clean-space truth 0.09 raw → 0.41 whitened for this
+    *   recall@5 vs clean-space truth 0.09 raw → 0.42 whitened for this
     *   operator (0.77 for exact search) on a shifted+scaled corruption.
     */
   def ivfTopK(
@@ -784,28 +797,6 @@ object Similarity {
         col("__n.neighbor_id").as("neighbor_id"),
         col(s"__n.$scoreCol").as(scoreCol),
         (col("__i") + 1).cast("int").as("rank"))
-  }
-
-  /** KMeans centroids for IVF cells (spark.ml, fixed seed). The
-    * float vectors are densified for the trainer; the returned frame is
-    * (centroid_id, centroid_vec float array) ready for [[ivfTopK]].
-    */
-  def trainCentroidsKMeans(
-      corpus: DataFrame,
-      vecCol: String,
-      nlist: Int,
-      seed: Long = 42L
-  ): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val feats = corpus.select(array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-    val model = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("features").fit(feats)
-    val rows = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.map(_.toFloat))
-    }
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    rows.toSeq.toDF("centroid_id", "centroid_vec")
   }
 
   /** Deterministic Gaussian hyperplanes for random-projection LSH

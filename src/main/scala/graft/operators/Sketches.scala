@@ -108,23 +108,11 @@ object Sketches {
       )
   }
 
-  /** Per-group theta sketches (WRITE side for set algebra rollups). */
-  def thetaShardSketches(
-      df: DataFrame,
-      shardCols: Seq[String],
-      valueCol: String,
-      lgK: Int = DefaultLgK
-  ): DataFrame = {
-    require(shardCols.nonEmpty, "need at least one shard column")
-    df.groupBy(shardCols.map(col): _*)
-      .agg(theta_sketch_agg(col(valueCol), lgK).as("theta_sketch"))
-  }
-
   /** Count-min sketch over `valueCol`, returned as the driver-side probe
     * object. The aggregate is distributed (map-side combinable); only the
     * FINAL sketch — eps/e × ln(1/(1-confidence)) counters, a few KB —
     * crosses to the driver, same bounded-model contract as the ANN
-    * codebooks (Similarity.trainPq). Probe guarantees (spec-pinned):
+    * codebooks (Similarity.lloydCodebooks). Probe guarantees (spec-pinned):
     * estimate(x) ≥ true(x), and ≤ true(x) + eps·N w.p. `confidence`.
     */
   def cmsSketch(

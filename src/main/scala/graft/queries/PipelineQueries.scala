@@ -13,34 +13,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PipelineQueries extends QueryPack {
 
-  /** Bounded-id model-training sample: the `vec_id < cap` filter pushes
-    * to the parquet scan, so extracting a 4096-row training sample reads
-    * ~4096 rows — NOT the whole corpus the way an orderBy+limit sample
-    * would (full sort before the limit). Every Lloyd's-training input
-    * goes through here or [[trainedResidualSample]];
-    * ModelSampleGuardSpec pins the ≤-cap scan property.
-    */
-  private[graft] def trainedVecSample(emb: DataFrame, cap: Int = 4096): DataFrame =
-    emb.filter(col("vec_id") < cap).orderBy("vec_id")
-
-  /** Residual training sample for IVF-PQ: sample FIRST (bounded-id
-    * filter, pushed to the scan), THEN compute residuals against the
-    * broadcast centroids — residuals-for-everything followed by a limit
-    * would be a full corpus pass for a 4096-row model at 100 TB.
-    */
-  private[graft] def trainedResidualSample(
-      emb: DataFrame,
-      centroids: DataFrame,
-      cap: Int = 4096
-  ): DataFrame =
-    Similarity
-      .assignCells(emb.filter(col("vec_id") < cap), centroids, "embedding")
-      .join(broadcast(centroids), col("cell") === col("centroid_id"))
-      .orderBy(col("vec_id"))
-      .select(
-        zip_with(col("embedding"), col("centroid_vec"),
-          (x, c) => (x.cast("double") - c.cast("double")).cast("float")).as("res"))
-
   /** Fixed mean + covariance for q_embed_whiten_gated: the model must be
     * byte-identical at query-build and oracle-build time, so it derives
     * from CONSTANTS (never the sf dir) through the production
@@ -368,7 +340,7 @@ object PipelineQueries extends QueryPack {
     },
     // IVF ANN with deterministic centroids (vec_id < 8) so the oracle
     // can mirror the cell assignment; production path trains cells with
-    // Similarity.trainCentroidsKMeans
+    // Similarity.lloydCentroids (q_ann_ivfpq_trained)
     "q_ann_ivf" -> { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
       val centroids = emb
@@ -815,7 +787,7 @@ object PipelineQueries extends QueryPack {
     // product quantization with asymmetric distance: fixed data-derived
     // codebooks (first 8 vectors' slices — deterministic and
     // SQL-mirrorable, the q_ann_ivf convention; production trains with
-    // Similarity.trainPQ and re-ranks, recall floors in SkewAndIvfSpec)
+    // Similarity.lloydCodebooks and re-ranks, recall floors in SkewAndIvfSpec)
     "q_ann_pq" -> { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
       val cbs = Similarity.codebooksFromRows(
@@ -831,7 +803,7 @@ object PipelineQueries extends QueryPack {
     // mirrorable model: centroids = vec_id < 8, residual codebooks =
     // residuals of vec_id 8..15 sliced per subspace (float32 residuals
     // — double-subtract-then-round matches zip_with float math both
-    // sides). Production trains with Similarity.trainIvfPq and
+    // sides). Production trains with Similarity.lloydResidualCodebooks and
     // re-ranks; recall floors in SkewAndIvfSpec.
     "q_ann_ivfpq" -> { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
@@ -1262,8 +1234,7 @@ object PipelineQueries extends QueryPack {
     // the trained model isn't SQL-recomputable, so this is bench-only.
     "q_ann_pq_trained" -> { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
-      val cbs = Similarity.lloydCodebooks(
-        trainedVecSample(emb), "embedding", m = 16, k = 64)
+      val cbs = Similarity.lloydCodebooks(emb, "vec_id", "embedding", m = 16, k = 64)
       val enc = Similarity.pqEncode(emb, "vec_id", "embedding", cbs)
       Similarity
         .pqTopK(emb.filter(col("vec_id") < 3), enc, "vec_id", "embedding", cbs, 5)
@@ -1274,10 +1245,10 @@ object PipelineQueries extends QueryPack {
     // of q_ann_ivfpq's sampled-row model
     "q_ann_ivfpq_trained" -> { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
-      val centroids = Similarity.lloydCentroids(
-        trainedVecSample(emb), "embedding", nlist = 8, iters = 5)
-      val resSamples = trainedResidualSample(emb, centroids)
-      val cbs = Similarity.lloydCodebooks(resSamples, "res", m = 16, k = 64)
+      val centroids =
+        Similarity.lloydCentroids(emb, "vec_id", "embedding", nlist = 8, iters = 5)
+      val cbs = Similarity.lloydResidualCodebooks(
+        emb, "vec_id", "embedding", centroids, m = 16, k = 64)
       val enc = Similarity.ivfPqEncode(emb, "vec_id", "embedding", centroids, cbs)
       Similarity
         .ivfPqTopK(emb.filter(col("vec_id") < 3), enc, centroids, "vec_id", "embedding",

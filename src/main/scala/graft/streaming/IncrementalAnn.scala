@@ -29,7 +29,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The centroid table is pinned at seed time (passed by the caller and
   * reused verbatim for every ingest/serve): assignments are only
   * comparable under ONE quantizer. Re-training centroids (corpus
-  * drifted; [[Similarity.trainCentroidsKMeans]]) means re-seeding —
+  * drifted; [[Similarity.lloydCentroids]]) means re-seeding —
   * the classic IVF rebuild, done at rebuild cadence, not per batch.
   *
   * 100 TB shape: the store carries one row per vector with its cell —

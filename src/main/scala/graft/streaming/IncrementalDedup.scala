@@ -3,6 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import graft.sources.Lake
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -234,16 +235,18 @@ object IncrementalDedup {
       .verifyCandidates(cands, both, idCol, textCol, minJaccard = minJaccard)
       .select(col("doc1").as(idCol)).distinct()
     val survivors0 = batch.join(losers, Seq(idCol), "left_anti")
-    val survivors = Dedup.dropNearDuplicates(
-      survivors0, idCol, textCol, minJaccard = minJaccard, maxBucketSize = maxBucketSize)
+    // materialize BEFORE either append: both writes must consume the
+    // SAME survivor rows. The pin is detached from the stores
+    // ([[ColumnBridge.detached]]): a persist over the plain chain does
+    // not survive the bands append, whose `CacheManager.recacheByPath`
+    // rebuilds every cached plan over bandsDir, so the corpus append
+    // would recompute the survivors against the bands just written —
+    // and without a batch id to exclude, each survivor then matches its
+    // own bands and the corpus append loses every new doc
+    val survivors = ColumnBridge.detached(Dedup.dropNearDuplicates(
+      survivors0, idCol, textCol, minJaccard = minJaccard, maxBucketSize = maxBucketSize))
       .persist()
     try {
-    // materialize BEFORE either append: both writes must consume the
-    // SAME survivor rows — without the pin, the second write would
-    // re-execute the whole chain against a corpusDir listing that the
-    // first write just changed (correct only while Spark's cached
-    // file-index snapshot holds; any relisting would make survivors
-    // match themselves)
     val nSurvivors = survivors.count()
     val stamp = (df: DataFrame) => batchId.fold(df)(b => df.withColumn(BatchCol, lit(b)))
     // zero survivors ⇒ both appends would write empty part files that

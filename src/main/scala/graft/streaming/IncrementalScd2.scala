@@ -3,6 +3,7 @@ package graft.streaming
 import graft.operators.History
 import graft.sources.Lake
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -169,16 +170,20 @@ object IncrementalScd2 {
 
     // Materialize the change rows ONCE before either append (r20): the
     // change plan READS the open store, and the head append MODIFIES
-    // it — an unpinned second append would re-execute the whole
-    // window+join chain (2× the per-trigger compute) against a store
-    // the first append just changed (correct only while Spark's cached
-    // file-index snapshot holds — the same hazard the dedup loop
-    // pins against). The count doubles as the append fan-out size and
-    // the loop-health rows figure, and it sees the PRE-append state by
-    // construction.
+    // it. The pin is detached from the store ([[ColumnBridge.detached]]):
+    // a persist over the plain plan does not survive the head append,
+    // whose `CacheManager.recacheByPath` rebuilds every cached plan over
+    // the open dir, so the version-log append would re-execute the whole
+    // window+join chain (2× the per-trigger compute) against the head
+    // just written — and without a batch id to exclude, every change
+    // then matches its own head row and the log loses it (the dedup
+    // loop's hazard too). The count doubles as the append fan-out size
+    // and the loop-health rows figure, and it sees the PRE-append state
+    // by construction.
     // The pin is released in `finally`: a failed append must not leave
     // the batch cached for the life of the session.
-    val stamped = changes.withColumn(BatchCol, lit(batchId.getOrElse(-1L))).persist()
+    val stamped = ColumnBridge.detached(
+      changes.withColumn(BatchCol, lit(batchId.getOrElse(-1L)))).persist()
     val nChanges = try {
       val n = stamped.count()
       // ordering is load-bearing: head append first, version-log append

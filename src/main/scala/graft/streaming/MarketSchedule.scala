@@ -18,8 +18,8 @@ import java.time.Instant
   *     static side every micro-batch, which IS the reference's periodic
   *     schedule refresh, for free.
   *   - [[InMemoryProvider]]: driver-side `isInSession` for operators
-  *     that gate row-by-row (heartbeat emission), loaded from the same
-  *     table and refreshable.
+  *     that gate row-by-row (heartbeat emission), over a per-key map of
+  *     session windows.
   */
 object MarketSchedule {
 
@@ -55,28 +55,5 @@ object MarketSchedule {
       sessions.getOrElse(key, Nil).exists { case (open, close) =>
         !ts.isBefore(open) && ts.isBefore(close)
       }
-  }
-
-  object InMemoryProvider {
-    /** Load from a schedule DataFrame (collected — schedule tables are
-      * small dimension data; at scale this is the broadcast pattern).
-      */
-    def fromDataFrame(
-        schedule: DataFrame,
-        keyCol: String,
-        openCol: String = "open_ts",
-        closeCol: String = "close_ts"
-    ): InMemoryProvider = {
-      val rows = schedule
-        .select(col(keyCol), col(openCol), col(closeCol))
-        .collect()
-        .groupBy(_.getString(0))
-        .map { case (k, rs) =>
-          k -> rs.toSeq.map(r =>
-            (r.getTimestamp(1).toInstant, r.getTimestamp(2).toInstant)
-          )
-        }
-      new InMemoryProvider(rows)
-    }
   }
 }

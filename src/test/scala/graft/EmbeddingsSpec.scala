@@ -157,7 +157,7 @@ class EmbeddingsSpec extends SparkSpec {
       val qs = queriesOf(data)
       val found =
         if (ivf) {
-          val cents = Similarity.trainCentroidsKMeans(data, "embedding", nlist = 16)
+          val cents = Similarity.lloydCentroids(data, "vec_id", "embedding", nlist = 16)
           topSet(Similarity.ivfTopK(qs, data, cents, "vec_id", "embedding", 5, nprobe = 2))
         } else topSet(Similarity.bruteForceTopK(qs, data, "vec_id", "embedding", 5))
       found.intersect(truth).size.toDouble / truth.size

@@ -101,6 +101,27 @@ class IncrementalIngestionSpec extends SparkSpec {
     assert(after == Set(1L, 10L), s"20 is a dup of 10 and must be dropped — got $after")
   }
 
+  test("ingestBatch without a batch id appends the same survivors to corpus and bands") {
+    // the public default: no stamp, so nothing excludes the batch's own
+    // band rows — the corpus append must still see the survivors the
+    // bands append saw, not a recompute against the bands just written
+    val root = java.nio.file.Files.createTempDirectory("graft_ingest_noid").toString
+    val (corpusDir, bandsDir) = (s"$root/corpus", s"$root/bands")
+    IncrementalDedup.seed(
+      Seq((1L, "seeded corpus text about storage engines and columnar formats today"))
+        .toDF("doc_id", "text"),
+      corpusDir, bandsDir)
+    val batch = Seq(
+      (10L, "fresh material on vectorized execution and adaptive partition coalescing"),
+      (11L, "unrelated notes on watermark propagation through streaming joins"))
+      .toDF("doc_id", "text")
+    assert(IncrementalDedup.ingestBatch(spark, batch, corpusDir, bandsDir))
+    val ids = (dir: String) =>
+      spark.read.parquet(dir).select($"doc_id").distinct().as[Long].collect().toSet
+    assert(ids(bandsDir) == Set(1L, 10L, 11L), s"bands: ${ids(bandsDir)}")
+    assert(ids(corpusDir) == Set(1L, 10L, 11L), s"corpus: ${ids(corpusDir)}")
+  }
+
   test("replay repairs a partial failure: bands landed, corpus append lost") {
     // the crash window between the two writes — bands are written FIRST
     // (a band row without a corpus row is harmless), so the failure

@@ -198,6 +198,21 @@ class IncrementalScd2Spec extends SparkSpec {
     assert(v2.filter($"is_current" && $"k" === "B").select($"attr").as[String].head() == "w")
   }
 
+  test("ingestBatch without a batch id logs the same changes it folds into the head") {
+    // no stamp, so nothing excludes the batch's own head rows — the
+    // version-log append must still see the changes the head append saw
+    val dir = java.nio.file.Files.createTempDirectory("graft_scd2n").toString + "/store"
+    IncrementalScd2.seed(
+      Seq(("A", t(1), 1L, "x")).toDF("k", "ts", "id", "attr"), dir, K, "ts", A, T)
+    val batch = Seq(("A", t(2), 2L, "y"), ("B", t(2), 3L, "z")).toDF("k", "ts", "id", "attr")
+    assert(IncrementalScd2.ingestBatch(spark, batch, dir, K, "ts", A, T, batchId = None))
+    val log = spark.read.parquet(dir).select($"k", $"attr").as[(String, String)].collect()
+    assert(log.sorted.toSeq == Seq(("A", "x"), ("A", "y"), ("B", "z")), log.mkString(","))
+    val current = IncrementalScd2.view(spark, dir, K, "ts", A, T)
+      .filter($"is_current").select($"k", $"attr").as[(String, String)].collect().toMap
+    assert(current == Map("A" -> "y", "B" -> "z"))
+  }
+
   test("replayed batch is a no-op (batchId-keyed append)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_scd2r").toString + "/store"
     IncrementalScd2.seed(

@@ -1,19 +1,20 @@
 package graft
 
-import graft.queries.PipelineQueries
+import graft.operators.Similarity
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Scan-boundedness guard for model-extraction samples (the
-  * sample-FIRST rule, BASELINE.md round 8): every Lloyd's-training
-  * input is built by `PipelineQueries.trainedVecSample` /
-  * `trainedResidualSample`, and this spec pins — on a corpus 5× the
-  * sample cap, written with small row groups so the assertion has
-  * teeth — that executing the extraction plan (`select(vec).limit(cap)`,
-  * what `lloydCodebooks`/`lloydCentroids` run) reads ~cap rows from the
-  * parquet scan, not the corpus. An orderBy+limit sample (full sort
-  * before the limit) or a wide transform upstream of the bounded-id
-  * filter would read all rows and fail here.
+  * sample-FIRST rule, BASELINE.md round 8): every Lloyd's trainer
+  * (`lloydCodebooks`, `lloydResidualCodebooks`, `lloydCentroids`) pulls
+  * `Similarity.trainingSample` of its corpus, and this spec pins — on a
+  * corpus 5× the sample cap, written with small row groups so the
+  * assertion has teeth — that executing that sample, plain and
+  * residual, reads ~cap rows from the parquet scan, not the corpus. An
+  * orderBy+limit sample (full sort before the limit) or a wide
+  * transform upstream of the bounded-id filter would read all rows and
+  * fail here. The source sweeps below keep the trainers the only model
+  * path: no `.collect()` outside the allowlist, no Spark ML.
   */
 class ModelSampleGuardSpec extends SparkSpec {
 
@@ -45,10 +46,9 @@ class ModelSampleGuardSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("trainedVecSample extraction reads ~cap rows from the scan, not the corpus") {
+  test("trainingSample extraction reads ~cap rows from the scan, not the corpus") {
     val emb = spark.read.parquet(embDir)
-    val extraction = PipelineQueries.trainedVecSample(emb, cap)
-      .select(col("embedding")).limit(cap)
+    val extraction = Similarity.trainingSample(emb, "vec_id", "embedding", cap)
     val rows = scanRows(extraction)
     // ≤ cap + one row-group of slack (pushdown skips at group granularity)
     assert(rows <= cap + 2000, s"sample extraction scanned $rows of $corpusRows rows")
@@ -58,13 +58,13 @@ class ModelSampleGuardSpec extends SparkSpec {
     assert(plan.contains(s"LessThan(vec_id,$cap)"), "bounded-id filter must be pushed")
   }
 
-  test("trainedResidualSample (IVF-PQ) samples FIRST — residuals never see the corpus") {
+  test("residual trainingSample (IVF-PQ) samples FIRST — residuals never see the corpus") {
     val emb = spark.read.parquet(embDir)
     val centroids = (0 until 8)
       .map(i => (i, Array.tabulate(16)(j => ((i * 7 + j) % 5).toFloat).toSeq))
       .toDF("centroid_id", "centroid_vec")
-    val extraction = PipelineQueries.trainedResidualSample(emb, centroids, cap)
-      .select(col("res")).limit(cap)
+    val extraction =
+      Similarity.trainingSample(emb, "vec_id", "embedding", cap, Some(centroids))
     val rows = scanRows(extraction)
     assert(rows <= cap + 2000, s"residual sample scanned $rows of $corpusRows rows")
     assert(rows >= cap, s"residual sample must still see all $cap training rows, got $rows")
@@ -85,14 +85,13 @@ class ModelSampleGuardSpec extends SparkSpec {
       // idPushdownCap-bounded candidate-id pulls (cap + 1 probes the overflow)
       "streaming/StreamingCuration.scala" -> 1,
       "streaming/IncrementalDedup.scala" -> 1,
-      // market-calendar dimension table (days × markets, not data volume)
-      "streaming/MarketSchedule.scala" -> 1,
       // vocabCap-bounded model pulls: BPE merge-table extraction plus the
       // round-14 trainUnigram / unigramLogLikelihood word-count pulls —
       // all three are limit(vocabCap).collect() bounded-model extractions
       "operators/Tokenizer.scala" -> 3,
-      // sampleCap'd Lloyd's-training model extractions (the tests above)
-      "operators/Similarity.scala" -> 3,
+      // the sampleCap'd Lloyd's-training sample pull (the tests above)
+      // and codebooksFromRows' caller-bounded oracle-form rows
+      "operators/Similarity.scala" -> 2,
       // buckets-bounded gradient pull: the logistic-regression fit
       // collects ≤ buckets + 1 (bucket, gradient) rows per epoch —
       // the model is driver-sized by construction, never the corpus
@@ -132,6 +131,14 @@ class ModelSampleGuardSpec extends SparkSpec {
     allowed.keys.filterNot(rel => java.nio.file.Files.exists(root.resolve(rel))).toSeq.sorted
       .foreach(rel => offenders += s"$rel is allowlisted but no longer exists")
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no Spark ML in src/main: the Lloyd's trainers are the only model path") {
+    // MLlib KMeans ran one model fit per subspace over the whole corpus
+    // (hundreds of jobs for one codebook set) and was not deterministic
+    // across partitionings; any org.apache.spark.ml reference re-admits it
+    val found = SourceSweep.sweep("src/main/scala", """\borg\.apache\.spark\.ml\b""".r)
+    assert(found.isEmpty, s"org.apache.spark.ml referenced at (file, scope) -> lines: $found")
   }
 
   test("the counter-example: an orderBy+limit sample DOES read the corpus") {

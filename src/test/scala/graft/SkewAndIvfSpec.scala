@@ -124,36 +124,6 @@ class SkewAndIvfSpec extends SparkSpec {
     assert(diff == 0, s"$diff rows differ between native and composed ADC")
   }
 
-  test("PQ: ADC recall floor and full recovery via exact re-rank") {
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.load(spark, testData("0.001"), "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-    // exact L2 top-5 baseline
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val d = expr("aggregate(zip_with(qvec, embedding, (x,y) -> " +
-      "(cast(x as double)-cast(y as double))*(cast(x as double)-cast(y as double))), " +
-      "0D, (acc,v) -> acc+v)")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("d").asc, col("vec_id"))
-    val exact = emb.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .withColumn("d", d).withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    // 16 subspaces x 64 codewords: 16-byte codes, 16x compression
-    val cb = Similarity.trainPQ(emb, "embedding", m = 16, k = 64)
-    assert(cb.length == 16 && cb.forall(_.length == 64) && cb.head.head.length == 4)
-    val enc = Similarity.pqEncode(emb, "vec_id", "embedding", cb)
-    assert(enc.filter(expr("exists(pq_code, c -> c < 0 OR c >= 64)")).count() == 0)
-    val encV = enc.join(emb, "vec_id")
-    // codes-only ADC: measured 0.52 at these settings; floor with margin
-    val adcHits = Similarity.pqTopK(queries, encV, "vec_id", "embedding", cb, 5)
-      .select("query_id", "neighbor_id").intersect(exact).count()
-    assert(adcHits >= 45 * 0.45, s"ADC recall@5 ${adcHits / 50.0} below floor")
-    // exact re-rank of the top-50 ADC candidates recovers recall
-    // (measured 1.0; the exact math touches 50 rows/query, not the corpus)
-    val rrHits = Similarity.pqTopK(queries, encV, "vec_id", "embedding", cb, 5, reRank = 50)
-      .select("query_id", "neighbor_id").intersect(exact).count()
-    assert(rrHits >= 50 * 0.9, s"re-ranked recall@5 ${rrHits / 50.0} below floor")
-  }
-
   test("IVF-PQ: residual codes + cell pruning, recall recovers with probes and re-rank") {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.load(spark, testData("0.001"), "embeddings")
@@ -166,21 +136,23 @@ class SkewAndIvfSpec extends SparkSpec {
     val exact = emb.join(broadcast(q), col("query_id") =!= col("vec_id"))
       .withColumn("d", d).withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val cents = Similarity.trainCentroidsKMeans(emb, "embedding", nlist = 8)
-    val cb = Similarity.trainIvfPq(emb, "embedding", cents, m = 16, k = 64)
+    val cents = Similarity.lloydCentroids(emb, "vec_id", "embedding", nlist = 8)
+    val cb = Similarity.lloydResidualCodebooks(emb, "vec_id", "embedding", cents, m = 16, k = 64)
     val enc = Similarity.ivfPqEncode(emb, "vec_id", "embedding", cents, cb)
     assert(enc.filter(col("cell") < 0 || col("cell") >= 8).count() == 0)
     assert(enc.filter(expr("exists(pq_code, c -> c < 0 OR c >= 64)")).count() == 0)
     val encV = enc.join(emb, "vec_id")
-    // measured 0.74 at (nprobe=4, reRank=50) — half the corpus probed,
+    // measured 0.84 at (nprobe=4, reRank=50) — half the corpus probed,
     // 50 exact rows per query; floors with margin
     def recall(np: Int, rr: Int): Double =
       Similarity.ivfPqTopK(queries, encV, cents, "vec_id", "embedding", cb, 5,
         nprobe = np, reRank = rr)
         .select("query_id", "neighbor_id").intersect(exact).count() / 50.0
-    assert(recall(4, 50) >= 0.6, "nprobe=4 + re-rank recall below floor")
+    val (half, full) = (recall(4, 50), recall(8, 50))
+    info(s"IVF-PQ recall@5 with re-rank 50 — nprobe 4: $half, nprobe 8: $full")
+    assert(half >= 0.6, s"nprobe=4 + re-rank recall $half below floor")
     // probing every cell degenerates to plain PQ + re-rank (measured 1.0)
-    assert(recall(8, 50) >= 0.9, "full-probe recall below floor")
+    assert(full >= 0.9, s"full-probe recall $full below floor")
   }
 
   test("Lloyd's-trained codebooks beat sampled-row codebooks at identical (m, k)") {
@@ -195,24 +167,34 @@ class SkewAndIvfSpec extends SparkSpec {
     val exact = emb.join(broadcast(q), col("query_id") =!= col("vec_id"))
       .withColumn("d", d).withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    def recallOf(cbs: Seq[Array[Array[Float]]]): Double = {
-      val enc = Similarity.pqEncode(emb, "vec_id", "embedding", cbs)
-      Similarity.pqTopK(queries, enc, "vec_id", "embedding", cbs, 5)
+    def recallOf(cbs: Seq[Array[Array[Float]]], reRank: Int = 0): Double = {
+      // the re-rank stage reads exact vectors beside the codes
+      val enc = Similarity.pqEncode(emb, "vec_id", "embedding", cbs).join(emb, "vec_id")
+      Similarity.pqTopK(queries, enc, "vec_id", "embedding", cbs, 5, reRank = reRank)
         .select("query_id", "neighbor_id").intersect(exact).count() / 50.0
     }
-    // production settings (m=16 -> 4-dim subspaces, k=64 codewords):
-    // 64 sampled ROWS as codewords vs 64 TRAINED centroids per subspace
+    // production settings (m=16 -> 4-dim subspaces, k=64 codewords, 16-byte
+    // codes, 16x compression): 64 sampled ROWS as codewords vs 64 TRAINED
+    // centroids per subspace
     val sampled = recallOf(Similarity.codebooksFromRows(
       emb.filter(col("vec_id") < 64).orderBy("vec_id"), "embedding", m = 16))
-    val trained = recallOf(Similarity.lloydCodebooks(
-      emb.orderBy("vec_id"), "embedding", m = 16, k = 64, iters = 20))
-    info(s"ADC recall@5 — sampled-row codebooks: $sampled, Lloyd's-trained: $trained")
+    val cb = Similarity.lloydCodebooks(emb, "vec_id", "embedding", m = 16, k = 64, iters = 20)
+    assert(cb.length == 16 && cb.forall(_.length == 64) && cb.head.head.length == 4)
+    assert(Similarity.pqEncode(emb, "vec_id", "embedding", cb)
+      .filter(expr("exists(pq_code, c -> c < 0 OR c >= 64)")).count() == 0)
+    val trained = recallOf(cb)
+    // exact re-rank of the top-50 ADC candidates recovers recall
+    // (measured 1.0; the exact math touches 50 rows/query, not the corpus)
+    val reRanked = recallOf(cb, reRank = 50)
+    info(s"ADC recall@5 — sampled-row codebooks: $sampled, Lloyd's-trained: $trained, " +
+      s"re-ranked: $reRanked")
     assert(trained >= sampled,
       s"trained codebooks ($trained) should not lose to sampled rows ($sampled)")
     assert(trained >= 0.45, s"trained ADC recall $trained below floor")
-    // bit-determinism: same ordered sample -> identical codebooks
-    val a = Similarity.lloydCodebooks(emb.orderBy("vec_id"), "embedding", m = 16, k = 64)
-    val b = Similarity.lloydCodebooks(emb.orderBy("vec_id"), "embedding", m = 16, k = 64)
+    assert(reRanked >= 0.9, s"re-ranked recall@5 $reRanked below floor")
+    // bit-determinism: the trainer's own id-ordered sample -> identical codebooks
+    val a = Similarity.lloydCodebooks(emb, "vec_id", "embedding", m = 16, k = 64)
+    val b = Similarity.lloydCodebooks(emb, "vec_id", "embedding", m = 16, k = 64)
     assert(a.zip(b).forall { case (x, y) =>
       x.length == y.length && x.zip(y).forall { case (u, v) => u.sameElements(v) }
     })
@@ -240,13 +222,17 @@ class SkewAndIvfSpec extends SparkSpec {
 
   test("Lloyd's centroids partition into nlist cells deterministically") {
     val emb = Tables.load(spark, testData("0.001"), "embeddings")
-    val cents = Similarity.lloydCentroids(emb.orderBy("vec_id"), "embedding", nlist = 8)
+    val cents = Similarity.lloydCentroids(emb, "vec_id", "embedding", nlist = 8)
     assert(cents.count() == 8)
     // every corpus vector lands in a valid cell
     val cells = Similarity.assignCells(emb, cents, "embedding")
     assert(cells.filter(col("cell") < 0 || col("cell") >= 8).count() == 0)
     // non-degenerate: the corpus spreads over more than one cell
     assert(cells.select("cell").distinct().count() > 1)
+    // and the cells serve an IVF probe
+    val rows = Similarity.ivfTopK(
+      emb.filter($"vec_id" < 2), emb, cents, "vec_id", "embedding", 3).collect()
+    assert(rows.nonEmpty && rows.forall(_.getAs[Int]("rank") <= 3))
   }
 
   test("int8 quantization: codes bounded, round-trip within scale/2, zero vector safe") {
@@ -269,16 +255,6 @@ class SkewAndIvfSpec extends SparkSpec {
     // the all-zero vector carries scale 0 and a null code array
     val zero = q.filter(col("vec_id") === 99999L).collect()(0)
     assert(zero.getAs[Double]("scale") == 0.0 && zero.isNullAt(zero.fieldIndex("q")))
-  }
-
-  test("KMeans-trained centroids partition the corpus into nlist cells") {
-    val emb = Tables.load(spark, testData("0.001"), "embeddings")
-    val centroids = Similarity.trainCentroidsKMeans(emb, "embedding", nlist = 4)
-    assert(centroids.count() == 4)
-    val topk = Similarity.ivfTopK(
-      emb.filter($"vec_id" < 2), emb, centroids, "vec_id", "embedding", 3)
-    val rows = topk.collect()
-    assert(rows.nonEmpty && rows.forall(_.getAs[Int]("rank") <= 3))
   }
 
   test("approx cell assignment: total, valid cells, high exact-agreement") {
