@@ -14,12 +14,8 @@ object Verify {
       .filter(f => f.isDirectory && f.getName.startsWith("q_")
         && !SparkEntry.queries.contains(f.getName))
       .foreach { dir =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete()
-        }
         System.err.println(s"[verify] removing stale result ${dir.getName}")
-        rm(dir)
+        graft.sources.Lake.rmTree(dir)
       }
     // SPARK_GRAFT_ONLY=q_a,q_b limits the dump (spot-passes at large
     // scale factors, where a full run would pay every codec query);

@@ -43,8 +43,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Knobs: `SPARK_GRAFT_CHUNKS` (event slices, default 20),
   * `SPARK_GRAFT_DOC_CHUNKS` (document and embedding slices, default
-  * min(chunks, 10)), `SPARK_GRAFT_DEDUP_BUCKETED=<n>` (E's band table
-  * bucketed, n buckets), and `SPARK_GRAFT_COMPACT=<n>` with
+  * min(chunks, 10)), and `SPARK_GRAFT_COMPACT=<n>` with
   * `SPARK_GRAFT_COMPACT_ASYNC=true`, the compaction cadence (and its
   * off-trigger rewrite) of every store section.
   *
@@ -316,17 +315,10 @@ object StreamingScale {
 
     if (want('E')) {
     // ---- E. IncrementalDedup ingestion loop --------------------------------
-    // SPARK_GRAFT_DEDUP_BUCKETED=<n> stores the band table bucketed on
-    // (band_idx, band_hash) with n buckets — the zero-corpus-exchange
-    // join path (IncrementalDedup.BandTable) — for the A/B against the
-    // plain-parquet store's per-batch re-shuffle
-    val bandTable = sys.env.get("SPARK_GRAFT_DEDUP_BUCKETED")
-      .map(n => IncrementalDedup.BandTable("graft_scale_bands", n.toInt))
-    IncrementalDedup.seed(docs.filter(col("doc_id") < per), s"$root/corpus", s"$root/bands",
-      bandTable = bandTable)
-    drain(storeLabel(if (bandTable.isDefined) "dedup (bucketed bands)" else "dedup ingest loop"),
+    IncrementalDedup.seed(docs.filter(col("doc_id") < per), s"$root/corpus", s"$root/bands")
+    drain(storeLabel("dedup ingest loop"),
       IncrementalDedup.attach(docStream(), s"$root/corpus", s"$root/bands",
-        checkpointLocation = chk("dedup"), bandTable = bandTable,
+        checkpointLocation = chk("dedup"),
         compactEvery = compactEvery, asyncCompact = asyncCompact),
       streamedDocs, Seq(s"$root/corpus", s"$root/bands"))
     }

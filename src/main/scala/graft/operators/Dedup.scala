@@ -382,42 +382,6 @@ object Dedup {
   ): DataFrame =
     bandedKeys(docs, idCol, textCol, numHashes, bands, shingleSize, maxBucketSize, hashFamily)
 
-  /** [[candidatesAgainstBanded]] for a corpus band table whose STORAGE
-    * is already distributed on the band key (a `bucketBy(n, band_idx,
-    * band_hash)` catalog table — [[graft.sources.Bucketing]]): no
-    * repartition is pinned on either side, so the bucketed scan's
-    * hash-partitioning satisfies the join's distribution requirement
-    * and the corpus side joins with ZERO exchange — the batch side
-    * alone shuffles (to the bucket count). The shuffle-hash hint makes
-    * the BATCH the build side, so nothing is ever sorted: per-batch
-    * cost is one streaming probe over the stored buckets, not a
-    * re-shuffle of an ever-growing table (the r15 sf10 residual —
-    * per-batch wall grew with BOTH batch size and corpus size because
-    * every trigger re-exchanged the whole band table).
-    */
-  def candidatesAgainstBandedColocated(
-      newDocs: DataFrame,
-      bandedCorpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int = DefaultNumHashes,
-      bands: Int = DefaultBands,
-      shingleSize: Int = DefaultShingleSize,
-      maxBucketSize: Option[Int] = None,
-      hashFamily: HashFamily = HashFamily.Md5
-  ): DataFrame = {
-    val bn =
-      bandedKeys(newDocs, idCol, textCol, numHashes, bands, shingleSize, maxBucketSize, hashFamily)
-    bn.hint("shuffle_hash")
-      .alias("n")
-      .join(
-        bandedCorpus.alias("c"),
-        col("n.band_idx") === col("c.band_idx") &&
-          col("n.band_hash") === col("c.band_hash"))
-      .select(col(s"n.$idCol").as("new_id"), col(s"c.$idCol").as("corpus_id"))
-      .distinct()
-  }
-
   /** [[minhashCandidates]]' self-join over a precomputed (possibly
     * persisted) band table from [[bandedSignatures]] — for the recurring
     * full-corpus dedup audit: band once at write (ideally bucketed on

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 object Lake {
 
   /** The file size [[compact]] repacks to, and the size a stamped store
-    * append sizes its files against (`StoreGuard.appendParts`).
+    * append sizes its files against (`StoreGuard.estimatedParts`).
     */
   val TargetFileBytes: Long = 128L * 1024 * 1024
 
@@ -134,7 +134,10 @@ object Lake {
     */
   private[sources] val SnapshotName = "_graft_snapshot"
 
-  private def rmTree(f: java.io.File): Unit = {
+  /** Delete `f` and everything under it; a file that will not delete is
+    * left in place.
+    */
+  private[graft] def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
     f.delete()
   }
@@ -257,8 +260,9 @@ object Lake {
   }
 
   /** The swap half: set the live dir aside, install `__compact_tmp`,
-    * rescue post-snapshot appends from the set-aside dir, drop it.
-    * MUST run quiescent w.r.t. appends (the loop thread).
+    * rescue post-snapshot appends from the set-aside dir, drop it. Also
+    * installs the SCD2 head fold (`IncrementalScd2.foldOpen`). MUST run
+    * quiescent w.r.t. appends (the loop thread).
     *
     * Quiescence covers READERS too (r17 ADVICE): each rename is atomic,
     * but the sequence is not — between `renameTo(old)` and
@@ -271,7 +275,7 @@ object Lake {
     * either route reads through the same boundary or treat a transient
     * path-not-found as retryable (the window is two renames long).
     */
-  private[sources] def swapIn(path: String): Unit = {
+  private[graft] def swapIn(path: String): Unit = {
     val p = new java.io.File(path)
     val t = new java.io.File(s"$path.__compact_tmp")
     val o = new java.io.File(s"$path.__compact_old")
@@ -520,12 +524,7 @@ final class AsyncCompactor(
       // stale orphan from a crashed run: invisible to readers, but its
       // bytes would confuse this rewrite's overwrite — clear first
       val orphan = new java.io.File(asyncTmp)
-      if (orphan.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-        }
-        rm(orphan)
-      }
+      if (orphan.exists()) Lake.rmTree(orphan)
       th.start()
       true
     }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Dedup
 import graft.sources.Lake
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -24,9 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      stage never scans the full corpus text;
   *   3. within-batch [[Dedup.dropNearDuplicates]] (bounded by the batch
   *      size, not the corpus);
-  *   4. append survivors + their [[Dedup.bandedSignatures]] rows —
-  *      band table FIRST (a band row without a corpus row is harmless;
-  *      the reverse would silently stop deduping against those docs).
+  *   4. append survivors + their [[Dedup.bandedSignatures]] rows through
+  *      [[StoreLoop.appendPinned]] — band table FIRST (a band row without
+  *      a corpus row is harmless; the reverse would silently stop
+  *      deduping against those docs).
+  *
+  * Both stores are plain parquet dirs: a bucketed band table lost to the
+  * plain one at both measured batch shapes (BASELINE.md r16).
   *
   * Corpus-text pruning: the candidate corpus ids per batch are bounded
   * (|batch| × matched buckets, capped further by `maxBucketSize`), so
@@ -41,9 +44,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shape (correct, just not pruned).
   *
   * Exactly-once: `foreachBatch` replays a batch after a failure, and a
-  * plain parquet append would then double-append. With `batchId` set
-  * (what [[attach]] passes), every appended row is stamped with an
-  * `ingest_batch` column and each store is append-keyed by it:
+  * plain parquet append would then double-append. Every appended row
+  * is stamped with an `ingest_batch` column, and with `batchId` set
+  * (what [[attach]] passes) each store is append-keyed by it:
   *   - a replayed batch recomputes against reads that EXCLUDE its own
   *     `ingest_batch` rows (so a half-written earlier attempt cannot
   *     make survivors match themselves), then appends only to the
@@ -55,37 +58,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `ingest_batch` column (mixed schemas across parquet files are
   *     resolved from an arbitrary file — do not mix stamped and
   *     unstamped writes in one store).
-  * With `batchId = None` the appends are plain (backfills that manage
-  * idempotence externally).
+  * With `batchId = None` (backfills that manage idempotence externally)
+  * nothing is probed or excluded, and the appended rows are stamped -1,
+  * as [[seed]]'s are.
   */
 object IncrementalDedup {
 
   private[graft] val BatchCol = StoreLoop.BatchCol
-
-  /** Bucketed band store: (catalog table name, bucket count). With this
-    * set, the band table is a `bucketBy(n, band_idx, band_hash)` table
-    * (the [[graft.sources.Bucketing]] co-location discipline applied to
-    * the ingest loop's hot join): the per-batch candidate join reads
-    * the stored buckets IN PLACE — zero corpus-side exchange, zero sort
-    * (shuffle-hash build on the batch side) — where the plain parquet
-    * path re-shuffles the whole band table every trigger. The table is
-    * registered in the session catalog (a production deployment points
-    * the session at a persistent metastore so the registration survives
-    * restarts; the PATH always holds the data either way).
-    *
-    * MEASURED HONESTLY (BASELINE.md r16): at the sf10 replay shapes this
-    * is a NET LOSS for the STREAMING loop — 1,852 vs 1,955 docs/s at
-    * 50k-doc batches and 455 vs 920 at 10k-doc batches — because every
-    * bucketed APPEND writes one file per (task × bucket): 49 appends ×
-    * 32 buckets left ~2,400 band files whose per-file open/footer cost
-    * exceeds the one exchange the layout saves (the plain path's shuffle
-    * of a few-million-row band table is cheap). Use the bucketed layout
-    * where it actually pays: a band table written ONCE (or compacted on
-    * a cadence — [[graft.sources.Lake.compact]]) and probed MANY times,
-    * i.e. the recurring-audit [[graft.operators.Dedup.candidatesFromBanded]]
-    * path, not a high-frequency append loop.
-    */
-  final case class BandTable(name: String, buckets: Int)
 
   /** Write the initial (already-deduplicated) corpus and its UNCAPPED
     * band table, stamped with `ingest_batch = -1` so subsequent
@@ -98,24 +77,14 @@ object IncrementalDedup {
       corpusDir: String,
       bandsDir: String,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      bandTable: Option[BandTable] = None
+      textCol: String = "text"
   ): Unit = {
     clusterById(
       docs.select(col(idCol), col(textCol)).withColumn(BatchCol, lit(-1L)), idCol,
       docs.sparkSession.sessionState.conf.numShufflePartitions)
       .write.mode("overwrite").parquet(corpusDir)
-    val bands = Dedup.bandedSignatures(docs, idCol, textCol).withColumn(BatchCol, lit(-1L))
-    bandTable match {
-      case Some(BandTable(name, n)) =>
-        docs.sparkSession.sql(s"DROP TABLE IF EXISTS $name")
-        bands.write.mode("overwrite")
-          .option("path", bandsDir)
-          .bucketBy(n, "band_idx", "band_hash")
-          .saveAsTable(name)
-      case None =>
-        bands.write.mode("overwrite").parquet(bandsDir)
-    }
+    Dedup.bandedSignatures(docs, idCol, textCol).withColumn(BatchCol, lit(-1L))
+      .write.mode("overwrite").parquet(bandsDir)
   }
 
   /** Range-cluster a corpus append on the id so every written file (and
@@ -166,21 +135,15 @@ object IncrementalDedup {
       maxBucketSize: Option[Int] = None,
       batchId: Option[Long] = None,
       idPushdownCap: Int = 100000,
-      bandTable: Option[BandTable] = None,
       probeReplay: Boolean = true
   ): Boolean = {
     // a crash inside a previous trigger's compaction can leave the live
     // directory set aside at <dir>.__compact_old — repair before reading
     // (two existence checks when healthy; see Lake.recoverCompact)
     Lake.recoverCompact(corpusDir)
-    if (bandTable.isEmpty) Lake.recoverCompact(bandsDir)
+    Lake.recoverCompact(bandsDir)
     val corpusRaw = Lake.read(spark, corpusDir)
-    // bucketed mode reads through the CATALOG — a path read would drop
-    // the bucket spec and the join would re-shuffle the whole table
-    val bandsRaw = bandTable match {
-      case Some(t) => spark.table(t.name)
-      case None => Lake.read(spark, bandsDir)
-    }
+    val bandsRaw = Lake.read(spark, bandsDir)
     // probeReplay = false skips both probe jobs — only safe when the
     // caller KNOWS the id is fresh (StoreGuard.ReplayProbe)
     val (doneBands, doneCorpus) = batchId match {
@@ -191,19 +154,12 @@ object IncrementalDedup {
     if (doneBands && doneCorpus) return false // replayed batch: full no-op
 
     val corpus = withoutBatch(corpusRaw, batchId)
-    val candsRaw = bandTable match {
-      case Some(_) =>
-        Dedup.candidatesAgainstBandedColocated(
-          batch, withoutBatch(bandsRaw, batchId), idCol, textCol,
-          maxBucketSize = maxBucketSize)
-      case None =>
-        Dedup.candidatesAgainstBanded(batch, withoutBatch(bandsRaw, batchId), idCol, textCol,
-          maxBucketSize = maxBucketSize)
-    }
-    val cands = candsRaw
+    val cands = Dedup
+      .candidatesAgainstBanded(batch, withoutBatch(bandsRaw, batchId), idCol, textCol,
+        maxBucketSize = maxBucketSize)
       .select(col("new_id").as("doc1"), col("corpus_id").as("doc2"))
       .persist()
-    // the pins are released in `finally`: a failed append must not leave
+    // the pin is released in `finally`: a failed append must not leave
     // a batch cached for the life of the session (each supervised restart
     // would add one more)
     try {
@@ -235,59 +191,18 @@ object IncrementalDedup {
       .verifyCandidates(cands, both, idCol, textCol, minJaccard = minJaccard)
       .select(col("doc1").as(idCol)).distinct()
     val survivors0 = batch.join(losers, Seq(idCol), "left_anti")
-    // materialize BEFORE either append: both writes must consume the
-    // SAME survivor rows. The pin is detached from the stores
-    // ([[ColumnBridge.detached]]): a persist over the plain chain does
-    // not survive the bands append, whose `CacheManager.recacheByPath`
-    // rebuilds every cached plan over bandsDir, so the corpus append
-    // would recompute the survivors against the bands just written —
-    // and without a batch id to exclude, each survivor then matches its
-    // own bands and the corpus append loses every new doc
-    val survivors = ColumnBridge.detached(Dedup.dropNearDuplicates(
-      survivors0, idCol, textCol, minJaccard = minJaccard, maxBucketSize = maxBucketSize))
-      .persist()
-    try {
-    val nSurvivors = survivors.count()
-    val stamp = (df: DataFrame) => batchId.fold(df)(b => df.withColumn(BatchCol, lit(b)))
-    // zero survivors ⇒ both appends would write empty part files that
-    // still count toward the store's file-growth term — skip them (a
-    // replay of an all-dup batch recomputes to the same no-op)
-    if (!doneBands && nSurvivors > 0) {
-      // band rows ≈ survivors × bands (bandedSignatures runs with its
-      // defaults here, so DefaultBands is the actual multiplier — the
-      // old ×32 estimate fanned large backfill appends into ~8× more
-      // files than the 50k-row target; r19 ADVICE). Size the fan-out
-      // like the corpus append instead of writing one near-empty file
-      // per shuffle partition per trigger.
-      val bandParts = StoreGuard.appendParts(spark, nSurvivors * Dedup.DefaultBands)
-      val newBands = stamp(Dedup.bandedSignatures(survivors, idCol, textCol))
-      bandTable match {
-        case Some(BandTable(name, n)) =>
-          // append with the SAME bucket spec: each batch adds one file
-          // set per bucket; the bucketed scan unions a bucket's files,
-          // so the exchange-free join property survives every append.
-          // Repartition BY THE BUCKET COLUMNS (not round-robin): each
-          // bucket's rows then concentrate in one task, so the append
-          // emits at most one file per bucket actually present — a
-          // round-robin spread would emit up to bandParts × n files
-          // per batch (r19 ADVICE).
-          newBands.repartition(bandParts, col("band_idx"), col("band_hash"))
-            .write.mode("append")
-            .bucketBy(n, "band_idx", "band_hash")
-            .saveAsTable(name)
-        case None =>
-          newBands.repartition(bandParts)
-            .write.mode("append").parquet(bandsDir)
-      }
-    }
-    if (!doneCorpus && nSurvivors > 0)
-      clusterById(stamp(survivors), idCol, StoreGuard.appendParts(spark, nSurvivors))
-        .write.mode("append").parquet(corpusDir)
-    // loop-health ride-along: rows = survivors appended (the count is
-    // already materialized above, so this costs nothing either way)
-    RuntimeEventBus.ingested(corpusDir, batchId, nSurvivors)
-    nSurvivors > 0
-    } finally survivors.unpersist()
+    val survivors = Dedup.dropNearDuplicates(
+      survivors0, idCol, textCol, minJaccard = minJaccard, maxBucketSize = maxBucketSize)
+    // both stores take the SAME survivor rows (StoreLoop.appendPinned);
+    // zero survivors append nothing (a replay of an all-dup batch
+    // recomputes to the same no-op). Band rows ≈ survivors × bands
+    // (bandedSignatures runs with its defaults, so DefaultBands is the
+    // actual multiplier); the corpus append is id-range clustered.
+    StoreLoop.appendPinned(survivors, batchId, Seq(
+      StoreLoop.Target(bandsDir, doneBands,
+        (s, parts) => Dedup.bandedSignatures(s, idCol, textCol).repartition(parts),
+        rowsPer = Dedup.DefaultBands),
+      StoreLoop.Target(corpusDir, doneCorpus, (s, parts) => clusterById(s, idCol, parts)))) > 0
     } finally if (pruned) spark.conf.set(inThresholdKey, prevInThreshold)
     } finally cands.unpersist()
   }
@@ -318,7 +233,6 @@ object IncrementalDedup {
       minJaccard: Double = 0.4,
       maxBucketSize: Option[Int] = None,
       checkpointLocation: Option[String] = None,
-      bandTable: Option[BandTable] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
   ): StreamingQuery = {
@@ -333,20 +247,15 @@ object IncrementalDedup {
     // The corpus repacks RANGE-clustered on the id so the candidate-id
     // min/max file skipping survives compaction; the band store repacks
     // sorted on the band key. Content-identical, so a replay around a
-    // compaction is still a no-op. Plain-parquet stores only — a
-    // bucketed catalog table's layout is owned by the catalog. Both
-    // keep the spec-pinned `(bid + 1) % n` cadence (offset 1).
-    val corpus = StoreLoop.Compacted(corpusDir, rangeCols = Seq(idCol), offset = 1)
-    val compacted =
-      if (bandTable.isEmpty)
-        Seq(StoreLoop.Compacted(bandsDir, sortCols = Seq("band_idx", "band_hash"), offset = 1),
-          corpus)
-      else Seq(corpus)
+    // compaction is still a no-op. Both keep the spec-pinned
+    // `(bid + 1) % n` cadence (offset 1).
+    val compacted = Seq(
+      StoreLoop.Compacted(bandsDir, sortCols = Seq("band_idx", "band_hash"), offset = 1),
+      StoreLoop.Compacted(corpusDir, rangeCols = Seq(idCol), offset = 1))
     StoreLoop.attach(arriving, compacted, checkpointLocation, compactEvery,
       asyncCompact) { (batch, bid, probe) =>
       ingestBatch(spark, batch, corpusDir, bandsDir, idCol, textCol,
-        minJaccard, maxBucketSize, batchId = Some(bid), bandTable = bandTable,
-        probeReplay = probe)
+        minJaccard, maxBucketSize, batchId = Some(bid), probeReplay = probe)
     }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.History
 import graft.sources.Lake
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -35,7 +34,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   3. drop the batch's LEADING rows whose attributes null-safely
   *      equal the open version (the cross-batch collapse — without it
   *      every batch boundary would fabricate a version);
-  *   4. append the surviving change rows, stamped with the batch id.
+  *   4. append the surviving change rows, stamped with the batch id, to
+  *      the head and then the version log ([[StoreLoop.appendPinned]]).
   *
   * Exactly-once: foreachBatch replays a batch after failure; appends
   * are job-atomic (files commit at job end), so replay idempotence is
@@ -103,10 +103,11 @@ object IncrementalScd2 {
       batchId: Option[Long],
       probeReplay: Boolean = true
   ): Boolean = {
-    // a crash inside a version-log compaction swap can leave the live
-    // dir set aside (cheap when healthy — see Lake.recoverCompact; the
-    // open-version HEAD has its own recovery below)
-    graft.sources.Lake.recoverCompact(storeDir)
+    // a crash inside a version-log compaction swap or a head fold swap
+    // can leave either live dir set aside (cheap when healthy — see
+    // Lake.recoverCompact)
+    Lake.recoverCompact(storeDir)
+    Lake.recoverCompact(openDir(storeDir))
     // attach-without-seed bootstrap (the BM25/sketches/ANN StoreGuard
     // contract): a missing store is an EMPTY store, so the first
     // micro-batch creates it instead of dying inside foreachBatch.
@@ -126,11 +127,11 @@ object IncrementalScd2 {
     // batch's own stamp makes a replay recompute against exactly the
     // pre-batch state (crash-leftover rows from a half-committed run
     // carry this batch's stamp and drop out here). Recovery paths: a
-    // head lost in foldOpen's rename window is REBUILT from the version
-    // log here, BEFORE this batch's append (appending first would make
-    // the end-of-batch fold see only this batch's keys and drop every
-    // other key's open version); no store at all reads as empty — the
-    // attach-without-seed bootstrap.
+    // head with no data is REBUILT from the version log here, BEFORE
+    // this batch's append (appending first would make the end-of-batch
+    // fold see only this batch's keys and drop every other key's open
+    // version); no store at all reads as empty — the attach-without-seed
+    // bootstrap.
     val openStore = StoreGuard.readStore(spark, openDir(storeDir)).getOrElse {
       storeOpt match {
         case Some(log) =>
@@ -168,56 +169,29 @@ object IncrementalScd2 {
       .filter(!(attrs <=> col("__prev")))
       .select(cols: _*)
 
-    // Materialize the change rows ONCE before either append (r20): the
-    // change plan READS the open store, and the head append MODIFIES
-    // it. The pin is detached from the store ([[ColumnBridge.detached]]):
-    // a persist over the plain plan does not survive the head append,
-    // whose `CacheManager.recacheByPath` rebuilds every cached plan over
-    // the open dir, so the version-log append would re-execute the whole
-    // window+join chain (2× the per-trigger compute) against the head
-    // just written — and without a batch id to exclude, every change
-    // then matches its own head row and the log loses it (the dedup
-    // loop's hazard too). The count doubles as the append fan-out size
-    // and the loop-health rows figure, and it sees the PRE-append state
-    // by construction.
-    // The pin is released in `finally`: a failed append must not leave
-    // the batch cached for the life of the session.
-    val stamped = ColumnBridge.detached(
-      changes.withColumn(BatchCol, lit(batchId.getOrElse(-1L)))).persist()
-    val nChanges = try {
-      val n = stamped.count()
-      // ordering is load-bearing: head append first, version-log append
-      // second (the COMMIT point the replay check reads), head fold LAST.
-      // A crash between the appends leaves stamped head rows that the
-      // next run (a replay of this batch) excludes and re-appends —
-      // duplicates carry identical payloads, so the fold's latest-per-key
-      // collapse is unaffected. The fold never destroys pre-batch state
-      // until the batch is committed in the version log.
-      // Zero-change batches skip the appends AND the fold outright (r20,
-      // the dedup loop's zero-survivor discipline): an empty append still
-      // grows both stores' file counts, and a replay of an all-unchanged
-      // batch recomputes to the same no-op. The success EVENT publishes
-      // only AFTER both appends commit: a failed append must not leave a
-      // success=true batch.ingested for a batch that never landed
-      // (r17 ADVICE).
-      if (n > 0) {
-        val out = stamped.coalesce(StoreGuard.appendParts(spark, n))
-        out.write.mode("append").parquet(openDir(storeDir))
-        out.write.mode("append").parquet(storeDir)
-      }
-      n
-    } finally stamped.unpersist()
-    RuntimeEventBus.ingested(storeDir, batchId, nChanges)
+    // Both stores take the SAME change rows (StoreLoop.appendPinned pins
+    // them detached from the stores: the change plan READS the head and
+    // the head append MODIFIES it). Ordering is load-bearing: head append
+    // first, version-log append second (the COMMIT point the replay check
+    // reads), head fold LAST. A crash between the appends leaves stamped
+    // head rows that the next run (a replay of this batch) excludes and
+    // re-appends — duplicates carry identical payloads, so the fold's
+    // latest-per-key collapse is unaffected. The fold never destroys
+    // pre-batch state until the batch is committed in the version log.
+    // A zero-change batch appends nothing and skips the fold.
+    val nChanges = StoreLoop.appendPinned(changes, batchId, Seq(
+      StoreLoop.Target(openDir(storeDir), skip = false, _.coalesce(_)),
+      StoreLoop.Target(storeDir, skip = false, _.coalesce(_))))
     if (nChanges > 0)
       foldOpen(spark, storeDir, keyCols, tsCol, attrCols, tieBreak)
     nChanges > 0
   }
 
   /** Fold the head store back to one row per key (latest by ts, tie) —
-    * the log-compaction step. O(#keys) read + write, swapped in with
-    * the [[graft.sources.Lake.compact]] two-rename idiom (local-FS
-    * rename here; an object-store deployment swaps via its atomic
-    * rename/commit primitive).
+    * the log-compaction step. O(#keys) read + write to
+    * `<head>.__compact_tmp`, installed by [[Lake.swapIn]], the swap of
+    * [[Lake.compact]]; a crash inside the swap is healed by the
+    * [[Lake.recoverCompact]] at the top of the next [[ingestBatch]].
     */
   private def foldOpen(
       spark: SparkSession,
@@ -228,17 +202,6 @@ object IncrementalScd2 {
       tieBreak: Seq[String]
   ): Unit = {
     val path = openDir(storeDir)
-    val tmp = s"$path.__fold_tmp"
-    val old = s"$path.__fold_old"
-    // crash hygiene, in dependence order: stale swap dirs from a fold
-    // that died mid-sequence would make the renames below fail forever
-    // — clear them first. Deleting a set-aside __fold_old is safe
-    // because the version log is a strict superset of any head; and if
-    // the crash landed between the two renames (head dir GONE), rebuild
-    // the head from the version log — latest-per-key over the full log
-    // IS the head, so the docstring's crash-safety claim actually holds.
-    rmDir(new java.io.File(tmp))
-    rmDir(new java.io.File(old))
     val df = StoreGuard
       .readStore(spark, path)
       .getOrElse(Lake.read(spark, storeDir))
@@ -251,19 +214,8 @@ object IncrementalScd2 {
         .as("__p"))
       .select(keyCols.map(col) ++
         payloadCols.map(c => col(s"__p.$c").as(c)): _*)
-    folded.write.mode("overwrite").parquet(tmp)
-    val p = new java.io.File(path)
-    val t = new java.io.File(tmp)
-    val o = new java.io.File(old)
-    if (p.exists()) // absent after a mid-swap crash: nothing to set aside
-      require(p.renameTo(o), s"foldOpen: could not set aside $path")
-    require(t.renameTo(p), s"foldOpen: could not swap in $tmp")
-    rmDir(o)
-  }
-
-  private def rmDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmDir)
-    f.delete()
+    folded.write.mode("overwrite").parquet(s"$path.__compact_tmp")
+    Lake.swapIn(path)
   }
 
   /** The full SCD2 view over the store: validity intervals, versions

@@ -8,8 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Replay-idempotence guard shared by the incremental stores: the
   * nine store loops and the output sinks of DriftMonitor /
-  * QualityMonitor / StreamingCuration (through [[StoreLoop]], plus the
-  * own ingest bodies of IncrementalScd2 / IncrementalDedup).
+  * QualityMonitor / StreamingCuration, all through [[StoreLoop]].
   *
   * Deliberately filesystem-AGNOSTIC: a `java.io.File(dir).exists()`
   * probe is local-only — on HDFS/S3 it always answers false, so a
@@ -31,9 +30,9 @@ private[streaming] object StoreGuard {
   /** Size an append's file fan-out from an already-known row count:
     * one file per ~50k rows, capped at the shuffle-partition count —
     * a micro-batch append lands in exactly one file while backfill
-    * batches still fan out (the r19 dedup-loop fix). Used by the SCD2
-    * and dedup appends, which pin and count their rows anyway because
-    * two appends consume one materialization; the stamped append of
+    * batches still fan out (the r19 dedup-loop fix). Used by
+    * [[StoreLoop.appendPinned]], which pins and counts its rows anyway
+    * because two stores take one materialization; the stamped append of
     * [[StoreLoop.appendStamped]] is laid out by [[sized]] instead.
     * Without a sized fan-out, every store whose append inherits
     * input or shuffle partitioning grows one NEAR-EMPTY file per

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
@@ -13,10 +14,10 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
   * selection, SCD2, dedup) and every stamped output sink (the
   * DriftMonitor and QualityMonitor logs, the StreamingCuration
   * decontamination, NB and perplexity gates). [[attach]] is the only
-  * `foreachBatch` of these, and [[appendStamped]] the only stamped
-  * append outside the SCD2 and dedup bodies, whose two appends share
-  * one materialization (StoreLoopGuardSpec sweeps the source for
-  * any other).
+  * `foreachBatch` of these; [[appendStamped]] is the stamped append of
+  * a single store, and [[appendPinned]] that of the SCD2 and dedup
+  * loops, whose two stores take one materialization (StoreLoopGuardSpec
+  * sweeps the source for any other append).
   *
   * Protocol: the idempotent sink keyed by batch id of Structured
   * Streaming, with recovery by deterministic recomputation as in
@@ -118,6 +119,56 @@ private[streaming] object StoreLoop {
       RuntimeEventBus.ingested(storeDir, batchId, n)
       n > 0
     }
+  }
+
+  /** One store of an [[appendPinned]]: its dir, `skip` when the caller's
+    * replay probe already found the batch there, and `layout`, which
+    * lays the pinned rows out into the given number of files. `rowsPer`
+    * is how many rows the layout writes per pinned row (band rows per
+    * document); the file count is sized for count × rowsPer rows.
+    */
+  final case class Target(
+      dir: String,
+      skip: Boolean,
+      layout: (DataFrame, Int) => DataFrame,
+      rowsPer: Long = 1L)
+
+  /** The stamped append of the loops whose stores take one row set: the
+    * SCD2 head then version log, the dedup bands then corpus. Returns
+    * the row count.
+    *
+    *   - pin `rows` once, detached from every store path
+    *     ([[ColumnBridge.detached]]), and count them once. An append
+    *     re-plans every cached plan over its dir
+    *     (`CacheManager.recacheByPath`), so a pin over the plain plan
+    *     would make a later target recompute the rows against the store
+    *     an earlier target just wrote — and without a batch id to
+    *     exclude, the rows then match themselves and are lost;
+    *   - when there are rows, append to each target not skipped, in the
+    *     given order, into [[StoreGuard.appendParts]] files, stamped
+    *     with `batchId` (-1 without one: a store never mixes stamped and
+    *     unstamped files) after the layout. A zero-row batch writes no
+    *     file;
+    *   - release the pin in `finally`: a failed append must not leave
+    *     the batch cached for the life of the session;
+    *   - then publish `batch.ingested` for the last target, the commit
+    *     point the caller's replay probe reads: a failed append
+    *     publishes nothing.
+    */
+  def appendPinned(rows: DataFrame, batchId: Option[Long], targets: Seq[Target]): Long = {
+    val spark = rows.sparkSession
+    val pinned = ColumnBridge.detached(rows).persist()
+    val n = try {
+      val n = pinned.count()
+      if (n > 0) targets.filterNot(_.skip).foreach { t =>
+        t.layout(pinned, StoreGuard.appendParts(spark, n * t.rowsPer))
+          .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
+          .write.mode("append").parquet(t.dir)
+      }
+      n
+    } finally pinned.unpersist()
+    RuntimeEventBus.ingested(targets.last.dir, batchId, n)
+    n
   }
 
   /** Delete the newest zero-row parquet file of `dir`: the schema-only

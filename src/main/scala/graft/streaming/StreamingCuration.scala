@@ -25,17 +25,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale: the per-batch plans touch |batch| rows plus the matched band
   * buckets / vocabulary terms — nothing scales with the corpus that
-  * already landed. Eval-set verify text is fetched through a bounded
-  * candidate-id `isin` pushdown (the IncrementalDedup corpus-fetch
-  * trick; eval sets are small, so the cap is a formality).
+  * already landed. Eval-set verify text is fetched by a left-semi join
+  * on the candidates' eval ids, inside the append's plan (eval sets are
+  * small, so no driver-side id pushdown is needed).
   */
 object StreamingCuration {
 
   // ---- fuzzy decontamination ---------------------------------------
 
   /** Persist the eval set once: its UNCAPPED band table (`$dir/bands`)
-    * and its verify text (`$dir/text`, id-clustered so the per-batch
-    * candidate-id fetch prunes files via parquet min/max stats).
+    * and its verify text (`$dir/text`, id-clustered).
     */
   def seedEvalSet(
       evalSet: DataFrame,
@@ -65,22 +64,15 @@ object StreamingCuration {
       idCol: String = "doc_id",
       textCol: String = "text",
       minJaccard: Double = 0.5,
-      maxBucketSize: Option[Int] = Some(1000),
-      idPushdownCap: Int = 100000
+      maxBucketSize: Option[Int] = Some(1000)
   ): DataFrame = {
     val evalBands = Lake.read(spark, s"$evalDir/bands")
     val cands = Dedup
       .candidatesAgainstBanded(batch, evalBands, idCol, textCol,
         maxBucketSize = maxBucketSize)
       .select(col("new_id").as("doc1"), col("corpus_id").as("doc2"))
-    val evalText = Lake.read(spark, s"$evalDir/text")
-    val candEvalIds = cands.select(col("doc2")).distinct()
-      .limit(idPushdownCap + 1).collect().map(_.getLong(0))
-    val evalFetched =
-      if (candEvalIds.length <= idPushdownCap && candEvalIds.nonEmpty)
-        evalText.filter(col(idCol).isin(candEvalIds.toIndexedSeq: _*))
-      else if (candEvalIds.isEmpty) evalText.limit(0)
-      else evalText // over the cap: full (still eval-sized) scan
+    val evalFetched = Lake.read(spark, s"$evalDir/text")
+      .join(cands.select(col("doc2").as(idCol)), Seq(idCol), "left_semi")
     val both = batch.select(col(idCol), col(textCol))
       .union(evalFetched.select(col(idCol), col(textCol)))
     val flagged = Dedup

@@ -2,6 +2,9 @@ package graft
 
 import graft.operators.Dedup
 import graft.streaming.IncrementalDedup
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 
 /** END-TO-END streaming incremental dedup: the full band → stream-static
@@ -120,6 +123,19 @@ class IncrementalIngestionSpec extends SparkSpec {
       spark.read.parquet(dir).select($"doc_id").distinct().as[Long].collect().toSet
     assert(ids(bandsDir) == Set(1L, 10L, 11L), s"bands: ${ids(bandsDir)}")
     assert(ids(corpusDir) == Set(1L, 10L, 11L), s"corpus: ${ids(corpusDir)}")
+    // every file of both stores carries the stamp (-1, as the seed's): a
+    // read takes its schema from one file, so an unstamped file could
+    // drop the column and the replay probe would then find no batch
+    val conf = spark.sessionState.newHadoopConf()
+    for (dir <- Seq(corpusDir, bandsDir);
+         f <- new java.io.File(dir).listFiles() if f.getName.endsWith(".parquet")) {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath), conf))
+      try assert(r.getFooter.getFileMetaData.getSchema.containsField("ingest_batch"),
+        s"${f.getName} of $dir has no ingest_batch")
+      finally r.close()
+    }
+    assert(spark.read.parquet(corpusDir).filter($"doc_id" > 1L)
+      .select($"ingest_batch").distinct().as[Long].collect().toSeq == Seq(-1L))
   }
 
   test("replay repairs a partial failure: bands landed, corpus append lost") {
@@ -242,56 +258,5 @@ class IncrementalIngestionSpec extends SparkSpec {
         assert(hi1 < lo2, s"file id ranges overlap after compaction: ${perFile.mkString(",")}")
       case _ => ()
     }
-  }
-
-  test("bucketed band table: same results as plain parquet, zero corpus-side exchange") {
-    import graft.streaming.IncrementalDedup.BandTable
-    val root = java.nio.file.Files.createTempDirectory("graft_ingest_bucketed").toString
-    val seed = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog near the quiet river bank today"),
-      (101L, "completely different content about distributed query engines and storage layers"))
-      .toDF("doc_id", "text")
-    val batch1 = Seq(
-      (200L, "the quick brown fox jumps over the lazy dog near the quiet river bank now"),
-      (201L, "entirely new material about adaptive query execution in modern spark engines"))
-      .toDF("doc_id", "text")
-    val batch2 = Seq(
-      (400L, "entirely new material about adaptive query execution in modern spark engines overall"),
-      (402L, "unrelated fresh text about columnar shuffle formats and spill behavior limits"))
-      .toDF("doc_id", "text")
-
-    // plain-path reference
-    val (pc, pb) = (s"$root/plain/corpus", s"$root/plain/bands")
-    IncrementalDedup.seed(seed, pc, pb)
-    IncrementalDedup.ingestBatch(spark, batch1, pc, pb, batchId = Some(1L))
-    IncrementalDedup.ingestBatch(spark, batch2, pc, pb, batchId = Some(2L))
-    val plain = spark.read.parquet(pc).select($"doc_id").as[Long].collect().sorted
-
-    // bucketed band store, same ingestion
-    val bt = BandTable("graft_test_bands", 8)
-    val (bc, bb) = (s"$root/bucketed/corpus", s"$root/bucketed/bands")
-    IncrementalDedup.seed(seed, bc, bb, bandTable = Some(bt))
-    IncrementalDedup.ingestBatch(spark, batch1, bc, bb, batchId = Some(1L), bandTable = Some(bt))
-    IncrementalDedup.ingestBatch(spark, batch2, bc, bb, batchId = Some(2L), bandTable = Some(bt))
-    val bucketed = spark.read.parquet(bc).select($"doc_id").as[Long].collect().sorted
-    assert(bucketed.sameElements(plain),
-      s"bucketed store changed results: ${bucketed.mkString(",")} vs ${plain.mkString(",")}")
-    // replay idempotence holds through the catalog path too
-    IncrementalDedup.ingestBatch(spark, batch2, bc, bb, batchId = Some(2L), bandTable = Some(bt))
-    assert(spark.table(bt.name).groupBy($"doc_id").count()
-      .select($"count").as[Long].collect().forall(_ == 4))
-
-    // THE plan contract: the per-batch candidate join consumes the
-    // stored buckets in place — the only hashpartitioning exchange on
-    // the band key belongs to the (small) batch side, and the build is
-    // a shuffled-hash, never a sort of the stored table
-    val probe = Dedup.candidatesAgainstBandedColocated(
-      batch2, spark.table(bt.name), "doc_id", "text")
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("ShuffledHashJoin"), plan)
-    val bandExchanges = "Exchange hashpartitioning\\(band_idx".r.findAllIn(plan).size
-    assert(bandExchanges == 1,
-      s"expected exactly the batch-side band exchange, found $bandExchanges:\n$plan")
-    assert("Bucketed: true".r.findAllIn(plan).nonEmpty, plan)
   }
 }

@@ -165,15 +165,15 @@ class IncrementalScd2Spec extends SparkSpec {
     }
     val head = new java.io.File(dir + "_open")
 
-    // crash state 1: a fold died after writing __fold_tmp and after
-    // setting the head aside as __fold_old — head dir GONE, junk dirs
-    // present. The next batch must clear the leftovers and rebuild the
-    // head from the (intact) version log.
-    val tmpDir = new java.io.File(dir + "_open.__fold_tmp")
-    val oldDir = new java.io.File(dir + "_open.__fold_old")
+    // crash state 1: a fold died after setting the head aside as
+    // __compact_old, with a __compact_tmp that holds no data file — head
+    // dir GONE, swap dirs present. Recovery completes the swap, so the
+    // head dir holds no data, and the next batch must clear the leftovers
+    // and rebuild the head from the (intact) version log.
+    val tmpDir = new java.io.File(dir + "_open.__compact_tmp")
+    val oldDir = new java.io.File(dir + "_open.__compact_old")
     assert(head.renameTo(oldDir)) // simulate the mid-swap crash
     tmpDir.mkdirs()
-    new java.io.FileOutputStream(new java.io.File(tmpDir, "junk")).close()
 
     IncrementalScd2.ingestBatch(spark,
       Seq(("A", t(2), 3L, "y")).toDF("k", "ts", "id", "attr"),

@@ -78,12 +78,13 @@ class ModelSampleGuardSpec extends SparkSpec {
     // or a sampleCap'd model extraction — and registered here WITH its
     // bound. A new .collect() anywhere else fails this sweep: either
     // bound it (toLocalIterator / limit / cap) or consciously extend
-    // the allowlist with the reason.
+    // the allowlist with the reason. Counts are exact: a stale allowance
+    // (a file that lost a site) fails too, so it cannot silently
+    // re-admit a new collect later.
     val allowed = Map(
       // latest(n): orderBy.limit(n) — bounded by the caller's n
       "GraftContext.scala" -> 1,
-      // idPushdownCap-bounded candidate-id pulls (cap + 1 probes the overflow)
-      "streaming/StreamingCuration.scala" -> 1,
+      // idPushdownCap-bounded candidate-id pull (cap + 1 probes the overflow)
       "streaming/IncrementalDedup.scala" -> 1,
       // vocabCap-bounded model pulls: BPE merge-table extraction plus the
       // round-14 trainUnigram / unigramLogLikelihood word-count pulls —
@@ -123,7 +124,7 @@ class ModelSampleGuardSpec extends SparkSpec {
         val rel = root.relativize(p).toString
         val n = "\\.collect\\(\\)|collectAsList".r
           .findAllIn(java.nio.file.Files.readString(p)).size
-        if (n > allowed.getOrElse(rel, 0))
+        if (n != allowed.getOrElse(rel, 0))
           offenders += s"$rel has $n .collect() sites (allowlisted: ${allowed.getOrElse(rel, 0)})"
       }
     }
